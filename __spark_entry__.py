@@ -134,7 +134,7 @@ def q_sql_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                ex.extracted_text AS extracted_text,
                ex.n_images AS n_images,
                CAST(ex.error AS string) AS error
-        FROM (SELECT conv_id, turn_idx, artexin_extract(text, '', true) AS ex
+        FROM (SELECT conv_id, turn_idx, artexin_extract(text, '') AS ex
               FROM transcripts_sqlv)
         """
     )

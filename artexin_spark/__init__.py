@@ -4,9 +4,10 @@ A from-scratch reimplementation of the capabilities of
 Othernet-Project/artexin (reference at /root/reference) over Spark
 DataFrames: readability-style article extraction from HTML payloads held
 in the ``text`` column of Iceberg-shaped transcript tables, expressed as
-vectorized Arrow ``pandas_udf`` stages (never per-row Python UDFs), with
-URL normalization, MD5 content hashing, token/term indexing, skew-salted
-partitioning, per-partition lineage and checkpoint-based resume.
+vectorized Arrow stages (``mapInArrow`` / ``arrow_udf``, never per-row
+Python UDFs), with URL normalization, MD5 content hashing, token/term
+indexing, skew-salted partitioning, per-partition lineage and
+checkpoint-based resume.
 
 Layout:
     dom.py          lightweight stdlib HTML DOM with source char offsets
@@ -14,7 +15,7 @@ Layout:
     readability.py  from-scratch Arc90-style main-content scorer
     tokenizer.py    sentence/word tokenization + term & pair counts
     preprocess.py   HTML preprocessors + URL-pattern dispatch
-    udfs.py         Arrow pandas_udf wrappers around the pure functions
+    udfs.py         scalar arrow_udf wrappers around the pure functions
     pipeline.py     read -> salt -> extract -> hash -> sink with lineage
     storage.py      Iceberg-shaped parquet sink + lineage/snapshot manifests
     corpus.py       deterministic synthetic transcript corpus (seed=42)

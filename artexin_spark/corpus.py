@@ -172,11 +172,3 @@ def synth_transcripts(spark, n_convs: int = 100, seed: int = 42, **kw):
     existing Iceberg table, not this generator)."""
     return spark.createDataFrame(gen_transcripts(n_convs, seed, **kw))
 
-
-def write_corpus(path: str, n_convs: int, seed: int = 42, **kw) -> str:
-    """Materialize a corpus parquet for bench runs; returns the path.
-    Timestamps coerced to micros — Spark rejects pandas' nanos parquet."""
-    gen_transcripts(n_convs, seed, **kw).to_parquet(
-        path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-    )
-    return path

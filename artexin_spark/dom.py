@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import html as _html
 import re
+import types
 from html.parser import HTMLParser
 
 VOID_TAGS = frozenset(
@@ -25,12 +26,14 @@ VOID_TAGS = frozenset(
 
 _ESCAPE = {"&": "&amp;", "<": "&lt;", ">": "&gt;"}
 
-#: Shared attrs dict for TEXT nodes only (tag is None): text nodes are
+#: Shared attrs mapping for TEXT nodes only (tag is None): text nodes are
 #: created in bulk during parsing and none of the tree code ever reads or
 #: writes `.attrs` on a text node (every consumer checks `.tag`/`.is_text`
-#: first), so they can share one immutable-by-convention empty dict instead
-#: of allocating ~40% of all per-parse dicts. Elements always get their own.
-_NO_ATTRS: dict = {}
+#: first), so they can share one read-only empty mapping instead of
+#: allocating ~40% of all per-parse dicts. A write raises TypeError rather
+#: than leaking into every text node of the process. Elements always get
+#: their own dict.
+_NO_ATTRS = types.MappingProxyType({})
 
 
 class Node:

@@ -67,12 +67,6 @@ def shingles_from(toks, n: int = 3):
     ).otherwise(F.array(F.array_join(toks, " ")))
 
 
-def shingles_col(text_col: str, n: int = 3):
-    """Shingles straight from a text column — convenience for small
-    frames; hot paths must use shingles_from over a projected column."""
-    return shingles_from(tokens_col(text_col), n)
-
-
 def norm_md5(text_col: str):
     """Content key of the whitespace-normalized lowercased text — the
     engine's exact-dup identity (reference: md5 content addressing,

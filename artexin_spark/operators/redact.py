@@ -27,15 +27,6 @@ IP_TOKEN = "[IP]"
 PHONE_TOKEN = "[PHONE]"
 
 
-def redact_expr(text_col: str = "text"):
-    """The scrubbed text as one column expression (ordered replaces)."""
-    c = F.col(text_col)
-    c = F.regexp_replace(c, EMAIL_RE, EMAIL_TOKEN)
-    c = F.regexp_replace(c, IPV4_RE, IP_TOKEN)
-    c = F.regexp_replace(c, PHONE_RE, PHONE_TOKEN)
-    return c
-
-
 def redact_pii(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -45,7 +45,6 @@ def norm_expr(a_col):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-
 def cosine_from_parts(dot, na, nb):
     """cosine from precomputed dot and per-side norms, with the standard
     zero-vector convention (similarity 0.0). The guard matters: Spark 4
@@ -54,16 +53,6 @@ def cosine_from_parts(dot, na, nb):
     one-poison-row-never-fails-a-job rule (SURVEY.md §4)."""
     prod = na * nb
     return F.when(prod == 0.0, F.lit(0.0)).otherwise(dot / prod)
-
-def cosine_expr(a_col, b_col):
-    """Native cosine — matches DuckDB list_cosine_similarity. For joins,
-    prefer precomputing norm_expr per SIDE (O(N+Q) norms) and dividing
-    dot_expr by the product (O(N·Q) dots only); the float result is
-    identical (same folds), this inline form just re-does the norms per
-    pair."""
-    return cosine_from_parts(
-        dot_expr(a_col, b_col), norm_expr(a_col), norm_expr(b_col)
-    )
 
 
 def cosine_topk(
@@ -192,22 +181,6 @@ def _hyperplanes(planes: int, dim: int, seed: int = 42) -> np.ndarray:
             if pair + 1 < dim:
                 vals[p, pair + 1] = r * math.sin(2 * math.pi * u2)
     return vals
-
-
-def bucket_udf(planes: int, dim: int, seed: int = 42):
-    """Arrow UDF: embedding batch → LSH bucket key (sign-bit string).
-    One numpy matmul per batch."""
-    H = _hyperplanes(planes, dim, seed)
-
-    @pandas_udf(T.StringType())
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.asarray(vecs.tolist(), dtype=np.float64)
-        if mat.size == 0:
-            return pd.Series([], dtype=object)
-        signs = (mat @ H.T) > 0
-        return pd.Series(["".join("1" if s else "0" for s in row) for row in signs])
-
-    return _bucket
 
 
 def buckets_udf(tables: int, planes: int, dim: int, seed: int = 42):

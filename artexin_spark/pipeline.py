@@ -21,8 +21,9 @@ Scale design notes (the 100 TB story, graded explicitly):
 - **Column pruning**: the UDF consumes only (text, source); everything
   else passes through — Catalyst prunes unused columns at the scan when
   downstream selects allow (.explain shows ReadSchema).
-- **Python boundary**: exactly one ArrowEvalPython/MapInPandas node per
-  run; no per-row Python anywhere (north rule).
+- **Python boundary**: exactly one Arrow Python node per run — MapInArrow
+  here, ArrowEvalPython for the udfs.py surface — both over the one
+  ``extract_arrays`` loop; no per-row Python anywhere (north rule).
 - **Task failure vs poison rows**: data-level failures land in the
   ``error`` column in-band (one bad document can't fail a job,
   artexin/pack.py:205-213 semantics); infrastructure failures are Spark
@@ -36,9 +37,11 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import storage as sink_io
 from .preprocess import preps_for
@@ -121,12 +124,103 @@ def split_ingest_errors(df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     bad = df.filter(F.col(BAD_RECORD_COL).isNotNull())
     return good, bad
 
-_EXTRACT_OUT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, ts timestamp, "
-    "source string, part_key int, title string, extracted_text string, "
-    "spans array<struct<start:int,end:int>>, images array<string>, "
-    "n_images int, error string, n_chars_in int, batch_ms double"
+
+#: The extraction output, declared once, in the order ``extract_arrays``
+#: builds its struct. ``udfs.extract_udf`` returns that struct as is; the
+#: mapInArrow stage flattens it between the passthrough columns and
+#: ``n_chars_in``.
+EXTRACT_SCHEMA = T.StructType(
+    [
+        T.StructField("title", T.StringType()),
+        T.StructField("extracted_text", T.StringType()),
+        T.StructField(
+            "spans",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("start", T.IntegerType()),
+                        T.StructField("end", T.IntegerType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("images", T.ArrayType(T.StringType())),
+        T.StructField("n_images", T.IntegerType()),
+        T.StructField("error", T.StringType()),
+    ]
 )
+
+_PASSTHROUGH = ("conv_id", "turn_idx", "role", "tool", "ts", "part_key")
+_OUT_NAMES = [*_PASSTHROUGH, *EXTRACT_SCHEMA.names, "n_chars_in"]
+_EXTRACT_OUT_SCHEMA = ", ".join(
+    [
+        "conv_id string, turn_idx int, role string, tool string, ts timestamp",
+        "part_key int",
+        *(f"{f.name} {f.dataType.simpleString()}" for f in EXTRACT_SCHEMA),
+        "n_chars_in int",
+    ]
+)
+
+
+def extract_arrays(texts: pa.Array, sources: pa.Array) -> pa.StructArray:
+    """The per-document extraction loop, one Arrow batch at a time: HTML
+    payloads and their source URLs in, one ``EXTRACT_SCHEMA`` struct per
+    row out. Only these two columns become Python objects (the extractor
+    needs strings); spans and images are assembled as flat offset+child
+    arrays instead of per-row lists of dicts."""
+    titles: list[str] = []
+    out_texts: list[str] = []
+    span_starts: list[int] = []
+    span_ends: list[int] = []
+    span_offsets = [0]
+    img_values: list[str] = []
+    img_offsets = [0]
+    n_images: list[int] = []
+    errors: list[str | None] = []
+    prep_cache: dict[str, list] = {}
+    for html, src in zip(texts.to_pylist(), sources.to_pylist()):
+        src = src or ""
+        # '' dispatches too (catch-all fixheaders) — preprocess.preps_for
+        preps = prep_cache.get(src)
+        if preps is None:
+            preps = prep_cache[src] = preps_for(src)
+        res = extract_turn(
+            html,
+            base_url=src,
+            preprocessors=preps,
+            with_html=False,  # text+spans output only; skip the render
+        )
+        titles.append(res.title)
+        out_texts.append(res.text)
+        for s, e in res.spans:
+            span_starts.append(s)
+            span_ends.append(e)
+        span_offsets.append(len(span_starts))
+        img_values.extend(res.images)
+        img_offsets.append(len(img_values))
+        n_images.append(res.n_images)
+        errors.append(res.error)
+    spans = pa.ListArray.from_arrays(
+        pa.array(span_offsets, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(span_starts, pa.int32()), pa.array(span_ends, pa.int32())],
+            names=["start", "end"],
+        ),
+    )
+    images = pa.ListArray.from_arrays(
+        pa.array(img_offsets, pa.int32()), pa.array(img_values, pa.string())
+    )
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(titles, pa.string()),
+            pa.array(out_texts, pa.string()),
+            spans,
+            images,
+            pa.array(n_images, pa.int32()),
+            pa.array(errors, pa.string()),
+        ],
+        names=EXTRACT_SCHEMA.names,
+    )
 
 
 class _LineageAccumParam(AccumulatorParam):
@@ -151,130 +245,41 @@ class _LineageAccumParam(AccumulatorParam):
 
 
 def _extract_map_iter(batches, acc=None):
-    """mapInArrow body: one Arrow batch in → one extracted batch out,
-    stamped with its share of wall time. With ``acc`` set, per-bucket
-    lineage counters fold task-side into the accumulator — the sink write
-    then needs NO read-back of written files and no second input scan
-    (the r01 bench showed that read-back costing ~45% over pure compute).
-
-    Arrow-native on both sides (guide §4.1/§4.2): passthrough columns
-    (conv_id/turn_idx/role/tool/ts/source/part_key) cross back as the
-    INPUT batch's own Arrow buffers — zero pandas materialization — and
-    the nested outputs (spans, images) are assembled as flat offset+child
-    arrays instead of per-row list-of-dict objects. Only ``text`` and
-    ``source`` ever become Python objects (the per-doc extractor needs
-    strings). The previous mapInPandas body paid an Arrow→pandas→Arrow
-    round trip for every column, including a timestamp column converted
-    to datetime64 and back, and pyarrow had to infer struct arrays from
-    4096 freshly-built dicts per batch."""
+    """mapInArrow body: one Arrow batch in → one extracted batch out. With
+    ``acc`` set, per-bucket lineage counters (including each row's share
+    of the batch wall time) fold task-side into the accumulator — the sink
+    write then needs NO read-back of written files and no second input
+    scan (the r01 bench showed that read-back costing ~45% over pure
+    compute). Passthrough columns cross back as the INPUT batch's own
+    Arrow buffers; ``source`` feeds the extractor and is not emitted."""
     local: dict[int, list] = {}
     for rb in batches:
         nrows = rb.num_rows
         if nrows == 0:
             continue
         t0 = time.perf_counter()
-        names = rb.schema.names
-        col = {name: rb.column(i) for i, name in enumerate(names)}
-        texts = col["text"].to_pylist()
-        sources = col["source"].to_pylist()
-        titles: list[str] = []
-        out_texts: list[str] = []
-        span_starts: list[int] = []
-        span_ends: list[int] = []
-        span_offsets = [0]
-        img_values: list[str] = []
-        img_offsets = [0]
-        n_images: list[int] = []
-        errors: list[str | None] = []
-        n_chars_in: list[int] = []
-        prep_cache: dict[str, list] = {}
-        for html, src in zip(texts, sources):
-            src = src if isinstance(src, str) else ""
-            # '' dispatches too (catch-all fixheaders) — preprocess.preps_for
-            preps = prep_cache.get(src)
-            if preps is None:
-                preps = prep_cache[src] = preps_for(src)
-            res = extract_turn(
-                html,
-                base_url=src,
-                do_extract=True,
-                preprocessors=preps,
-                with_html=False,  # text+spans output only; skip the render
-            )
-            titles.append(res.title)
-            out_texts.append(res.text)
-            for s, e in res.spans:
-                span_starts.append(s)
-                span_ends.append(e)
-            span_offsets.append(len(span_starts))
-            img_values.extend(res.images)
-            img_offsets.append(len(img_values))
-            n_images.append(res.n_images)
-            errors.append(res.error)
-            n_chars_in.append(len(html) if html is not None else 0)
-        ms = (time.perf_counter() - t0) * 1000.0
-        ms_per_row = ms / nrows
-        spans_arr = pa.ListArray.from_arrays(
-            pa.array(span_offsets, pa.int32()),
-            pa.StructArray.from_arrays(
-                [pa.array(span_starts, pa.int32()), pa.array(span_ends, pa.int32())],
-                names=["start", "end"],
-            ),
-        )
-        images_arr = pa.ListArray.from_arrays(
-            pa.array(img_offsets, pa.int32()), pa.array(img_values, pa.string())
-        )
-        out = pa.RecordBatch.from_arrays(
-            [
-                col["conv_id"],
-                col["turn_idx"],
-                col["role"],
-                col["tool"],
-                col["ts"],
-                col["source"],
-                col["part_key"],
-                pa.array(titles, pa.string()),
-                pa.array(out_texts, pa.string()),
-                spans_arr,
-                images_arr,
-                pa.array(n_images, pa.int32()),
-                pa.array(errors, pa.string()),
-                pa.array(n_chars_in, pa.int32()),
-                pa.array([ms_per_row] * nrows, pa.float64()),
-            ],
-            names=[
-                "conv_id",
-                "turn_idx",
-                "role",
-                "tool",
-                "ts",
-                "source",
-                "part_key",
-                "title",
-                "extracted_text",
-                "spans",
-                "images",
-                "n_images",
-                "error",
-                "n_chars_in",
-                "batch_ms",
-            ],
-        )
+        texts = rb.column("text")
+        ex = extract_arrays(texts, rb.column("source"))
+        n_chars_in = pc.fill_null(pc.utf8_length(texts), 0).cast(pa.int32())
+        ms_per_row = (time.perf_counter() - t0) * 1000.0 / nrows
         if acc is not None:
-            keys = col["part_key"].to_pylist()
-            for i, k in enumerate(keys):
-                err_i = 1 if errors[i] is not None else 0
-                cout_i = len(out_texts[i])
-                cur = local.get(k)
-                if cur is None:
-                    local[k] = [1, err_i, n_chars_in[i], cout_i, ms_per_row]
-                else:
-                    cur[0] += 1
-                    cur[1] += err_i
-                    cur[2] += n_chars_in[i]
-                    cur[3] += cout_i
-                    cur[4] += ms_per_row
-        yield out
+            rows = zip(
+                rb.column("part_key").to_pylist(),
+                ex.field("error").is_valid().to_pylist(),
+                n_chars_in.to_pylist(),
+                pc.utf8_length(ex.field("extracted_text")).to_pylist(),
+            )
+            for k, err, cin, cout in rows:
+                cur = local.setdefault(k, [0, 0, 0, 0, 0.0])
+                cur[0] += 1
+                cur[1] += err
+                cur[2] += cin
+                cur[3] += cout
+                cur[4] += ms_per_row
+        yield pa.RecordBatch.from_arrays(
+            [*(rb.column(c) for c in _PASSTHROUGH), *ex.flatten(), n_chars_in],
+            names=_OUT_NAMES,
+        )
     if acc is not None and local:
         acc.add(local)
 
@@ -301,8 +306,10 @@ def prepare_input(df: DataFrame, n_buckets: int, source_col: str | None) -> Data
         )
     # cast to the canonical DDL types (free in codegen): the Arrow-native
     # extraction stage passes these columns through VERBATIM, so its output
-    # batches must already carry the declared types — mapInPandas used to
-    # coerce a long turn_idx / ntz timestamp silently, mapInArrow does not
+    # batches must already carry the declared types. Narrowing a bigint
+    # turn_idx relies on ANSI mode (Spark 4's default, left on by
+    # session.get_spark) to fail the job with CAST_OVERFLOW on a value past
+    # int32 — with ANSI off the cast would wrap silently.
     types = dict(
         conv_id="string",
         turn_idx="int",
@@ -333,11 +340,11 @@ def _extract_prepared(
     The bucket exchange sits AFTER extraction (guide §2.3, shuffle fewer
     bytes): the extracted row is ~25-30% narrower than the raw HTML row
     (extracted_text ≈ 2/3 of the payload; boilerplate and markup are
-    gone), and the ``source`` column — dropped by the sink — gets pruned
-    before the exchange instead of riding it. Extraction parallelism is
-    bounded by the input splits (parquet splits at maxPartitionBytes, so
-    task size stays bounded at any layout); the write side stays
-    bucket-bounded by the explicit repartition. Lineage caveat: the
+    gone), and ``source`` never leaves the extraction stage, so it does
+    not ride the exchange. Extraction parallelism is bounded by the input
+    splits (parquet splits at maxPartitionBytes, so task size stays
+    bounded at any layout); the write side stays bucket-bounded by the
+    explicit repartition. Lineage caveat: the
     extraction stage is now a shuffle-map stage, so a lost-shuffle
     recompute re-adds its counters — the same documented window as
     speculative attempts (_LineageAccumParam), counters are ops evidence,
@@ -429,7 +436,7 @@ def run_extract(
         if done is not None:
             # broadcast anti-join BEFORE the Python stage (done-list is one
             # int per bucket): completed buckets never reach extraction —
-            # an anti-join placed after mapInPandas cannot be pushed below
+            # an anti-join placed after mapInArrow cannot be pushed below
             # the opaque Python node, so it would re-extract and discard
             prepared = prepared.join(F.broadcast(done), "part_key", "left_anti")
             # cheap pre-write guard (narrow scan, limit-1 early-out): a
@@ -478,9 +485,9 @@ def run_extract(
 
     snap_id = None
     if snapshot:
-        sink_io.write_run_data(out.drop("source"), sink, run_id)
+        sink_io.write_run_data(out, sink, run_id)
     else:
-        sink_io.write_data(out.drop("source"), sink)
+        sink_io.write_data(out, sink)
 
     counters = acc.value  # part_key -> [rows, errors, chars_in, chars_out, ms]
     if not counters:

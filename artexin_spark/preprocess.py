@@ -6,7 +6,7 @@ artexin/preprocessor_mappings.py (MAPPINGS:29-33, get_preps:36-54) over our
 own DOM. Our preprocessors mutate a parsed ``dom.Document`` in place
 (string→string wrappers provided for doctest-parity tests) so the whole
 preprocess→extract chain runs on ONE parse per document inside the Arrow
-pandas_udf batch — the reference reparses between every stage, we don't.
+batch loop — the reference reparses between every stage, we don't.
 
 Dispatch semantics preserved exactly: every matching pattern's
 preprocessor tuple concatenates in declaration order, the catch-all

@@ -24,9 +24,10 @@ Beyond the reference, every kept text run also yields a character span
 ``(start, end)`` into the ORIGINAL payload (north-rule output column
 ``spans``), which our own DOM tracks natively.
 
-All functions are pure Python; the Arrow pandas_udf wrappers live in
-udfs.py. One poison row must never raise — extract_turn() traps all
-exceptions into the in-band ``error`` field (pack.py:205-213 semantics).
+All functions are pure Python; the Arrow batch loop over them is
+``pipeline.extract_arrays``, wrapped for SQL/DataFrame use in udfs.py.
+One poison row must never raise — extract_turn() traps all exceptions
+into the in-band ``error`` field (pack.py:205-213 semantics).
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@
 One place owns the session config so tests, bench.py, the driver entry and
 spark-submit jobs all get identical physical behavior:
 
-- Arrow pandas_udf path on, with a bounded records-per-batch because HTML
+- Arrow Python path on, with a bounded records-per-batch because HTML
   payload rows are fat (multi-KB..MB) — an unbounded 10k-row default batch
   would balloon executor-python memory (SURVEY.md §4.2).
 - AQE on (coalescing + skew-join splitting as backstop behind our explicit

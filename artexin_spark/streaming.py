@@ -68,8 +68,7 @@ def incremental_extract(
         repartition=False,
     )
     query = (
-        extracted.drop("source")
-        .writeStream.format("parquet")
+        extracted.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -267,7 +266,7 @@ def incremental_extract_snapshot(
 
     def write_batch(batch_df, batch_id: int) -> None:
         rid = f"stream-{batch_id}"
-        _sink_io.write_run_data(batch_df.drop("source"), sink, rid)
+        _sink_io.write_run_data(batch_df, sink, rid)
         _sink_io.commit_snapshot(spark, sink, rid, operation="append")
 
     query = (

@@ -14,7 +14,7 @@ pc['the events']==3, wc==256, the >5-frequency term list) are pinned in
 tests/test_tokenize.py as a cross-check that the tokenizers agree on the
 reference's own fixture text.
 
-Everything here is pure Python run *inside* Arrow pandas_udf batches; the
+Everything here is pure Python run *inside* Arrow UDF batches; the
 Spark-native formulation (split/explode/groupBy) lives in
 __spark_entry__.py queries and must stay semantically identical.
 """

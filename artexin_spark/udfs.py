@@ -1,14 +1,16 @@
-"""Arrow pandas_udf wrappers around the pure extraction core.
+"""Scalar Arrow UDFs (``arrow_udf``) around the pure extraction core.
 
 Design center (BASELINE.json north rule): the executor crosses the
-JVM↔Python boundary ONCE per Arrow batch, never per row. Each UDF here is
-a scalar ``pandas_udf`` over pd.Series batches; per-document Python runs
+JVM↔Python boundary ONCE per Arrow batch, never per row. Each UDF here
+takes and returns ``pyarrow.Array`` batches; per-document Python runs
 *inside* the batch loop, which is exactly the vectorized shape — there are
 NO row-at-a-time ``F.udf`` calls anywhere in this engine.
 
 The whole preprocess→extract→strip_links→images chain is fused into ONE
 UDF (one parse per document, one boundary crossing), unlike the reference
-which reparses the DOM between every stage (artexin/pack.py:217-230).
+which reparses the DOM between every stage (artexin/pack.py:217-230). Its
+batch loop is ``pipeline.extract_arrays`` — the same one the pipeline's
+mapInArrow stage runs.
 
 The batch-amortization argument is the published one ("Accelerating
 Python UDFs in Vectorized Query Execution", CIDR 2022 — PAPERS.md):
@@ -21,38 +23,17 @@ effect (batch-size sweep, 1024→4096 retune).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from .preprocess import preps_for
-from .readability import extract_turn, get_title
 from . import dom
+from .pipeline import EXTRACT_SCHEMA, extract_arrays
+from .readability import get_title
 from .tokenizer import count_text, split_sentences, split_words
 
-# Output schema of the fused extraction UDF (SURVEY.md §1.2 column map).
-EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("title", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType()),
-                        T.StructField("end", T.IntegerType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("images", T.ArrayType(T.StringType())),
-        T.StructField("n_images", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
+_COUNT_MAP = pa.map_(pa.string(), pa.int32())
 COUNTS_SCHEMA = T.StructType(
     [
         T.StructField("term_counts", T.MapType(T.StringType(), T.IntegerType())),
@@ -62,100 +43,78 @@ COUNTS_SCHEMA = T.StructType(
 )
 
 
-def _run_extract_batch(
-    texts: pd.Series, sources: pd.Series, do_extract: pd.Series
-) -> pd.DataFrame:
-    # columnar accumulation: building row tuples then transposing through
-    # pd.DataFrame(rows) costs ~10% of batch wall at this cell size
-    titles, out_texts, spans, images, n_images, errors = [], [], [], [], [], []
-    prep_cache: dict[str, list] = {}
-    for html, src, do_ext in zip(texts, sources, do_extract):
-        src = src if isinstance(src, str) else ""
-        # '' dispatches too (catch-all fixheaders) — preprocess.preps_for
-        preps = prep_cache.get(src)
-        if preps is None:
-            preps = prep_cache[src] = preps_for(src)
-        res = extract_turn(
-            html,
-            base_url=src,
-            do_extract=bool(do_ext) if do_ext is not None else True,
-            preprocessors=preps,
-            with_html=False,  # text+spans output only; skip the render
-        )
-        titles.append(res.title)
-        out_texts.append(res.text)
-        spans.append([{"start": s, "end": e} for s, e in res.spans])
-        images.append(res.images)
-        n_images.append(res.n_images)
-        errors.append(res.error)
-    return pd.DataFrame(
-        {
-            "title": titles,
-            "extracted_text": out_texts,
-            "spans": spans,
-            "images": images,
-            "n_images": n_images,
-            "error": errors,
-        }
-    )
-
-
-@pandas_udf(EXTRACT_SCHEMA)
-def extract_udf(texts: pd.Series, sources: pd.Series, do_extract: pd.Series) -> pd.DataFrame:
+@arrow_udf(EXTRACT_SCHEMA)
+def extract_udf(texts: pa.Array, sources: pa.Array) -> pa.Array:
     """The flagship operator (artexin/pack.py:157-251 collect() semantics,
     fused): preprocess dispatch by source URL → readability extraction →
     link strip → image resolution → text+spans, errors in-band."""
-    return _run_extract_batch(texts, sources, do_extract)
+    return extract_arrays(texts, sources)
 
 
-@pandas_udf(T.StringType())
-def title_udf(texts: pd.Series) -> pd.Series:
+@arrow_udf(T.StringType())
+def title_udf(texts: pa.Array) -> pa.Array:
     """get_title only (artexin/extract.py:35-87) — cheap path when callers
     need titles without full extraction."""
-    return texts.map(lambda h: get_title(dom.parse(h or "")))
+    return pa.array(
+        [get_title(dom.parse(h or "")) for h in texts.to_pylist()], pa.string()
+    )
 
 
-@pandas_udf(COUNTS_SCHEMA)
-def counts_udf(texts: pd.Series) -> pd.DataFrame:
+@arrow_udf(COUNTS_SCHEMA)
+def counts_udf(texts: pa.Array) -> pa.Array:
     """Per-document term/pair/word counts (artexin/index.py:124-204).
 
     Note: for corpus-level term statistics prefer the native formulation
     (split → explode → groupBy) in __spark_entry__.py — this UDF is for
     the per-turn MapType output column the reference's index shape needs.
     """
-    rows = []
-    for text in texts:
-        tc, pc, wc = count_text(text or "")
-        rows.append((tc, pc, wc))
-    return pd.DataFrame(rows, columns=["term_counts", "pair_counts", "word_count"])
+    counts = [count_text(t or "") for t in texts.to_pylist()]
+    return pa.StructArray.from_arrays(
+        [
+            pa.array([c[0] for c in counts], _COUNT_MAP),
+            pa.array([c[1] for c in counts], _COUNT_MAP),
+            pa.array([c[2] for c in counts], pa.int32()),
+        ],
+        names=COUNTS_SCHEMA.names,
+    )
 
 
-@pandas_udf(T.StringType())
-def pdf_payload_udf(texts: pd.Series, titles: pd.Series) -> pd.Series:
+@arrow_udf(T.StringType())
+def pdf_payload_udf(texts: pa.Array, titles: pa.Array) -> pa.Array:
     """Deterministic PDF payload builder (test/bench harness for the
     pdfx layout-parse path) — Arrow-batched like everything else."""
     from .pdfx import build_simple_pdf
 
-    return pd.Series(
-        [build_simple_pdf(t or "", title=ti or "") for t, ti in zip(texts, titles)]
+    return pa.array(
+        [
+            build_simple_pdf(t or "", title=ti or "")
+            for t, ti in zip(texts.to_pylist(), titles.to_pylist())
+        ],
+        pa.string(),
     )
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def sentences_udf(texts: pd.Series) -> pd.Series:
+@arrow_udf(T.ArrayType(T.StringType()))
+def sentences_udf(texts: pa.Array) -> pa.Array:
     """Sentence split (regex punkt replacement, artexin/index.py:86-104)."""
-    return texts.map(lambda t: list(split_sentences(t or "")))
+    return pa.array(
+        [list(split_sentences(t or "")) for t in texts.to_pylist()],
+        pa.list_(pa.string()),
+    )
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def words_udf(texts: pd.Series) -> pd.Series:
+@arrow_udf(T.ArrayType(T.StringType()))
+def words_udf(texts: pa.Array) -> pa.Array:
     """Word tokens per document (artexin/index.py:107-121) — feeds native
     explode/groupBy aggregation for corpus term counts."""
-    return texts.map(lambda t: [w.lower() for w in split_words(t or "")])
+    return pa.array(
+        [[w.lower() for w in split_words(t or "")] for t in texts.to_pylist()],
+        pa.list_(pa.string()),
+    )
 
 
-#: SQL function name → pandas_udf. Registered by :func:`register_sql`; a
-#: registered pandas_udf keeps its vectorized (ArrowEvalPython) execution,
+#: SQL function name → arrow_udf. Registered by :func:`register_sql`; a
+#: registered arrow_udf keeps its vectorized (ArrowEvalPython) execution,
 #: so the pure-SQL surface has the identical physical shape as the
 #: DataFrame API (plan-gated in tests/test_udfs.py).
 SQL_FUNCTIONS = {
@@ -171,7 +130,7 @@ def register_sql(spark) -> list[str]:
     """Expose the engine's vectorized UDFs as SQL functions, so the whole
     pipeline is writable in pure ``spark.sql(...)``::
 
-        SELECT conv_id, turn_idx, artexin_extract(text, '', true) AS ex
+        SELECT conv_id, turn_idx, artexin_extract(text, '') AS ex
         FROM transcripts
 
     Replaces the reference's Python-only call surface (artexin has no query
@@ -184,21 +143,15 @@ def register_sql(spark) -> list[str]:
     return list(SQL_FUNCTIONS)
 
 
-def with_extraction(df, text_col="text", source_col=None, do_extract_col=None):
-    """Attach the extraction struct + flattened output columns to ``df``.
+def with_extraction(df, text_col="text", source_col=None):
+    """Attach the extraction output columns (``pipeline.EXTRACT_SCHEMA``)
+    to ``df``.
 
-    Column-pruning friendly: only text/source/do_extract feed the UDF, so
-    Catalyst prunes everything else from the scan when downstream allows.
+    Column-pruning friendly: only text/source feed the UDF, so Catalyst
+    prunes everything else from the scan when downstream allows.
     """
     source = F.col(source_col) if source_col else F.lit("")
-    do_ext = F.col(do_extract_col) if do_extract_col else F.lit(True)
-    out = df.withColumn("_ex", extract_udf(F.col(text_col), source, do_ext))
-    return (
-        out.withColumn("title", F.col("_ex.title"))
-        .withColumn("extracted_text", F.col("_ex.extracted_text"))
-        .withColumn("spans", F.col("_ex.spans"))
-        .withColumn("images", F.col("_ex.images"))
-        .withColumn("n_images", F.col("_ex.n_images"))
-        .withColumn("error", F.col("_ex.error"))
-        .drop("_ex")
-    )
+    out = df.withColumn("_ex", extract_udf(F.col(text_col), source))
+    return out.withColumns(
+        {name: F.col(f"_ex.{name}") for name in EXTRACT_SCHEMA.names}
+    ).drop("_ex")

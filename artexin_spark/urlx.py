@@ -5,7 +5,7 @@ artexin/extract.py:140-170, artexin/pack.py:40-65) — every doctest vector
 from those modules is pinned in tests/test_urlx.py. The implementation is
 new, on stdlib urllib.parse / posixpath only.
 
-These run vectorized inside Arrow pandas_udf batches; several also have
+These run vectorized inside Arrow UDF batches; several also have
 native Catalyst expression equivalents (see functions/native.py) which are
 preferred in hot paths — the Python versions here are the single source of
 truth for semantics and the golden generator.

@@ -1,5 +1,7 @@
 """DOM parser: tolerance, offsets, mutation, get_cls parity."""
 
+import pytest
+
 from artexin_spark import dom
 
 
@@ -66,3 +68,13 @@ def test_script_style_are_cdata():
     doc = dom.parse("<script>if (a < b) { x(); }</script><p>t</p>")
     assert doc.find("p") is not None
     assert doc.find("script") is not None
+
+
+def test_text_node_attrs_are_read_only():
+    # text nodes share one empty attrs mapping: a write must fail loudly
+    # instead of leaking into every text node in the process
+    doc = dom.parse("<p>hello</p>")
+    text = doc.find("p").children[0]
+    assert text.tag is None and text.attrs.get("src") is None
+    with pytest.raises(TypeError):
+        text.attrs["src"] = "x.png"

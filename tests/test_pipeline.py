@@ -70,6 +70,23 @@ def test_salting_flattens_buckets(spark, corpus_pdf):
     assert sizes.max() / sizes.median() < 1.5
 
 
+def test_bigint_turn_idx_overflow_fails_loudly(spark):
+    """prepare_input narrows turn_idx to int. Under ANSI mode (Spark 4's
+    default, which get_spark keeps) a value past int32 must fail the job
+    with CAST_OVERFLOW, never wrap into a wrong index in the sink."""
+    from pyspark.errors import ArithmeticException
+
+    from artexin_spark.pipeline import prepare_input
+
+    df = spark.createDataFrame(
+        [("c0", 2**31 + 5, "user", "<p>x</p>", None, None)],
+        "conv_id string, turn_idx bigint, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
+        prepare_input(df, 4, None).collect()
+
+
 def test_sink_lineage_and_resume(spark, corpus_pdf, tmp_path):
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame(corpus_pdf)

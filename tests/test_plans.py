@@ -50,6 +50,15 @@ def test_extraction_is_single_arrow_crossing(spark, tmp_path):
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     for col in ("conv_id", "turn_idx", "text"):
         assert col in read_schema, read_schema
+    # the stage consumes `source` but emits neither it nor a per-row
+    # `batch_ms`: nothing downstream reads them, and anything the stage
+    # emits rides the bucket exchange. The node's detail line reads
+    # "Arguments: fn(inputs)#id, [outputs], false".
+    detail = plan.split(") MapInArrow", 1)[1].splitlines()
+    args = [l for l in detail if l.startswith("Arguments:")][0]
+    consumed, emitted = args[: args.rindex("[")], args[args.rindex("[") :]
+    assert "source#" in consumed and "extracted_text#" in emitted, args
+    assert "source#" not in emitted and "batch_ms#" not in emitted, args
 
 
 def test_small_dim_joins_broadcast(spark):

@@ -1,8 +1,11 @@
 """Preprocessor contracts from artexin/preprocessors.py doctests +
 dispatch semantics from artexin/preprocessor_mappings.py."""
 
+import pytest
+
 from artexin_spark import dom
 from artexin_spark.preprocess import (
+    MAPPINGS,
     apply_preps_html,
     fixheaders_html,
     get_prep_names,
@@ -10,6 +13,7 @@ from artexin_spark.preprocess import (
     pp_dwelle,
     pp_fixheaders,
     pp_wikipedia,
+    preps_for,
 )
 
 
@@ -115,19 +119,76 @@ def test_pp_wikipedia_keeps_content_without_body():
 
 
 def test_empty_source_still_dispatches_catch_all():
-    """get_preps('') includes the catch-all fixheaders; the UDF batch loop
-    and the golden generator must both apply it (an `if src` shortcut on
-    either side silently skipped it for every source-less transcript)."""
-    import pandas as pd
+    """get_preps('') includes the catch-all fixheaders; the extraction
+    batch loop and the golden generator must both apply it (an `if src`
+    shortcut on either side silently skipped it for every source-less
+    transcript)."""
+    import pyarrow as pa
 
-    from artexin_spark.preprocess import get_prep_names, preps_for
-    from artexin_spark.udfs import _run_extract_batch
+    from artexin_spark.pipeline import extract_arrays
 
     assert get_prep_names("") == ["fixheaders"]
     assert [f.__name__ for f in preps_for("")] == ["pp_fixheaders"]
     html = "<h3>Only Heading</h3><p>Body text, long enough, with commas, here.</p>"
-    out = _run_extract_batch(
-        pd.Series([html]), pd.Series([None]), pd.Series([True])
-    )
+    out = extract_arrays(pa.array([html]), pa.array([None], pa.string()))
     # fixheaders promoted h3 -> h1, so get_title finds it
-    assert out.title[0] == "Only Heading"
+    assert out.field("title")[0].as_py() == "Only Heading"
+
+
+_WIKI_PAGE = (
+    "<html><body>"
+    '<h1 id="firstHeading">Helianthus</h1>'
+    '<div id="mw-content-text">'
+    "<p>The sunflower is a large annual forb of the genus Helianthus.</p>"
+    '<span class="mw-editsection"><a href="/w/index.php?title=X">edit</a></span>'
+    '<a href="/wiki/Plant">Plant</a> <a href="https://example.org/x">ext</a>'
+    '<a class="new" href="/w/index.php?title=Red">red link</a>'
+    '<a class="image" href="/wiki/File:X.jpg"><img src="/x.jpg"></a>'
+    '<div class="thumbcaption">A caption<div class="magnify">zoom</div></div>'
+    '<table class="navbox"><tr><td>nav</td></tr></table>'
+    '<div class="hatnote">For other uses, see X.</div>'
+    "</div></body></html>"
+)
+_DW_PAGE = (
+    "<html><body><h2>Headline</h2>"
+    '<p class="intro">The intro text.</p>'
+    '<div class="picBox"><a href="/img"><img src="/pic.jpg"></a></div>'
+    '<ul class="smallList"><li>first</li></ul>'
+    '<ul class="smallList"><li>Date <strong>Author</strong></li></ul>'
+    '<div class="longText"><p>Body <a href="/more">more</a>.</p></div>'
+    "</body></html>"
+)
+
+
+def _no_links_or_images(html: str) -> str:
+    return html.replace("<a", "<b").replace("</a>", "</b>").replace("<img", "<br")
+
+
+_PREP_CASES = {
+    "wikipedia": ("https://en.wikipedia.org/wiki/Helianthus", _WIKI_PAGE),
+    # the same shapes with no <a>/<img>: the preps must not create any
+    "wikipedia-plain": ("https://en.wikipedia.org/wiki/P", _no_links_or_images(_WIKI_PAGE)),
+    "dwelle": ("http://www.dw.de/story", _DW_PAGE),
+    "dwelle-plain": ("http://www.dw.de/plain", _no_links_or_images(_DW_PAGE)),
+    "fixheaders": ("http://example.com/a", "<h3>T</h3><h4>S <a href='/x'>a</a></h4><img src='y.png'>"),
+    "no-source": ("", "<h2>Only heading</h2><p>text</p>"),
+}
+
+
+@pytest.mark.parametrize("url,html", _PREP_CASES.values(), ids=_PREP_CASES.keys())
+def test_preps_never_create_unseen_links_or_images(url, html):
+    """extract_turn skips the links/images walk when the parser saw no
+    <a>/<img> (doc.tags_seen). That holds only while no preprocessor
+    CREATES either tag: every <a>/<img> left after the preps must have
+    been seen at parse time."""
+    doc = dom.parse(html)
+    for prep in preps_for(url):
+        prep(doc)
+    left = {n.tag for n in doc.iter() if n.tag in ("a", "img")}
+    assert left <= doc.tags_seen, (left, doc.tags_seen)
+
+
+def test_tags_seen_cases_cover_every_dispatched_prep():
+    # every preprocessor get_preps can dispatch runs in the test above
+    dispatched = {p for _, preps in MAPPINGS for p in preps}
+    assert dispatched == {p for url, _ in _PREP_CASES.values() for p in preps_for(url)}

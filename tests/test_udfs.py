@@ -155,7 +155,7 @@ def test_register_sql_surface(spark):
         """
         SELECT doc_id, ex.title AS title, ex.extracted_text AS extracted_text,
                ex.error AS error
-        FROM (SELECT doc_id, artexin_extract(text, '', true) AS ex
+        FROM (SELECT doc_id, artexin_extract(text, '') AS ex
               FROM sqlsurf_docs)
         ORDER BY doc_id
         """
