@@ -178,7 +178,11 @@ def banded_sigs(
     (nothing is memoized across runs) — at ~(8+8k+40)·bands B/doc of
     executor MEMORY_AND_DISK storage, the standard persist-signatures
     trade (Lee et al. §4 pipelines do the same). Pass False to keep the
-    fully-lazy plan (e.g. when composing into a larger one-pass query)."""
+    fully-lazy plan (e.g. when composing into a larger one-pass query).
+
+    Failure mode: ``localCheckpoint`` severs lineage — its blocks live
+    only on the executors that computed them, so losing one of those
+    executors fails the job instead of recomputing the lost blocks."""
     cols = [F.col(id_col)] + ([F.col("sig")] if carry_sig else [])
     # balanced band boundaries floor(b·k/bands) cover EVERY signature slot
     # (an integer width k//bands silently dropped the trailing k%bands
@@ -354,7 +358,10 @@ def connected_components(
     pair metadata never rides along); `localCheckpoint` cuts the lineage
     each round so the plan doesn't grow; convergence is detected by a
     0/1 changed-flag sum (never a raw-id sum, which would overflow
-    BIGINT under ANSI mode), one cheap agg per round.
+    BIGINT under ANSI mode), one cheap agg per round. Because
+    ``localCheckpoint`` severs lineage and keeps its blocks only on the
+    executors that computed them, losing one of those executors fails
+    the job instead of recomputing the labels.
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))

@@ -4,7 +4,8 @@ The sandbox has no Iceberg runtime jar (SURVEY.md §7.0), so the sink is an
 Iceberg-shaped layout we manage explicitly:
 
     <sink>/data/part_key=NNN/*.parquet     bucket-partitioned output
-    <sink>/_lineage/*.parquet              one row per (run_id, part_key)
+    <sink>/_lineage/part-<uuid>.parquet    one file per run, written by the
+                                           driver: a row per (run_id, part_key)
 
 ``_lineage`` doubles as the checkpoint manifest (the reference's
 per-package ``info.json``, artexin/pack.py:120-122, lifted to partition
@@ -20,17 +21,34 @@ when a catalog is configured — the pipeline code doesn't change.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-LINEAGE_SCHEMA = (
-    "run_id string, part_key int, n_rows long, n_errors long, "
-    "n_chars_in long, n_chars_out long, wall_ms double, status string, "
-    "counter_source string, finished_at timestamp"
+#: The lineage row, declared once. ``append_lineage`` takes rows of every
+#: field but the last and stamps ``finished_at`` itself.
+LINEAGE_ARROW_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("part_key", pa.int32()),
+        ("n_rows", pa.int64()),
+        ("n_errors", pa.int64()),
+        ("n_chars_in", pa.int64()),
+        ("n_chars_out", pa.int64()),
+        ("wall_ms", pa.float64()),
+        ("status", pa.string()),
+        ("counter_source", pa.string()),
+        ("finished_at", pa.timestamp("us", tz="UTC")),
+    ]
 )
+LINEAGE_SCHEMA = from_arrow_schema(LINEAGE_ARROW_SCHEMA)
 
 
 def data_path(sink: str) -> str:
@@ -67,8 +85,27 @@ def read_data(spark: SparkSession, sink: str) -> DataFrame:
     return spark.read.parquet(data_path(sink))
 
 
-def append_lineage(df: DataFrame, sink: str) -> None:
-    df.write.mode("append").parquet(lineage_path(sink))
+def append_lineage(rows, sink: str) -> None:
+    """Append lineage ``rows`` — tuples in ``LINEAGE_ARROW_SCHEMA`` order
+    without ``finished_at``, which is stamped once per call in UTC — as
+    one parquet file written from the driver (a run holds at most
+    n_buckets rows; a Spark job to write them cost ~0.5 s). The file is
+    written under a ``_``-prefixed name and published with ``os.replace``:
+    Spark's reader skips ``_`` files, so a crash mid-write leaves nothing
+    ``read_lineage`` sees. Sinks are local paths (``ensure_bucket_spec``
+    already relies on ``os.link``)."""
+    names = LINEAGE_ARROW_SCHEMA.names
+    finished_at = datetime.datetime.now(datetime.timezone.utc)
+    table = pa.Table.from_pylist(
+        [dict(zip(names, (*row, finished_at), strict=True)) for row in rows],
+        schema=LINEAGE_ARROW_SCHEMA,
+    )
+    path = lineage_path(sink)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "_" + name)
+    pq.write_table(table, tmp, compression=SINK_CODEC)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def read_lineage(spark: SparkSession, sink: str) -> DataFrame | None:

@@ -1,13 +1,26 @@
 """End-to-end Spark pipeline: golden per-turn equality, resume, lineage,
 salting, and physical-plan shape (vectorized Arrow path only)."""
 
+import os
+import shutil
+import sys
+import zipfile
+import zipimport
+
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from artexin_spark import storage as sink_io
 from artexin_spark.corpus import gen_transcripts, golden_extract, synth_transcripts
-from artexin_spark.pipeline import extract_df, run_extract
+from artexin_spark.pipeline import (
+    _extract_map_iter,
+    _forget_zip_importers,
+    extract_df,
+    prepare_input,
+    run_extract,
+)
 from artexin_spark.udfs import with_extraction
 
 
@@ -208,12 +221,9 @@ def test_resume_reextracts_buckets_whose_latest_status_is_failed(spark, corpus_p
     # simulate a post-hoc failure of two buckets: newer 'failed' lineage
     # rows + their data directories lost
     failed = [1, 5]
-    marks = spark.createDataFrame(
-        [("op-marker", pk, 0, 0, 0, 0, 0.0, "failed") for pk in failed],
-        "run_id string, part_key int, n_rows long, n_errors long, "
-        "n_chars_in long, n_chars_out long, wall_ms double, status string",
-    ).withColumn("finished_at", F.current_timestamp())
-    sink_io.append_lineage(marks, sink)
+    sink_io.append_lineage(
+        [("op-marker", pk, 0, 0, 0, 0, 0.0, "failed", None) for pk in failed], sink
+    )
     for pk in failed:
         shutil.rmtree(f"{sink}/data/part_key={pk}")
     assert sink_io.read_data(spark, sink).count() < full_count
@@ -478,12 +488,8 @@ def test_lineage_schema_evolution_merges_old_files(spark, tmp_path):
     old = spark.createDataFrame(
         [("r_old", 0, 10, 0, 100, 90, 1.0, "ok", t0)], old_schema
     )
-    sink_io.append_lineage(old, sink)
-    new = spark.createDataFrame(
-        [("r_new", 1, 20, 0, 200, 180, 2.0, "ok", "accumulator", t0)],
-        sink_io.LINEAGE_SCHEMA,
-    )
-    sink_io.append_lineage(new, sink)
+    old.write.mode("append").parquet(sink_io.lineage_path(sink))
+    sink_io.append_lineage([("r_new", 1, 20, 0, 200, 180, 2.0, "ok", "accumulator")], sink)
     lin = sink_io.read_lineage(spark, sink)
     assert "counter_source" in lin.columns
     got = {r["run_id"]: r["counter_source"] for r in lin.collect()}
@@ -491,3 +497,112 @@ def test_lineage_schema_evolution_merges_old_files(spark, tmp_path):
     # the resume reader keeps working across the mixed-schema dir
     done = sink_io.completed_buckets(spark, sink)
     assert {r["part_key"] for r in done.collect()} == {0, 1}
+
+
+def _lineage_files(sink):
+    return sorted(os.listdir(sink_io.lineage_path(sink)))
+
+
+def test_each_run_publishes_one_lineage_file(spark, corpus_pdf, tmp_path):
+    """run_extract writes its lineage rows from the driver as ONE
+    part-*.parquet per run, and the temp name it publishes from is gone."""
+    sink = str(tmp_path / "sink")
+    df = spark.createDataFrame(corpus_pdf.head(200))
+    for n_runs in (1, 2):
+        run_extract(spark, df, sink, n_buckets=4)
+        names = _lineage_files(sink)
+        assert len(names) == n_runs
+        assert all(f.startswith("part-") and f.endswith(".parquet") for f in names)
+    assert sink_io.read_lineage(spark, sink).count() == 2 * 4
+
+
+def test_unpublished_lineage_file_is_ignored(spark, corpus_pdf, tmp_path):
+    """A crash between writing and publishing a lineage file leaves a
+    ``_part-….parquet`` behind: resume and lineage readers must not see
+    it, with or without published files next to it."""
+    donor = str(tmp_path / "donor")
+    sink_io.append_lineage(
+        [("crashed", pk, 0, 0, 0, 0, 0.0, "failed", None) for pk in range(4)], donor
+    )
+    (planted,) = _lineage_files(donor)
+
+    def plant(sink):
+        os.makedirs(sink_io.lineage_path(sink), exist_ok=True)
+        shutil.copy(
+            os.path.join(sink_io.lineage_path(donor), planted),
+            os.path.join(sink_io.lineage_path(sink), "_" + planted),
+        )
+
+    only = str(tmp_path / "only")
+    plant(only)
+    assert sink_io.read_lineage(spark, only) is None
+    assert sink_io.completed_buckets(spark, only) is None
+
+    sink = str(tmp_path / "sink")
+    run_extract(spark, spark.createDataFrame(corpus_pdf.head(200)), sink, n_buckets=4)
+    plant(sink)
+    assert "crashed" not in {r.run_id for r in sink_io.read_lineage(spark, sink).collect()}
+    assert {r.part_key for r in sink_io.completed_buckets(spark, sink).collect()} == {0, 1, 2, 3}
+
+
+def test_forget_zip_importers_keeps_zip_packages_importable(tmp_path):
+    """Dropping the cached zipimporters must not break a later import of a
+    not-yet-imported submodule from the same archive."""
+    archive = str(tmp_path / "zpkg_fzi.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zpkg_fzi/__init__.py", "")
+        zf.writestr("zpkg_fzi/first.py", "VALUE = 1\n")
+        zf.writestr("zpkg_fzi/second.py", "VALUE = 2\n")
+    sys.path.insert(0, archive)
+    try:
+        import zpkg_fzi.first
+
+        assert zpkg_fzi.first.VALUE == 1
+        assert any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        _forget_zip_importers()
+        assert not any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        import zpkg_fzi.second
+
+        assert zpkg_fzi.second.VALUE == 2
+    finally:
+        sys.path.remove(archive)
+        for name in [m for m in sys.modules if m.split(".")[0] == "zpkg_fzi"]:
+            del sys.modules[name]
+        sys.path_importer_cache.pop(archive, None)
+
+
+def test_workers_hold_no_zip_importers_after_extraction(spark, corpus_pdf):
+    """Every extraction task leaves its Python worker without cached
+    zipimporters, so the next task's ``importlib.invalidate_caches()`` has
+    no archive to re-read. The workers import pyspark from a zip, so the
+    importers would be there otherwise."""
+    prepared = prepare_input(spark.createDataFrame(corpus_pdf.head(160)), 8, "source")
+
+    def probe(batches):
+        import pyspark
+
+        n_rows = sum(b.num_rows for b in _extract_map_iter(batches))
+        left = sum(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        yield pa.RecordBatch.from_pydict(
+            {
+                "n_rows": [n_rows],
+                "pyspark_zipped": [".zip" in pyspark.__file__],
+                "zip_importers": [left],
+            }
+        )
+
+    tasks = (
+        prepared.repartition(6)
+        .mapInArrow(probe, "n_rows long, pyspark_zipped boolean, zip_importers long")
+        .collect()
+    )
+    assert len(tasks) == 6
+    assert all(t.n_rows > 0 for t in tasks)
+    assert all(t.pyspark_zipped for t in tasks)
+    assert [t.zip_importers for t in tasks] == [0] * 6
