@@ -14,6 +14,11 @@ on resume; re-running a bucket overwrites its directory idempotently —
 the same semantics as the reference's rmtree-if-exists + rewrite
 (artexin/pack.py:113-116), via Spark dynamic partition overwrite.
 
+Metadata plane: ``_lineage`` and ``_snapshots`` hold at most n_buckets rows
+per run or snapshot, so the driver reads them with pyarrow (``_read_rows``)
+and publishes each new file with one ``os.replace`` (``_publish``) — no
+metadata call runs a Spark job. Spark runs only the data plane.
+
 Swap point: replace write_data/read_data with
 ``df.writeTo(tbl).overwritePartitions()`` / ``spark.read.format('iceberg')``
 when a catalog is configured — the pipeline code doesn't change.
@@ -24,9 +29,12 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import shutil
+import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,65 +93,77 @@ def read_data(spark: SparkSession, sink: str) -> DataFrame:
     return spark.read.parquet(data_path(sink))
 
 
+def _read_rows(directory: str, schema: pa.Schema) -> list[dict]:
+    """Every row of the files published in ``directory``, read on the
+    driver through the declared ``schema`` ([] when there are none).
+    pyarrow's default ``ignore_prefixes`` skips ``_``-prefixed temp files,
+    ``_SUCCESS``, ``.crc`` files and the ``.commit-N`` markers. Files
+    written before a column existed read it as null ("unknown"), and
+    older Spark-written INT96 timestamps are cast to the declared type."""
+    try:
+        table = ds.dataset(directory, schema=schema, format="parquet").to_table()
+    except FileNotFoundError:
+        return []
+    return table.to_pylist()
+
+
+def _publish(table: pa.Table, directory: str) -> None:
+    """Add ``table`` to ``directory`` as one new ``part-<uuid>.parquet``,
+    written under a ``_``-prefixed name and published with ``os.replace``:
+    readers skip ``_`` files, so a crash mid-write leaves nothing visible.
+    Sinks are local paths (``ensure_bucket_spec`` already relies on
+    ``os.link``)."""
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, "_" + name)
+    pq.write_table(table, tmp, compression=SINK_CODEC)
+    os.replace(tmp, os.path.join(directory, name))
+
+
 def append_lineage(rows, sink: str) -> None:
     """Append lineage ``rows`` — tuples in ``LINEAGE_ARROW_SCHEMA`` order
     without ``finished_at``, which is stamped once per call in UTC — as
-    one parquet file written from the driver (a run holds at most
-    n_buckets rows; a Spark job to write them cost ~0.5 s). The file is
-    written under a ``_``-prefixed name and published with ``os.replace``:
-    Spark's reader skips ``_`` files, so a crash mid-write leaves nothing
-    ``read_lineage`` sees. Sinks are local paths (``ensure_bucket_spec``
-    already relies on ``os.link``)."""
+    one file published from the driver (a run holds at most n_buckets
+    rows; a Spark job to write them cost ~0.5 s)."""
     names = LINEAGE_ARROW_SCHEMA.names
     finished_at = datetime.datetime.now(datetime.timezone.utc)
     table = pa.Table.from_pylist(
         [dict(zip(names, (*row, finished_at), strict=True)) for row in rows],
         schema=LINEAGE_ARROW_SCHEMA,
     )
-    path = lineage_path(sink)
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, "_" + name)
-    pq.write_table(table, tmp, compression=SINK_CODEC)
-    os.replace(tmp, os.path.join(path, name))
+    _publish(table, lineage_path(sink))
 
 
 def read_lineage(spark: SparkSession, sink: str) -> DataFrame | None:
-    path = lineage_path(sink)
-    try:
-        # mergeSchema: the lineage schema EVOLVES (counter_source was
-        # appended in a later release) and lineage dirs accumulate files
-        # across runs — without the merge, the visible schema would be
-        # whichever file parquet samples first, making new columns
-        # appear or vanish file-order-dependently on pre-existing sinks
-        # (r03 ADVICE). Rows written before a column existed read it as
-        # null, which downstream code must treat as "unknown".
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
-        return None  # first run: no manifest yet
+    rows = _read_rows(lineage_path(sink), LINEAGE_ARROW_SCHEMA)
+    return spark.createDataFrame(rows, LINEAGE_SCHEMA) if rows else None
 
 
 def completed_buckets(spark: SparkSession, sink: str) -> DataFrame | None:
     """part_keys whose LATEST lineage row is ok — the resume anti-join
     side (SURVEY.md §4 item 4)."""
-    lin = read_lineage(spark, sink)
-    if lin is None:
+    rows = _read_rows(lineage_path(sink), LINEAGE_ARROW_SCHEMA)
+    if not rows:
         return None
-    latest = lin.groupBy("part_key").agg(
-        F.max_by("status", "finished_at").alias("status")
-    )
-    return latest.filter(F.col("status") == "ok").select("part_key")
+    latest: dict[int, dict] = {}
+    for r in rows:
+        seen = latest.get(r["part_key"])
+        if seen is None or r["finished_at"] > seen["finished_at"]:
+            latest[r["part_key"]] = r
+    ok = sorted(k for k, r in latest.items() if r["status"] == "ok")
+    return spark.createDataFrame([(k,) for k in ok], "part_key int")
 
 
 # ---------------------------------------------------------------------------
 # Snapshot layer: Iceberg's defining read semantics over the same layout.
 #
 #     <sink>/data/run=<run_id>/part_key=NNN/*.parquet   immutable per-run files
-#     <sink>/_snapshots/*.parquet                       manifest (append-only)
+#     <sink>/_snapshots/part-<uuid>.parquet             manifest, one file per
+#                                                       commit (append-only)
 #
 # Each snapshot's manifest rows are the FULL bucket→run mapping (Iceberg
 # analogue: a manifest list rewritten per snapshot). The commit point is the
-# single manifest append — a run whose data files were written but never
+# manifest file's publish — a run whose data files were written but never
 # committed is invisible to every reader, so a failed job can never corrupt
 # the readable table; readers of snapshot S are isolated from any later
 # writes (time travel = read an older S). ``compact_snapshot`` rewrites the
@@ -152,20 +172,30 @@ def completed_buckets(spark: SparkSession, sink: str) -> DataFrame | None:
 # directories no surviving snapshot references.
 #
 # Substitution note (same seam as the module docstring): real Iceberg makes
-# the manifest swap atomic via the catalog; here the commit is one parquet
-# append into _snapshots — crash-before-append loses nothing, crash-mid-
-# append is detected by Spark's _SUCCESS-less output and the orphan is
-# ignored by read-side max(snapshot_id) over complete files.
+# the manifest swap atomic via the catalog; here a commit is one
+# ``_publish`` — the file is written under a ``_`` name that no reader sees
+# and made visible by a single ``os.replace``, so a crash at any point
+# leaves either the whole snapshot or nothing. The manifest holds
+# n_buckets rows per snapshot, so it is read and written on the driver
+# with pyarrow; no manifest call plans a Spark job.
 # ---------------------------------------------------------------------------
 
-SNAPSHOT_SCHEMA = (
-    "snapshot_id long, part_key int, run_id string, committed_at timestamp, "
-    "operation string, stats string"
+#: The manifest row, declared once. ``stats`` is Iceberg's manifest column
+#: stats at bucket granularity: a JSON object {col: {"min": v, "max": v}}
+#: computed at commit time, NULL when the committer didn't ask for stats
+#: (older manifests read back NULL through the declared schema — unknown
+#: stats are never pruned, only ever conservative).
+SNAPSHOT_ARROW_SCHEMA = pa.schema(
+    [
+        ("snapshot_id", pa.int64()),
+        ("part_key", pa.int32()),
+        ("run_id", pa.string()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+        ("operation", pa.string()),
+        ("stats", pa.string()),
+    ]
 )
-# ``stats`` is Iceberg's manifest column stats at bucket granularity: a JSON
-# object {col: {"min": v, "max": v}} computed at commit time, NULL when the
-# committer didn't ask for stats (older manifests read back NULL through the
-# declared schema — unknown stats are never pruned, only ever conservative).
+SNAPSHOT_SCHEMA = from_arrow_schema(SNAPSHOT_ARROW_SCHEMA)
 
 
 def snapshots_path(sink: str) -> str:
@@ -185,40 +215,69 @@ def write_run_data(df: DataFrame, sink: str, run_id: str) -> None:
     ).parquet(run_data_path(sink, run_id))
 
 
-def _read_manifest(spark: SparkSession, sink: str) -> DataFrame | None:
-    try:
-        return spark.read.schema(SNAPSHOT_SCHEMA).parquet(snapshots_path(sink))
-    except Exception:
-        return None  # no snapshot committed yet
+def _manifest(sink: str) -> list[dict]:
+    """Every manifest row of ``sink`` ([] when nothing is committed).
+    ``expire_snapshots`` swaps the manifest directory with two renames;
+    a crash between them leaves no ``_snapshots`` but a complete
+    ``_snapshots.tmp`` (it was written before the first rename), so the
+    read rolls the swap forward instead of seeing an empty table."""
+    path = snapshots_path(sink)
+    if not os.path.isdir(path) and os.path.isdir(path + ".tmp"):
+        try:
+            os.rename(path + ".tmp", path)
+        except FileNotFoundError:
+            pass  # a concurrent reader rolled it forward first
+    return _read_rows(path, SNAPSHOT_ARROW_SCHEMA)
+
+
+def _snapshot_rows(sink: str, snapshot_id: int | None = None) -> list[dict]:
+    """The manifest rows of one snapshot (latest when None); raises when
+    nothing is committed or ``snapshot_id`` is not in the manifest."""
+    rows = _manifest(sink)
+    if not rows:
+        raise FileNotFoundError(f"no committed snapshot in {sink}")
+    if snapshot_id is None:
+        snapshot_id = max(r["snapshot_id"] for r in rows)
+    rows = [r for r in rows if r["snapshot_id"] == snapshot_id]
+    if not rows:
+        raise ValueError(f"snapshot {snapshot_id} not found in {sink}")
+    return rows
 
 
 def run_id_committed(spark: SparkSession, sink: str, run_id: str) -> bool:
     """True when a published snapshot references ``run_id`` — its data
     dir is then IMMUTABLE (overwriting it would corrupt committed
     reads)."""
-    man = _read_manifest(spark, sink)
-    if man is None:
-        return False
-    return man.filter(F.col("run_id") == run_id).limit(1).count() > 0
+    return any(r["run_id"] == run_id for r in _manifest(sink))
 
 
 def latest_snapshot_id(spark: SparkSession, sink: str) -> int | None:
     """Highest committed snapshot id, or None when nothing is committed."""
-    man = _read_manifest(spark, sink)
-    if man is None:
-        return None
-    return man.agg(F.max("snapshot_id")).collect()[0][0]
+    return max((r["snapshot_id"] for r in _manifest(sink)), default=None)
 
 
 def list_snapshots(spark: SparkSession, sink: str) -> DataFrame | None:
-    man = _read_manifest(spark, sink)
-    if man is None:
+    by_id: dict[int, list[dict]] = {}
+    for r in _manifest(sink):
+        by_id.setdefault(r["snapshot_id"], []).append(r)
+    if not by_id:
         return None
-    return man.groupBy("snapshot_id").agg(
-        F.max("committed_at").alias("committed_at"),
-        F.count("*").alias("n_buckets"),
-        F.countDistinct("run_id").alias("n_runs"),
-        F.coalesce(F.max("operation"), F.lit("overwrite")).alias("operation"),
+    return spark.createDataFrame(
+        [
+            (
+                sid,
+                max(r["committed_at"] for r in rows),
+                len(rows),
+                len({r["run_id"] for r in rows}),
+                max(
+                    (r["operation"] for r in rows if r["operation"]),
+                    default="overwrite",
+                ),
+            )
+            for sid, rows in sorted(by_id.items())
+        ],
+        "snapshot_id long, committed_at timestamp, n_buckets long, n_runs long, "
+        "operation string",
     )
 
 
@@ -278,7 +337,8 @@ def commit_snapshot(
     TYPE differs from the live snapshot's fails here (fail fast, one
     writer) instead of at some future reader's union; added and missing
     columns remain legal (add-column evolution, NULL-filled)."""
-    run_df = spark.read.parquet(run_data_path(sink, run_id))
+    run_dir = run_data_path(sink, run_id)
+    run_df = spark.read.parquet(run_dir)
     _check_schema_compatible(spark, sink, run_df.schema, f"run {run_id}")
     if stats_cols:
         per_col = [
@@ -287,107 +347,76 @@ def commit_snapshot(
             ).alias(c)
             for c in stats_cols
         ]
-        new_keys = run_df.groupBy("part_key").agg(
-            F.to_json(F.struct(*per_col)).alias("stats")
-        )
+        new_stats = {
+            r["part_key"]: r["stats"]
+            for r in run_df.groupBy("part_key")
+            .agg(F.to_json(F.struct(*per_col)).alias("stats"))
+            .collect()
+        }
     else:
-        # partition-column only: resolved from directory names, no file read
-        new_keys = (
-            run_df.select("part_key")
-            .distinct()
-            .withColumn("stats", F.lit(None).cast("string"))
-        )
-    new_map = new_keys.withColumn("run_id", F.lit(run_id))
+        # partition-column only: the run's part_key= directory names
+        new_stats = {
+            int(name.split("=", 1)[1]): None
+            for name in os.listdir(run_dir)
+            if name.startswith("part_key=")
+        }
     # Optimistic concurrency on the snapshot id: an O_EXCL marker file
     # arbitrates each id, so two concurrent committers can never both
-    # append rows under the same snapshot_id (which would make that
+    # publish rows under the same snapshot_id (which would make that
     # snapshot's mapping a union of two runs — duplicate rows per bucket).
     # The loser recomputes its parent and retries with the next id. This is
     # the local-FS stand-in for Iceberg's catalog compare-and-swap (same
     # substitution seam as the module docstring); single-writer-per-sink
     # remains the supported production mode.
-    os.makedirs(snapshots_path(sink), exist_ok=True)
     last_err: OSError | None = None
     snap_id = 0
     for _ in range(64):
-        man = _read_manifest(spark, sink)
-        if man is None:
-            parent_id, carried = 0, None
-        else:
-            parent_id = man.agg(F.max("snapshot_id")).collect()[0][0] or 0
-            parent_rows = man.filter(
-                F.col("snapshot_id") == parent_id
-            ).select("part_key", "run_id", "stats")
-            if operation == "append":
-                # Iceberg append: ADD this run's files to the table — the
-                # parent's whole mapping carries forward, touched buckets
-                # become multi-run (readers union; a later overwrite or
-                # compaction normalizes them back to one run per bucket)
-                carried = parent_rows
-            else:
-                carried = parent_rows.join(
-                    F.broadcast(new_keys.select("part_key")),
-                    "part_key",
-                    "left_anti",
-                )
-        # a 'replace' commit rewrites layout over byte-identical data, so
-        # the parent's per-bucket stats still describe the new files —
-        # inherit them instead of nulling (compaction must not degrade
-        # data skipping); a data commit ('overwrite') never inherits
-        new_map_eff = new_map
-        if man is not None and operation == "replace" and not stats_cols:
+        rows = _manifest(sink)
+        parent_id = max((r["snapshot_id"] for r in rows), default=0)
+        parent = [r for r in rows if r["snapshot_id"] == parent_id]
+        # Iceberg append: ADD this run's files to the table — the parent's
+        # whole mapping carries forward, touched buckets become multi-run
+        # (readers union; a later overwrite or compaction normalizes them
+        # back to one run per bucket). Otherwise touched buckets are replaced.
+        carried = [
+            r for r in parent if operation == "append" or r["part_key"] not in new_stats
+        ]
+        stats = new_stats
+        if operation == "replace" and not stats_cols:
+            # a 'replace' commit rewrites layout over byte-identical data,
+            # so the parent's per-bucket stats still describe the new files
+            # — inherit them instead of nulling (compaction must not
+            # degrade data skipping); a data commit never inherits.
+            # Append-committed buckets carry one stats row PER RUN; the
+            # rewritten bucket holds their union, so merge the fragments
+            # (min-of-mins / max-of-maxes — exact over the union).
             frag: dict[int, list] = {}
-            for r in (
-                man.filter(F.col("snapshot_id") == parent_id)
-                .select("part_key", "stats")
-                .collect()
-            ):  # manifest-sized, driver-side
+            for r in parent:
                 frag.setdefault(r["part_key"], []).append(r["stats"])
-            # append-committed buckets carry one stats row PER RUN; the
-            # rewritten bucket holds their union, so merge fragments
-            # (min-of-mins / max-of-maxes — exact over the union) into
-            # ONE row per bucket instead of joining out duplicates
-            merged = [
-                (k, _merge_fragment_stats(v)) for k, v in frag.items()
-            ]
-            pstats = spark.createDataFrame(
-                merged, "part_key int, _pstats string"
-            )
-            new_map_eff = (
-                new_map.drop("stats")
-                .join(F.broadcast(pstats), "part_key", "left")
-                .withColumnRenamed("_pstats", "stats")
-            )
-        # probe FORWARD past claimed ids: a marker whose manifest rows never
+            stats = {k: _merge_fragment_stats(frag.get(k)) for k in new_stats}
+        # probe FORWARD past claimed ids: a marker whose manifest file never
         # landed (crashed committer) must not pin the retry loop to one id —
         # ids may skip, exactly as Iceberg burns ids on failed commits
         snap_id = max(parent_id + 1, snap_id + 1)
+        # only after _manifest: an empty _snapshots/ would block its roll-forward
+        os.makedirs(snapshots_path(sink), exist_ok=True)
         marker = os.path.join(snapshots_path(sink), f".commit-{snap_id}")
         try:
             os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
         except FileExistsError as err:
             last_err = err  # id taken (possibly in-flight): recompute parent
             continue
-        mapping = (
-            new_map_eff
-            if carried is None
-            else carried.unionByName(new_map_eff)
-        )
-        (
-            mapping.withColumn("snapshot_id", F.lit(snap_id).cast("long"))
-            .withColumn("committed_at", F.current_timestamp())
-            .withColumn("operation", F.lit(operation))
-            .select(
-                "snapshot_id",
-                "part_key",
-                "run_id",
-                "committed_at",
-                "operation",
-                "stats",
-            )
-            .write.mode("append")
-            .parquet(snapshots_path(sink))
-        )
+        stamp = {
+            "snapshot_id": snap_id,
+            "committed_at": datetime.datetime.now(datetime.timezone.utc),
+            "operation": operation,
+        }
+        mapping = [{**r, **stamp} for r in carried] + [
+            {"part_key": k, "run_id": run_id, "stats": s, **stamp}
+            for k, s in sorted(stats.items())
+        ]
+        table = pa.Table.from_pylist(mapping, schema=SNAPSHOT_ARROW_SCHEMA)
+        _publish(table, snapshots_path(sink))
         return snap_id
     raise RuntimeError(
         f"could not claim a snapshot id in {sink} after 64 attempts"
@@ -458,17 +487,7 @@ def read_snapshot(
     column opens only the overlapping buckets' files. The residual row
     filter is applied either way, so the result is exactly the rows
     matching the predicate whether or not stats exist."""
-    man = _read_manifest(spark, sink)
-    if man is None:
-        raise FileNotFoundError(f"no committed snapshot in {sink}")
-    if snapshot_id is None:
-        snapshot_id = man.agg(F.max("snapshot_id")).collect()[0][0]
-    mapping = man.filter(F.col("snapshot_id") == snapshot_id).select(
-        "part_key", "run_id", "stats"
-    )
-    rows = mapping.collect()
-    if not rows:
-        raise ValueError(f"snapshot {snapshot_id} not found in {sink}")
+    rows = _snapshot_rows(sink, snapshot_id)
     kept = [
         (r["run_id"], r["part_key"])
         for r in rows
@@ -531,12 +550,9 @@ def read_incremental(
     A bucket changed twice in the range is emitted once, at ``to`` state.
     Raises when ``since`` was expired — the delta base is gone and a full
     re-read is the only correct answer (same contract as Iceberg)."""
-    man = _read_manifest(spark, sink)
-    if man is None:
+    rows = _manifest(sink)
+    if not rows:
         raise FileNotFoundError(f"no committed snapshot in {sink}")
-    rows = man.select(
-        "snapshot_id", "part_key", "run_id", "operation"
-    ).collect()  # manifest is buckets × snapshots — tiny, driver-side
     ids = sorted({r["snapshot_id"] for r in rows})
     if to_snapshot_id is None:
         to_snapshot_id = ids[-1]
@@ -609,24 +625,15 @@ def merge_upsert(
     table rewrite; the anti-join broadcasts whenever updates are small.
     New columns in ``updates`` widen the table (add-column evolution);
     old rows read back NULL in them."""
-    import uuid as _uuid
-
-    man = _read_manifest(spark, sink)
-    if man is None:
-        raise FileNotFoundError(f"no committed snapshot in {sink}")
+    live_rows = _snapshot_rows(sink)
     # fail with the write-point error BEFORE the union would raise a raw
     # Spark type error mid-merge
     _check_schema_compatible(spark, sink, updates.schema, "merge updates")
-    latest = man.agg(F.max("snapshot_id")).collect()[0][0]
     # set-valued: an append-committed bucket spans several runs and ALL
     # of them must be read back, or the merge would drop the other runs'
     # rows when it rewrites the bucket
     to_map: dict[int, set] = {}
-    for r in (
-        man.filter(F.col("snapshot_id") == latest)
-        .select("part_key", "run_id")
-        .collect()
-    ):
+    for r in live_rows:
         to_map.setdefault(r["part_key"], set()).add(r["run_id"])
     touched = sorted(
         r["part_key"] for r in updates.select("part_key").distinct().collect()
@@ -642,7 +649,7 @@ def merge_upsert(
         merged = survivors.unionByName(updates, allowMissingColumns=True)
     else:
         merged = updates
-    rid = "merge-" + _uuid.uuid4().hex[:10]
+    rid = "merge-" + uuid.uuid4().hex[:10]
     write_run_data(merged, sink, rid)
     return commit_snapshot(spark, sink, rid)
 
@@ -665,10 +672,8 @@ def compact_snapshot(
     (Iceberg's sort-order rewrite): parquet row groups then carry tight
     min/max on those columns, so engine-level predicate pushdown skips
     row groups INSIDE the files our manifest couldn't prune."""
-    import uuid as _uuid
-
     live = read_snapshot(spark, sink)
-    rid = "compact-" + _uuid.uuid4().hex[:10]
+    rid = "compact-" + uuid.uuid4().hex[:10]
     # repartition(N, key) sets the TOTAL partition count — N must scale
     # with the number of live buckets or the whole table funnels through
     # files_per_bucket tasks (one, by default: zero parallelism and an
@@ -678,18 +683,12 @@ def compact_snapshot(
     # on part_key alone can never split a bucket). File counts are
     # approximate under hash collisions — compaction bounds smallness, it
     # doesn't promise exact counts.
-    live_id = latest_snapshot_id(spark, sink)
-    man = _read_manifest(spark, sink)
-    n_buckets_live = (
-        man.filter(F.col("snapshot_id") == live_id).count() if man is not None else 1
-    )
+    n_buckets_live = len({r["part_key"] for r in _snapshot_rows(sink)})
     # schema-agnostic deterministic sub-key (whole-row hash)
     spread = F.pmod(
         F.xxhash64(*[F.col(c) for c in live.columns]), F.lit(files_per_bucket)
     )
-    out = live.repartition(
-        max(1, n_buckets_live) * files_per_bucket, F.col("part_key"), spread
-    )
+    out = live.repartition(n_buckets_live * files_per_bucket, F.col("part_key"), spread)
     if sort_by:
         out = out.sortWithinPartitions("part_key", *sort_by)
     (
@@ -704,31 +703,26 @@ def compact_snapshot(
 def expire_snapshots(spark: SparkSession, sink: str, keep_last: int = 1) -> list[str]:
     """Drop all but the newest ``keep_last`` snapshots and delete run
     directories no surviving snapshot references. Returns removed run ids."""
-    import shutil
-
-    man = _read_manifest(spark, sink)
-    if man is None:
+    rows = _manifest(sink)
+    if not rows:
         return []
-    ids = [r[0] for r in man.select("snapshot_id").distinct().collect()]
+    ids = sorted({r["snapshot_id"] for r in rows})
     # keep_last=0 means drop everything: [-0:] would slice the WHOLE list
-    keep_ids = sorted(ids)[-keep_last:] if keep_last > 0 else []
-    kept = man.filter(F.col("snapshot_id").isin(keep_ids))
-    live_runs = {r[0] for r in kept.select("run_id").distinct().collect()}
-    all_runs = {r[0] for r in man.select("run_id").distinct().collect()}
-    dead = sorted(all_runs - live_runs)
+    keep_ids = set(ids[-keep_last:]) if keep_last > 0 else set()
+    kept = [r for r in rows if r["snapshot_id"] in keep_ids]
+    dead = sorted({r["run_id"] for r in rows} - {r["run_id"] for r in kept})
     # rewrite the manifest first (the commit point of expiry), then GC data.
     # Swap via two renames, not rmtree-then-rename: the old manifest stays
     # intact (under .old) until the new one is live, so the widest crash
     # window loses at most the EXPIRY, never the manifest itself — a crash
-    # between the renames leaves both .tmp (complete) and .old (complete)
-    # on disk for recovery. Local-FS calls are the same substitution seam
-    # as the rest of this module (real Iceberg swaps via the catalog).
-    kept_rows = kept.collect()
+    # between the renames leaves .tmp (complete) and .old (complete), and
+    # the next ``_manifest`` read rolls .tmp forward. Local-FS calls are
+    # the same substitution seam as the rest of this module (real Iceberg
+    # swaps via the catalog).
     tmp = snapshots_path(sink) + ".tmp"
     old = snapshots_path(sink) + ".old"
-    spark.createDataFrame(kept_rows, schema=SNAPSHOT_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)  # a crash before the 1st rename
+    _publish(pa.Table.from_pylist(kept, schema=SNAPSHOT_ARROW_SCHEMA), tmp)
     shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
     os.rename(snapshots_path(sink), old)
     os.rename(tmp, snapshots_path(sink))
@@ -812,15 +806,7 @@ def remove_orphan_runs(
     manifest); this walks the data dir instead. ``min_age_s`` (directory
     mtime) guards the race against a writer that is mid-commit right
     now — production callers keep a generous grace window."""
-    import shutil
-    import time
-
-    man = _read_manifest(spark, sink)
-    referenced: set[str] = (
-        set()
-        if man is None
-        else {r[0] for r in man.select("run_id").distinct().collect()}
-    )
+    referenced = {r["run_id"] for r in _manifest(sink)}
     removed: list[str] = []
     root = data_path(sink)
     if not os.path.isdir(root):

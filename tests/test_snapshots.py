@@ -8,6 +8,7 @@ so a crashed run can never corrupt the readable table — the property a
 
 import glob
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -96,7 +97,7 @@ def test_compaction_preserves_data_and_bounds_files(spark, corpus_pdf, tmp_path)
     assert _counts(live_after).equals(want), "compaction must be byte-preserving"
 
     # one data file per bucket in the compacted run
-    man = sink_io._read_manifest(spark, sink)
+    man = spark.read.parquet(sink_io.snapshots_path(sink))
     rid = (
         man.filter(F.col("snapshot_id") == snap_id)
         .select("run_id")
@@ -331,7 +332,7 @@ def test_merge_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert live[live.id == 0].score.isna().all()
 
     # untouched buckets still map to the base run — no rewrite happened
-    man = sink_io._read_manifest(spark, sink).filter(
+    man = spark.read.parquet(sink_io.snapshots_path(sink)).filter(
         F.col("snapshot_id") == sid
     ).toPandas()
     by_key = dict(zip(man.part_key, man.run_id))
@@ -393,7 +394,7 @@ def test_stats_pruned_read_skips_buckets_and_matches_full_scan(spark, tmp_path):
     sink_io.write_run_data(df, sink, "r1")
     sink_io.commit_snapshot(spark, sink, "r1", stats_cols=["id"])
 
-    man = sink_io._read_manifest(spark, sink)
+    man = spark.read.parquet(sink_io.snapshots_path(sink))
     rows = man.collect()
     assert all(r["stats"] for r in rows), rows  # every bucket got stats
     where = ("id", 250, 420)
@@ -432,7 +433,7 @@ def test_stats_carry_forward_and_null_stats_stay_readable(spark, tmp_path):
     sink_io.write_run_data(upd, sink, "r2")
     sink_io.commit_snapshot(spark, sink, "r2")
 
-    rows = sink_io._read_manifest(spark, sink).filter("snapshot_id = 2").collect()
+    rows = spark.read.parquet(sink_io.snapshots_path(sink)).filter("snapshot_id = 2").collect()
     by_key = {r["part_key"]: r["stats"] for r in rows}
     assert by_key[0] is None  # no stats asked for on r2
     assert by_key[1] is not None  # carried forward from r1's commit
@@ -462,7 +463,7 @@ def test_compaction_inherits_stats_and_sorts_within_buckets(spark, tmp_path):
     sink_io.commit_snapshot(spark, sink, "r1", stats_cols=["id"])
     sid = sink_io.compact_snapshot(spark, sink, sort_by=["id"])
 
-    rows = sink_io._read_manifest(spark, sink).filter(
+    rows = spark.read.parquet(sink_io.snapshots_path(sink)).filter(
         F.col("snapshot_id") == sid
     ).collect()
     assert rows and all(r["stats"] for r in rows), rows  # inherited, not null
@@ -707,3 +708,152 @@ def test_bucket_spec_publish_is_atomic(tmp_path):
         results = pool.map(_spec_race_worker, [sink] * 16)
     assert results == [8] * 16
     assert not [f for f in os.listdir(sink) if ".tmp." in f]  # no litter
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn``; return its result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _bucketed(spark, n=40, buckets=4, tag="x"):
+    return spark.range(n).selectExpr(
+        "id", f"cast(id % {buckets} as int) part_key", f"'{tag}' tag"
+    )
+
+
+def test_metadata_calls_run_no_spark_job(spark, tmp_path):
+    """The manifest is read and written on the driver: the pure metadata
+    calls plan no Spark job, and a commit without stats runs only the
+    data-plane schema reads of the new run and the live snapshot."""
+    sink = str(tmp_path / "sink")
+    for rid in ("r1", "r2"):
+        sink_io.write_run_data(_bucketed(spark, tag=rid), sink, rid)
+        sink_io.commit_snapshot(spark, sink, rid)
+    sink_io.write_run_data(_bucketed(spark), sink, "crashed")  # never committed
+    sink_io.write_run_data(_bucketed(spark), sink, "r3")
+
+    sid, jobs = _spark_jobs(spark, lambda: sink_io.commit_snapshot(spark, sink, "r3"))
+    assert sid == 3 and jobs <= 3
+    calls = {
+        "latest_snapshot_id": lambda: sink_io.latest_snapshot_id(spark, sink),
+        "run_id_committed": lambda: sink_io.run_id_committed(spark, sink, "r2"),
+        "remove_orphan_runs": lambda: sink_io.remove_orphan_runs(spark, sink, min_age_s=0),
+        "expire_snapshots": lambda: sink_io.expire_snapshots(spark, sink, keep_last=1),
+    }
+    results = {}
+    for name, call in calls.items():
+        results[name], jobs = _spark_jobs(spark, call)
+        assert jobs == 0, name
+    assert results == {
+        "latest_snapshot_id": 3,
+        "run_id_committed": True,
+        "remove_orphan_runs": ["crashed"],
+        "expire_snapshots": ["r1", "r2"],
+    }
+
+
+def test_unpublished_manifest_file_is_ignored(spark, tmp_path):
+    """A crash between writing and publishing a manifest file leaves a
+    ``_part-….parquet`` in ``_snapshots/``: no reader may see it, with or
+    without published files next to it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def plant(sink):
+        os.makedirs(sink_io.snapshots_path(sink), exist_ok=True)
+        row = {"snapshot_id": 99, "part_key": 0, "run_id": "ghost", "operation": "overwrite"}
+        pq.write_table(
+            pa.Table.from_pylist([row], schema=sink_io.SNAPSHOT_ARROW_SCHEMA),
+            os.path.join(sink_io.snapshots_path(sink), "_part-planted.parquet"),
+        )
+
+    only = str(tmp_path / "only")
+    plant(only)
+    assert sink_io.latest_snapshot_id(spark, only) is None
+    with pytest.raises(FileNotFoundError):
+        sink_io.read_snapshot(spark, only)
+
+    sink = str(tmp_path / "sink")
+    sink_io.write_run_data(_bucketed(spark), sink, "r1")
+    sink_io.commit_snapshot(spark, sink, "r1")
+    plant(sink)
+    assert sink_io.latest_snapshot_id(spark, sink) == 1
+    assert not sink_io.run_id_committed(spark, sink, "ghost")
+    assert sink_io.read_snapshot(spark, sink).count() == 40
+
+
+def test_legacy_spark_manifest_reads_and_carries_forward(spark, tmp_path):
+    """A manifest written by Spark before ``operation``/``stats`` existed
+    (INT96 ``committed_at``) still reads, carries forward through a new
+    commit, feeds ``read_incremental`` and survives expiry."""
+    import datetime
+
+    sink = str(tmp_path / "legacy")
+    sink_io.write_run_data(_bucketed(spark, tag="old"), sink, "r-old")
+    t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
+    spark.createDataFrame(
+        [(1, k, "r-old", t0) for k in range(4)],
+        "snapshot_id long, part_key int, run_id string, committed_at timestamp",
+    ).coalesce(1).write.parquet(sink_io.snapshots_path(sink))
+
+    assert sink_io.latest_snapshot_id(spark, sink) == 1
+    assert sink_io.read_snapshot(spark, sink).count() == 40
+    (snap,) = sink_io.list_snapshots(spark, sink).collect()
+    assert (snap["n_buckets"], snap["n_runs"], snap["operation"]) == (4, 1, "overwrite")
+
+    new = _bucketed(spark, tag="new").filter("part_key = 0")
+    sink_io.write_run_data(new, sink, "r-new")
+    assert sink_io.commit_snapshot(spark, sink, "r-new") == 2
+    live = sink_io.read_snapshot(spark, sink, 2).toPandas()
+    assert len(live) == 40
+    assert dict(live.groupby("part_key").tag.first()) == {0: "new", 1: "old", 2: "old", 3: "old"}
+    delta = sink_io.read_incremental(spark, sink, 1).toPandas()
+    assert set(delta.part_key) == {0} and set(delta.tag) == {"new"}
+
+    assert sink_io.expire_snapshots(spark, sink, keep_last=1) == []
+    assert sink_io.read_snapshot(spark, sink).count() == 40
+
+
+def test_interrupted_expire_rolls_forward(spark, tmp_path, monkeypatch):
+    """A crash between expire_snapshots' two renames leaves only
+    ``_snapshots.old`` and ``_snapshots.tmp``. The next read must roll the
+    complete .tmp forward — not see an empty table that the next commit
+    would replace with a mapping of only its own run."""
+    sink = str(tmp_path / "sink")
+    sink_io.write_run_data(_bucketed(spark), sink, "r1")
+    sink_io.commit_snapshot(spark, sink, "r1")
+    sink_io.write_run_data(_bucketed(spark), sink, "r2")
+    sink_io.commit_snapshot(spark, sink, "r2")
+    sink_io.write_run_data(_bucketed(spark).filter("part_key = 0"), sink, "r3")
+    sink_io.commit_snapshot(spark, sink, "r3")
+
+    real_rename = os.rename
+    calls = []
+
+    def dying_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", dying_rename)
+        with pytest.raises(OSError, match="crash between"):
+            sink_io.expire_snapshots(spark, sink, keep_last=1)
+    path = sink_io.snapshots_path(sink)
+    assert not os.path.isdir(path) and os.path.isdir(path + ".tmp")
+
+    assert sink_io.latest_snapshot_id(spark, sink) == 3
+    assert sink_io.read_snapshot(spark, sink).count() == 40
+    sink_io.write_run_data(_bucketed(spark).filter("part_key = 1"), sink, "r4")
+    assert sink_io.commit_snapshot(spark, sink, "r4") == 4
+    assert sink_io.read_snapshot(spark, sink).count() == 40

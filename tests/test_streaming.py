@@ -216,7 +216,7 @@ def test_incremental_extract_snapshot_appends_commits(spark, tmp_path):
     sink_io.compact_snapshot(spark, sink)
     after = sink_io.read_snapshot(spark, sink)
     assert after.count() == len(pdf)
-    man = sink_io._read_manifest(spark, sink)
+    man = spark.read.parquet(sink_io.snapshots_path(sink))
     latest = sink_io.latest_snapshot_id(spark, sink)
     per_bucket = (
         man.filter(F.col("snapshot_id") == latest)
