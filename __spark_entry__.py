@@ -442,8 +442,10 @@ def q_redact_pii(spark, sf_dir):
 def q_curate(spark, sf_dir):
     """The composed curation recipe (quality gate + language filter +
     exact-dup keep-first + decontamination) in one scale-first plan:
-    one projection over the scan, one keep-first agg, one broadcast
-    anti-join — the flagship 'what survives into training' query."""
+    one projection above the round-robin spread of the scan, one
+    keep-first agg that also applies the gate (so no Filter is pushed
+    into the single scan task), one broadcast anti-join — the flagship
+    'what survives into training' query."""
     docs = _docs(spark, sf_dir)
     eval_df = docs.filter(F.col("doc_id") % 50 == 0)
     return ts.curate(

@@ -32,12 +32,27 @@ def spread_scan(df, multiple: int = 2):
     backfill. Deterministic for every consumer here: the operators using
     it are per-row projections or key aggregations whose results are
     partitioning-independent (keyless repartition keeps Spark's
-    sort-before-repartition retry determinism)."""
+    sort-before-repartition retry determinism).
+
+    Caveat: the spread only helps the work planned ABOVE it. Catalyst
+    pushes a deterministic ``Filter`` on the returned frame through the
+    ``Repartition``, so a filter whose predicate is the expensive part
+    (a quality or language gate) runs below the spread, in the scan's
+    single task; fold such a gate into an aggregate instead (see
+    ``textstats.curate``).
+
+    The probe runs no Spark job: a partition count the physical plan
+    already states (an explicit repartition — e.g. a frame this function
+    spread before — or a bucketed scan) is read from the plan; only an
+    unknown one (a plain file scan) asks the RDD, which lists file splits
+    on the driver. ``df.rdd`` over a frame holding an exchange would
+    materialize that exchange under AQE."""
     try:
         if df.isStreaming:
             return df
         cores = df.sparkSession.sparkContext.defaultParallelism
-        n = df.rdd.getNumPartitions()
+        planned = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+        n = planned.numPartitions() or df.rdd.getNumPartitions()
     except Exception:
         return df
     if n >= cores:

@@ -458,18 +458,27 @@ def curate(
     benchmark decontamination, composed scale-first.
 
     Plan shape (100 TB): quality, language, and the content key are ALL
-    column expressions, so they compute in ONE projection over one scan —
-    never N self-joins of the corpus. The keep-first representative comes
-    straight out of the hash-agg via ``min_by(struct(...), id)`` (the
+    column expressions, so they compute in ONE projection over the spread
+    scan — never N self-joins of the corpus. The keep-first representative
+    comes straight out of the hash-agg via ``min_by(struct(...), id)`` (the
     exact_dedup_rows idiom), so the gated projection runs ONCE: the
     previous groupBy-min + semi-join shape evaluated the quality/lang/md5
     projection over the corpus twice (no runtime exchange reuse; plan
-    diff in plans/r06/q_curate_*.txt). The only shuffles are that agg on
-    the 32-char content key and contamination's count agg; the eval
-    shingle set broadcasts. Filter-THEN-dedup order: the group
+    diff in plans/r06/q_curate_*.txt). Besides the spread, the only
+    shuffles are that agg on the 32-char content key and contamination's count agg; the eval
+    shingle set broadcasts. Gate-THEN-dedup order: the group
     representative is the min id among PASSING copies — picking it before
     the gate would drop a content group entirely whenever its global-min
-    copy happens to fail quality/lang while another copy passes."""
+    copy happens to fail quality/lang while another copy passes.
+
+    The gate lives INSIDE that agg (``min_by`` over ``when(passing, …)``,
+    kept when ``bool_or(passing)``), not in a ``Filter`` over the
+    projection: Catalyst pushes a deterministic Filter through the
+    Project and the round-robin ``Repartition`` of ``spread_scan``, so the
+    whole quality/lang gate would run in the single scan task of a
+    one-file corpus — and then again above the exchange. Nothing
+    filterable sits above the spread now, so every per-row expression
+    runs once, on all spread tasks."""
     from . import spread_scan
     from .dedup import contamination, norm_md5
 
@@ -495,17 +504,21 @@ def curate(
         ).alias("pred_lang"),
         F.col("content_key"),
     )
-    passing = base.filter(
-        (F.col("quality") >= min_quality) & F.col("pred_lang").isin(list(langs))
-    )
+    # a gate, not a Filter: see the docstring
+    passing = (F.col("quality") >= min_quality) & F.col("pred_lang").isin(list(langs))
     reps = (
-        passing.groupBy("content_key")
+        base.groupBy("content_key")
         .agg(
             F.min_by(
-                F.struct(F.col(id_col), F.col("quality"), F.col("pred_lang")),
-                F.col(id_col),
-            ).alias("_row")
+                F.when(
+                    passing,
+                    F.struct(F.col(id_col), F.col("quality"), F.col("pred_lang")),
+                ),
+                F.when(passing, F.col(id_col)),
+            ).alias("_row"),
+            F.bool_or(passing).alias("_any_passing"),
         )
+        .filter("_any_passing")
         .select("_row.*")
     )
     bad = contamination(

@@ -39,6 +39,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 #: The lineage row, declared once. ``append_lineage`` takes rows of every
 #: field but the last and stamps ``finished_at`` itself.
@@ -215,6 +216,51 @@ def write_run_data(df: DataFrame, sink: str, run_id: str) -> None:
     ).parquet(run_data_path(sink, run_id))
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_MARKER = ".commit-"
+
+
+def _run_buckets(run_dir: str) -> list[int]:
+    """The part_keys a run directory holds ([] when it has none)."""
+    if not os.path.isdir(run_dir):
+        return []
+    return sorted(
+        int(n.split("=", 1)[1]) for n in os.listdir(run_dir) if n.startswith("part_key=")
+    )
+
+
+def _read_run(spark: SparkSession, sink: str, run_id: str) -> DataFrame:
+    """One run directory as a DataFrame, its schema read on the driver
+    from the footer of one data file (``spark.read.parquet`` infers it
+    with a Spark job per run). Spark stores its own row schema in every
+    footer it writes, so the types are exactly what inference gives; the
+    bucket directories add ``part_key`` as partition discovery types it.
+    A run without buckets (or without a directory) is left to Spark."""
+    run_dir = run_data_path(sink, run_id)
+    keys = _run_buckets(run_dir)
+    if not keys:
+        return spark.read.parquet(run_dir)
+    bucket = os.path.join(run_dir, f"part_key={keys[0]}")
+    name = min(n for n in os.listdir(bucket) if not n.startswith(("_", ".")))
+    footer = pq.read_schema(os.path.join(bucket, name))
+    data = StructType.fromJson(json.loads(footer.metadata[_SPARK_ROW_METADATA]))
+    schema = StructType([*data.fields, StructField("part_key", IntegerType())])
+    return spark.read.schema(schema).parquet(run_dir)
+
+
+def _highest_claimed_id(sink: str) -> int:
+    """The highest snapshot id a ``.commit-N`` marker claims (0 when none).
+    Markers outlive the manifest rows they guarded — ``expire_snapshots``
+    carries the highest forward — so a new id is never one used before."""
+    try:
+        names = os.listdir(snapshots_path(sink))
+    except FileNotFoundError:
+        return 0
+    return max(
+        (int(n[len(_MARKER):]) for n in names if n.startswith(_MARKER)), default=0
+    )
+
+
 def _manifest(sink: str) -> list[dict]:
     """Every manifest row of ``sink`` ([] when nothing is committed).
     ``expire_snapshots`` swaps the manifest directory with two renames;
@@ -337,8 +383,7 @@ def commit_snapshot(
     TYPE differs from the live snapshot's fails here (fail fast, one
     writer) instead of at some future reader's union; added and missing
     columns remain legal (add-column evolution, NULL-filled)."""
-    run_dir = run_data_path(sink, run_id)
-    run_df = spark.read.parquet(run_dir)
+    run_df = _read_run(spark, sink, run_id)
     _check_schema_compatible(spark, sink, run_df.schema, f"run {run_id}")
     if stats_cols:
         per_col = [
@@ -355,11 +400,7 @@ def commit_snapshot(
         }
     else:
         # partition-column only: the run's part_key= directory names
-        new_stats = {
-            int(name.split("=", 1)[1]): None
-            for name in os.listdir(run_dir)
-            if name.startswith("part_key=")
-        }
+        new_stats = dict.fromkeys(_run_buckets(run_data_path(sink, run_id)))
     # Optimistic concurrency on the snapshot id: an O_EXCL marker file
     # arbitrates each id, so two concurrent committers can never both
     # publish rows under the same snapshot_id (which would make that
@@ -395,12 +436,14 @@ def commit_snapshot(
                 frag.setdefault(r["part_key"], []).append(r["stats"])
             stats = {k: _merge_fragment_stats(frag.get(k)) for k in new_stats}
         # probe FORWARD past claimed ids: a marker whose manifest file never
-        # landed (crashed committer) must not pin the retry loop to one id —
-        # ids may skip, exactly as Iceberg burns ids on failed commits
-        snap_id = max(parent_id + 1, snap_id + 1)
+        # landed (crashed committer) must not pin the retry loop to one id,
+        # and a marker that outlived its expired snapshot must not hand its
+        # id out again — ids may skip, exactly as Iceberg burns ids on
+        # failed commits, but are never reused
+        snap_id = max(parent_id, snap_id, _highest_claimed_id(sink)) + 1
         # only after _manifest: an empty _snapshots/ would block its roll-forward
         os.makedirs(snapshots_path(sink), exist_ok=True)
-        marker = os.path.join(snapshots_path(sink), f".commit-{snap_id}")
+        marker = os.path.join(snapshots_path(sink), f"{_MARKER}{snap_id}")
         try:
             os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
         except FileExistsError as err:
@@ -518,7 +561,7 @@ def _read_mapping(spark: SparkSession, sink: str, pairs: list[tuple[str, int]]):
         by_run.setdefault(rid, []).append(key)
     parts = []
     for rid, keys in sorted(by_run.items()):
-        df = spark.read.parquet(run_data_path(sink, rid))
+        df = _read_run(spark, sink, rid)
         parts.append(df.filter(F.col("part_key").isin(keys)))
     out = parts[0]
     for p in parts[1:]:
@@ -719,10 +762,16 @@ def expire_snapshots(spark: SparkSession, sink: str, keep_last: int = 1) -> list
     # the next ``_manifest`` read rolls .tmp forward. Local-FS calls are
     # the same substitution seam as the rest of this module (real Iceberg
     # swaps via the catalog).
+    # The highest id marker moves with the manifest, so a commit after
+    # expiring everything still numbers past every id ever handed out.
     tmp = snapshots_path(sink) + ".tmp"
     old = snapshots_path(sink) + ".old"
     shutil.rmtree(tmp, ignore_errors=True)  # a crash before the 1st rename
     _publish(pa.Table.from_pylist(kept, schema=SNAPSHOT_ARROW_SCHEMA), tmp)
+    claimed = _highest_claimed_id(sink)
+    if claimed:
+        marker = os.path.join(tmp, f"{_MARKER}{claimed}")
+        os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
     shutil.rmtree(old, ignore_errors=True)  # leftover from a prior crash
     os.rename(snapshots_path(sink), old)
     os.rename(tmp, snapshots_path(sink))

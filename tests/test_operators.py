@@ -946,6 +946,61 @@ def test_curate_keeps_group_when_passing_copy_exists(spark):
     assert 2 in kept  # the passing copy survives its failing twin
 
 
+def _curate_filter_then_min_by(df, eval_df, min_quality=0.5, langs=("en",)):
+    """curate's earlier formulation: gate the rows with a Filter, then
+    take the min-id passing row per content key — the parity reference
+    for the gate that now lives inside the keep-first aggregate."""
+    best = textstats.best_lang_struct("text")
+    base = df.select(
+        "doc_id",
+        textstats.quality_expr("text").alias("quality"),
+        F.when(best["score"] > 0, best["lang"]).alias("pred_lang"),
+        dedup.norm_md5("text").alias("content_key"),
+    )
+    reps = (
+        base.filter((F.col("quality") >= min_quality) & F.col("pred_lang").isin(list(langs)))
+        .groupBy("content_key")
+        .agg(F.min_by(F.struct("doc_id", "quality", "pred_lang"), "doc_id").alias("_row"))
+        .select("_row.*")
+    )
+    bad = dedup.contamination(df, eval_df).select("doc_id")
+    return reps.join(bad, "doc_id", "left_anti")
+
+
+def test_curate_gate_in_aggregate_matches_filter_then_min_by(spark):
+    """The gate evaluated inside the keep-first agg keeps exactly the rows
+    of filter-then-min_by: null quality, a failing min-id copy beside a
+    passing one, an all-failing group, null doc_ids and a non-en copy."""
+    # qualities: good 0.70 (its caps copy 0.45), other 0.75, german 0.75
+    # (pred_lang 'de'), "NO NO NO" 0.075
+    good = "the quick brown fox jumps over lazy dog"
+    other = "it is the end of the line for that old train"
+    german = "der hund und die katze ist nicht mit dem auto zu der stadt gefahren"
+    rows = [
+        (1, good.upper()),  # fails quality; min id of good's group
+        (2, good),  # passing representative
+        (None, good),  # null-id copy of a passing group
+        (3, "NO NO NO"),  # an all-failing group ...
+        (4, "NO NO NO"),
+        (5, None),  # null text: null quality, null pred_lang
+        (6, german),  # passes quality, pred_lang 'de'
+        (None, other),  # a group whose only passing copy has a null id
+        (7, "words for this line say it is the last one in the set"),
+        (8, "the river ran to the sea and it was cold in the north"),  # contaminated
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    eval_df = spark.createDataFrame(
+        [(100, "the river ran to the sea")], "doc_id long, text string"
+    )
+    got = sorted(map(tuple, textstats.curate(df, eval_df).collect()), key=repr)
+    want = sorted(map(tuple, _curate_filter_then_min_by(df, eval_df).collect()), key=repr)
+    assert got == want
+    kept = {r[0] for r in got}
+    assert 2 in kept and 1 not in kept  # the passing copy represents its group
+    assert not kept & {3, 4, 5, 6, 8}  # failing, null, non-en, contaminated
+    assert (None, None, None) in got  # null-id-only group: same as before
+
+
 def test_sampling_ops_use_decorrelated_hashes(spark):
     """hash_split over a hash_sample'd corpus must still produce every
     split: with one shared unsalted id-hash, the sampled rows are exactly

@@ -207,15 +207,68 @@ def test_hash_ops_are_pure_projections(spark):
 
 
 def test_curate_plan_shape(spark):
-    """One scan-side projection computes quality+lang+content key (no
-    corpus self-join for the scalar gates); the eval shingles broadcast;
-    nothing falls back to per-row Python or a cartesian product."""
+    """One projection above the spread computes quality+lang+content key
+    (no corpus self-join for the scalar gates); the eval shingles
+    broadcast; nothing falls back to per-row Python or a cartesian
+    product."""
     import __spark_entry__ as e
 
     plan = _plan(e.q_curate(spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn``; return its result and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curate_gate_runs_once_above_the_spread(spark):
+    """The quality/lang gate is not a Filter Catalyst can push through the
+    round-robin spread into the single scan task: the scan feeds the
+    exchange directly, and the quality lambda is computed once on the
+    curate path (above the exchange, not again below it)."""
+    import __spark_entry__ as e
+
+    plan = _plan(e.q_curate(spark, SF))
+    tree, details = plan.split("\n\n", 1)
+    blocks = [b.strip() for b in details.split("\n\n")]
+    detail = {int(b[1 : b.index(")")]): b for b in blocks if b.startswith("(")}
+    # the curate path is the anti-join's left child; the broadcast right
+    # child is the contamination pass. Tree lines end in "(node id)".
+    main = tree.split("+- BroadcastExchange", 1)[0].splitlines()
+    nodes = [(l, int(l.rsplit("(", 1)[1][:-1])) for l in main if l.endswith(")")]
+    spread = max(i for i, (l, _) in enumerate(nodes) if "Exchange (" in l)
+    assert "RoundRobinPartitioning" in detail[nodes[spread][1]], plan
+    assert not any("Filter (" in l for l, _ in nodes[spread + 1 :]), plan
+    # quality's mean-word-length lambda is computed by one node only (the
+    # gate pushed below the spread used to compute it a second time)
+    assert sum("aggregate(" in detail[n] for _, n in nodes) == 1, plan
+
+
+def test_curate_builds_without_a_spark_job(spark):
+    """Building curate's DataFrame plans only: spread_scan reads a frame's
+    partition count from the plan, so re-spreading the frame curate
+    already spread (the contamination pass) materializes nothing."""
+    from artexin_spark.operators import textstats
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    eval_df = docs.filter("doc_id % 50 = 0")
+    df, jobs = _spark_jobs(spark, lambda: textstats.curate(docs, eval_df))
+    assert jobs == 0
+    assert df.count() > 0
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):

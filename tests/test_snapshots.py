@@ -731,9 +731,9 @@ def _bucketed(spark, n=40, buckets=4, tag="x"):
 
 
 def test_metadata_calls_run_no_spark_job(spark, tmp_path):
-    """The manifest is read and written on the driver: the pure metadata
-    calls plan no Spark job, and a commit without stats runs only the
-    data-plane schema reads of the new run and the live snapshot."""
+    """The manifest is read and written on the driver and run schemas come
+    from parquet footers: the metadata calls and a commit without stats
+    plan no Spark job."""
     sink = str(tmp_path / "sink")
     for rid in ("r1", "r2"):
         sink_io.write_run_data(_bucketed(spark, tag=rid), sink, rid)
@@ -742,7 +742,7 @@ def test_metadata_calls_run_no_spark_job(spark, tmp_path):
     sink_io.write_run_data(_bucketed(spark), sink, "r3")
 
     sid, jobs = _spark_jobs(spark, lambda: sink_io.commit_snapshot(spark, sink, "r3"))
-    assert sid == 3 and jobs <= 3
+    assert sid == 3 and jobs == 0
     calls = {
         "latest_snapshot_id": lambda: sink_io.latest_snapshot_id(spark, sink),
         "run_id_committed": lambda: sink_io.run_id_committed(spark, sink, "r2"),
@@ -857,3 +857,37 @@ def test_interrupted_expire_rolls_forward(spark, tmp_path, monkeypatch):
     sink_io.write_run_data(_bucketed(spark).filter("part_key = 1"), sink, "r4")
     assert sink_io.commit_snapshot(spark, sink, "r4") == 4
     assert sink_io.read_snapshot(spark, sink).count() == 40
+
+
+def test_snapshot_ids_are_never_reused_after_full_expiry(spark, tmp_path):
+    """Expiring every snapshot must not hand id 1 out again: a consumer
+    holding an expired ``since_snapshot_id`` has to get the "expired"
+    error, not a delta against a different snapshot under the same id."""
+    sink = str(tmp_path / "sink")
+    for rid in ("r1", "r2", "r3"):
+        sink_io.write_run_data(_bucketed(spark, tag=rid), sink, rid)
+        sink_io.commit_snapshot(spark, sink, rid)
+    assert sorted(sink_io.expire_snapshots(spark, sink, keep_last=0)) == ["r1", "r2", "r3"]
+    sink_io.write_run_data(_bucketed(spark, tag="r4"), sink, "r4")
+    assert sink_io.commit_snapshot(spark, sink, "r4") > 3
+    with pytest.raises(ValueError, match="expired"):
+        sink_io.read_incremental(spark, sink, since_snapshot_id=1)
+    assert sink_io.read_snapshot(spark, sink).count() == 40
+
+
+def test_read_snapshot_of_many_runs_infers_no_schema(spark, tmp_path):
+    """Each run's schema comes from one parquet footer read on the driver:
+    reading a snapshot built by 4 append commits plans no Spark job, and
+    the schema is exactly what Spark's own inference gives."""
+    sink = str(tmp_path / "sink")
+    for i in range(4):
+        rid = f"r{i}"
+        run = _bucketed(spark, tag=rid).withColumn("ts", F.current_timestamp())
+        sink_io.write_run_data(run, sink, rid)
+        sink_io.commit_snapshot(spark, sink, rid, operation="append")
+    df, jobs = _spark_jobs(spark, lambda: sink_io.read_snapshot(spark, sink))
+    assert jobs == 0
+    inferred = spark.read.parquet(sink_io.run_data_path(sink, "r0")).schema
+    assert df.schema == inferred
+    assert df.count() == 160
+    assert sorted(r.tag for r in df.select("tag").distinct().collect()) == ["r0", "r1", "r2", "r3"]
