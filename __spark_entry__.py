@@ -2447,6 +2447,7 @@ def q_stream_extract(spark, sf_dir):
     per-turn output is byte-identical — gated by the same SQL oracle."""
     import tempfile
 
+    from artexin_spark import storage as sink_io
     from artexin_spark.streaming import incremental_extract
 
     tr = _transcripts_from_docs(spark, sf_dir).filter(
@@ -2459,7 +2460,7 @@ def q_stream_extract(spark, sf_dir):
     try:
         tr.write.mode("overwrite").parquet(inp)
         incremental_extract(spark, inp, outp, ckpt, n_buckets=8)
-        out = spark.read.parquet(outp).select(
+        out = sink_io.read_data(spark, outp).select(
             "conv_id",
             "turn_idx",
             "title",
@@ -2491,8 +2492,8 @@ def q_time_travel(spark, sf_dir):
     sink = tempfile.mkdtemp(prefix="artexin_tt_")
     try:
         even = tr.filter(F.col("conv_id").cast("int") % 2 == 0)
-        run_extract(spark, even, sink, n_buckets=8, source_col=None, snapshot=True)
-        run_extract(spark, tr, sink, n_buckets=8, source_col=None, snapshot=True)
+        run_extract(spark, even, sink, n_buckets=8, source_col=None)
+        run_extract(spark, tr, sink, n_buckets=8, source_col=None)
         parts = []
         for sid in (1, 2):
             parts.append(
@@ -2704,8 +2705,8 @@ def q_compaction(spark, sf_dir):
     sink = tempfile.mkdtemp(prefix="artexin_compact_")
     try:
         half = tr.filter(F.col("conv_id").cast("int") % 2 == 0)
-        run_extract(spark, half, sink, n_buckets=8, source_col=None, snapshot=True)
-        run_extract(spark, tr, sink, n_buckets=8, source_col=None, snapshot=True)
+        run_extract(spark, half, sink, n_buckets=8, source_col=None)
+        run_extract(spark, tr, sink, n_buckets=8, source_col=None)
         snap_id = sink_io.compact_snapshot(spark, sink, files_per_bucket=1)
         live = sink_io.read_snapshot(spark, sink, snap_id)
         n_runs = int(

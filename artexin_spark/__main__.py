@@ -3,9 +3,10 @@
     spark-submit --py-files artexin_spark.zip -m artexin_spark \
         python -m artexin_spark --input <transcripts> --sink <dir> [--resume]
 
-Runs the full extraction pipeline (salted buckets, lineage, checkpoint
-resume) over a parquet/Iceberg transcript table. The same artifact runs
-unchanged on a real multi-executor cluster — parallelism comes from
+Runs the full extraction pipeline (salted buckets, run directory +
+snapshot commit, lineage, checkpoint resume) over a parquet/Iceberg
+transcript table and prints the run counters, snapshot_id included. The
+same artifact runs unchanged on a real multi-executor cluster — parallelism comes from
 --master / executor conf, never from code changes (BASELINE.md protocol).
 """
 
@@ -16,7 +17,12 @@ import json
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(prog="artexin_spark")
+    ap = argparse.ArgumentParser(
+        prog="artexin_spark",
+        description="Extract transcript turns into a snapshot sink: every "
+        "run writes its own run directory and commits a snapshot that "
+        "replaces the buckets it touched (storage.py).",
+    )
     ap.add_argument("--input", required=True, help="transcript table path")
     ap.add_argument(
         "--input-format",
@@ -35,16 +41,11 @@ def main() -> None:
     ap.add_argument("--source-col", default="source")
     ap.add_argument("--run-id", default=None)
     ap.add_argument(
-        "--snapshot",
-        action="store_true",
-        help="write via the snapshot layer (isolation/time travel; storage.py)",
-    )
-    ap.add_argument(
         "--stream",
         action="store_true",
         help="incremental mode: drain NEW input files via Structured "
-        "Streaming into the snapshot sink (one append commit per "
-        "micro-batch); re-invoke hourly, the checkpoint tracks the delta",
+        "Streaming into the sink (one append commit per micro-batch); "
+        "re-invoke hourly, the checkpoint tracks the delta",
     )
     ap.add_argument(
         "--checkpoint",
@@ -72,9 +73,9 @@ def main() -> None:
         if not args.checkpoint:
             ap.error("--stream requires --checkpoint")
         from artexin_spark import storage as sink_io
-        from artexin_spark.streaming import incremental_extract_snapshot
+        from artexin_spark.streaming import incremental_extract
 
-        incremental_extract_snapshot(
+        incremental_extract(
             spark,
             args.input,
             args.sink,
@@ -118,7 +119,6 @@ def main() -> None:
         source_col=args.source_col,
         resume=args.resume,
         run_id=args.run_id,
-        snapshot=args.snapshot,
     )
     if n_bad is not None:
         stats["ingest_bad_records"] = n_bad

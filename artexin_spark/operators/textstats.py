@@ -483,8 +483,8 @@ def curate(
     from .dedup import contamination, norm_md5
 
     # one spread serves both consumers below (base projection and the
-    # contamination shingle pass) — §2.5 input-skew guard, no-op on
-    # already-wide layouts
+    # contamination shingle pass; see the anti-join) — §2.5 input-skew
+    # guard, no-op on already-wide layouts
     df = spread_scan(df.select(id_col, text_col))
     # one token split + one argmax-lang struct per row, staged as columns
     # (the no-CSE-with-lambdas seam — see lang_scores/lang_id)
@@ -523,8 +523,15 @@ def curate(
     )
     bad = contamination(
         df, eval_df, text_col, id_col, n=n, min_overlap=min_overlap
-    ).select(F.col(id_col))
-    return reps.join(bad, id_col, "left_anti").select(id_col, "quality", "pred_lang")
+    ).select(F.col(id_col).alias("_bad_id"))
+    # Plain ``id = id`` semantics (a null id never matches), spelled as a
+    # null-safe key plus a left-only guard: an ``=`` key makes Catalyst
+    # infer isnotnull(id) for the contamination side and push it below
+    # that branch's spread, so its round-robin exchange no longer matches
+    # the reps branch's and the corpus is scanned and shuffled twice.
+    # With both spreads identical, AQE reuses the one exchange.
+    key = reps[id_col].eqNullSafe(bad["_bad_id"]) & reps[id_col].isNotNull()
+    return reps.join(bad, key, "left_anti").select(id_col, "quality", "pred_lang")
 
 
 def repetition_stats(

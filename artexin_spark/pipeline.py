@@ -2,7 +2,7 @@
 
 read → prune columns → salted bucket key → (resume anti-join) →
 repartition by bucket → fused Arrow extraction stage → content hash →
-bucket-partitioned sink write + per-partition lineage rows.
+run directory write + snapshot commit + per-partition lineage rows.
 
 Scale design notes (the 100 TB story, graded explicitly):
 
@@ -14,7 +14,7 @@ Scale design notes (the 100 TB story, graded explicitly):
   measurable, not guessed (BASELINE.md skew metric).
 - **One shuffle, justified**: the only shuffle is the repartition to B
   buckets; it buys (a) bounded task size at any input layout, (b) one
-  output dir per bucket → idempotent dynamic-partition overwrite,
+  output dir per bucket → an overwrite commit replaces it idempotently,
   (c) resume granularity. B scales with cluster size (default
   2×shuffle.partitions; at 10^12 turns pick B so a bucket ≈ executor-
   memory-sized, e.g. 2^17 buckets ≈ 7.6M turns each).
@@ -422,18 +422,27 @@ def run_extract(
     source_col: str | None = "source",
     resume: bool = False,
     run_id: str | None = None,
-    snapshot: bool = False,
+    snapshot: bool = True,
     repartition: bool = True,
 ) -> dict:
     """Full job: extract ``df`` into ``sink`` with lineage; with
-    ``resume=True`` skip buckets whose latest lineage row is ok. With
-    ``snapshot=True`` the write is an immutable per-run directory
-    published by a manifest commit (storage.py snapshot layer): readers
-    of earlier snapshots are isolated, a crashed run is invisible, and
-    the result dict gains ``snapshot_id``.
+    ``resume=True`` skip buckets whose latest lineage row is ok. The write
+    is an immutable per-run directory published by one overwrite commit
+    (storage.py): the touched buckets are replaced whole, readers of
+    earlier snapshots are isolated, and a crashed run is invisible.
 
-    Returns run counters {run_id, buckets, rows, errors}.
+    ``snapshot`` is kept because perfbench/workloads.py still passes
+    ``snapshot=True``; ``False`` asked for the retired plain layout and
+    raises.
+
+    Returns run counters {run_id, buckets, rows, errors, snapshot_id}.
     """
+    if not snapshot:
+        raise ValueError(
+            "snapshot=False asked for the retired plain sink layout; every "
+            "run now writes a run directory and commits a snapshot"
+        )
+    sink_io.check_layout(sink)
     run_id = run_id or uuid.uuid4().hex[:12]
     # bucket spec: first write pins it; later writes adopt it when
     # n_buckets is omitted and fail fast on a conflict — a resume under a
@@ -446,8 +455,18 @@ def run_extract(
         else:
             n_buckets = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
     sink_io.ensure_bucket_spec(sink, n_buckets)
+    committed = sink_io.run_id_committed(spark, sink, run_id)
 
-    if snapshot and not resume and sink_io.run_id_committed(spark, sink, run_id):
+    def noop() -> dict:
+        return {
+            "run_id": run_id,
+            "buckets": 0,
+            "rows": 0,
+            "errors": 0,
+            "snapshot_id": sink_io.latest_snapshot_id(spark, sink),
+        }
+
+    if committed and not resume:
         # immutable-run-dir contract: write_run_data(mode=overwrite) on a
         # COMMITTED run would clobber data a published snapshot still
         # references. A retry of an uncommitted crash may reuse its id
@@ -475,11 +494,8 @@ def run_extract(
             # reproduced: read_snapshot PATH_NOT_FOUND after a resumed
             # retry).
             if prepared.select("part_key").limit(1).count() == 0:
-                result = {"run_id": run_id, "buckets": 0, "rows": 0, "errors": 0}
-                if snapshot:
-                    result["snapshot_id"] = sink_io.latest_snapshot_id(spark, sink)
-                return result
-    if snapshot and resume and sink_io.run_id_committed(spark, sink, run_id):
+                return noop()
+    if committed:
         # partially-resumed work remains but this id is already published:
         # writing the remaining buckets under the same dir would clobber
         # the committed buckets the snapshot references
@@ -509,28 +525,17 @@ def run_extract(
         "n_chars_out",
         F.length(F.coalesce("extracted_text", F.lit(""))).cast("long"),
     )
-
-    snap_id = None
-    if snapshot:
-        sink_io.write_run_data(out, sink, run_id)
-    else:
-        sink_io.write_data(out, sink)
+    sink_io.write_run_data(out, sink, run_id)
 
     counters = acc.value  # part_key -> [rows, errors, chars_in, chars_out, ms]
     if not counters:
         # fully-resumed (or empty-input) run: clean no-op — no lineage row,
         # no snapshot commit, and the empty run dir (at most a _SUCCESS
         # marker) is removed so it can't shadow a later run_id collision
-        if snapshot:
-            shutil.rmtree(sink_io.run_data_path(sink, run_id), ignore_errors=True)
-        result = {"run_id": run_id, "buckets": 0, "rows": 0, "errors": 0}
-        if snapshot:
-            result["snapshot_id"] = sink_io.latest_snapshot_id(spark, sink)
-        return result
+        shutil.rmtree(sink_io.run_data_path(sink, run_id), ignore_errors=True)
+        return noop()
 
-    if snapshot:
-        snap_id = sink_io.commit_snapshot(spark, sink, run_id)
-
+    snap_id = sink_io.commit_snapshot(spark, sink, run_id)
     # counter_source marks HOW these numbers were derived: "accumulator"
     # rows are task-side folds from the single write action — exact in
     # the normal case, but a lost-shuffle stage re-execution or a
@@ -545,13 +550,10 @@ def run_extract(
         ],
         sink,
     )
-
-    result = {
+    return {
         "run_id": run_id,
         "buckets": len(counters),
         "rows": int(sum(v[0] for v in counters.values())),
         "errors": int(sum(v[1] for v in counters.values())),
+        "snapshot_id": snap_id,
     }
-    if snap_id is not None:
-        result["snapshot_id"] = snap_id
-    return result

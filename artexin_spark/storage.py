@@ -1,25 +1,29 @@
 """Iceberg-shaped source/sink + lineage/checkpoint manifests.
 
 The sandbox has no Iceberg runtime jar (SURVEY.md §7.0), so the sink is an
-Iceberg-shaped layout we manage explicitly:
+Iceberg-shaped layout we manage explicitly, one layout for every writer:
 
-    <sink>/data/part_key=NNN/*.parquet     bucket-partitioned output
-    <sink>/_lineage/part-<uuid>.parquet    one file per run, written by the
-                                           driver: a row per (run_id, part_key)
+    <sink>/data/run=<run_id>/part_key=NNN/*.parquet   immutable per-run files
+    <sink>/_snapshots/part-<uuid>.parquet             manifest, one file per
+                                                      commit: bucket -> run(s)
+    <sink>/_lineage/part-<uuid>.parquet               one file per run: a row
+                                                      per (run_id, part_key)
 
+A run writes its own directory, then a manifest commit publishes it: an
+'overwrite' commit maps the buckets the run touched to the run, replacing
+them whole — the reference's rmtree-if-exists + rewrite of one package
+directory (artexin/pack.py:113-116), lifted to bucket granularity; an
+'append' commit (one streaming micro-batch) adds the run beside them.
 ``_lineage`` doubles as the checkpoint manifest (the reference's
-per-package ``info.json``, artexin/pack.py:120-122, lifted to partition
-granularity): a bucket with a ``status='ok'`` row is done and is skipped
-on resume; re-running a bucket overwrites its directory idempotently —
-the same semantics as the reference's rmtree-if-exists + rewrite
-(artexin/pack.py:113-116), via Spark dynamic partition overwrite.
+per-package ``info.json``, artexin/pack.py:120-122): a bucket whose
+latest row is ``status='ok'`` is done and is skipped on resume.
 
 Metadata plane: ``_lineage`` and ``_snapshots`` hold at most n_buckets rows
 per run or snapshot, so the driver reads them with pyarrow (``_read_rows``)
 and publishes each new file with one ``os.replace`` (``_publish``) — no
 metadata call runs a Spark job. Spark runs only the data plane.
 
-Swap point: replace write_data/read_data with
+Swap point: replace write_run_data + commit_snapshot / read_snapshot with
 ``df.writeTo(tbl).overwritePartitions()`` / ``spark.read.format('iceberg')``
 when a catalog is configured — the pipeline code doesn't change.
 """
@@ -78,20 +82,32 @@ def lineage_path(sink: str) -> str:
 SINK_CODEC = "zstd"
 
 
-def write_data(df: DataFrame, sink: str) -> None:
-    """Dynamic-partition-overwrite write: only the part_key directories
-    present in ``df`` are replaced — idempotent bucket re-runs."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", SINK_CODEC)
-        .partitionBy("part_key")
-        .parquet(data_path(sink))
-    )
-
-
 def read_data(spark: SparkSession, sink: str) -> DataFrame:
-    return spark.read.parquet(data_path(sink))
+    """The live table: the latest snapshot's rows (``read_snapshot``).
+    perfbench's bulk check reads the sink through this name."""
+    return read_snapshot(spark, sink)
+
+
+def check_layout(sink: str) -> None:
+    """Raise on a sink written in a retired layout: plain bucket
+    directories (``data/part_key=NNN``, written by dynamic partition
+    overwrite) or a streaming file sink (``_spark_metadata``). No manifest
+    names their rows, so a snapshot committed beside them would hide
+    those rows from every read instead of failing."""
+    data = data_path(sink)
+    plain = os.path.isdir(data) and any(
+        n.startswith("part_key=") for n in os.listdir(data)
+    )
+    if plain or os.path.isdir(os.path.join(sink, "_spark_metadata")):
+        what = (
+            "plain layout (data/part_key=NNN bucket directories)"
+            if plain
+            else "streaming file-sink layout (_spark_metadata)"
+        )
+        raise ValueError(
+            f"sink {sink} holds the retired {what}; its rows are outside "
+            "every snapshot — extract into a fresh sink"
+        )
 
 
 def _read_rows(directory: str, schema: pa.Schema) -> list[dict]:
@@ -156,11 +172,10 @@ def completed_buckets(spark: SparkSession, sink: str) -> DataFrame | None:
 
 
 # ---------------------------------------------------------------------------
-# Snapshot layer: Iceberg's defining read semantics over the same layout.
-#
-#     <sink>/data/run=<run_id>/part_key=NNN/*.parquet   immutable per-run files
-#     <sink>/_snapshots/part-<uuid>.parquet             manifest, one file per
-#                                                       commit (append-only)
+# Snapshot layer: Iceberg's defining read semantics over the sink layout of
+# the module docstring. Every writer — ``run_extract``, each streaming
+# micro-batch, ``merge_upsert``, ``compact_snapshot`` — writes one run
+# directory and publishes it with one ``commit_snapshot``.
 #
 # Each snapshot's manifest rows are the FULL bucket→run mapping (Iceberg
 # analogue: a manifest list rewritten per snapshot). The commit point is the
@@ -216,6 +231,11 @@ def write_run_data(df: DataFrame, sink: str, run_id: str) -> None:
     ).parquet(run_data_path(sink, run_id))
 
 
+# perfbench/driver.py spans ``storage.write_data`` by name, so the name
+# stays, bound to the run-scoped writer: the only data write left.
+write_data = write_run_data
+
+
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 _MARKER = ".commit-"
 
@@ -229,23 +249,29 @@ def _run_buckets(run_dir: str) -> list[int]:
     )
 
 
-def _read_run(spark: SparkSession, sink: str, run_id: str) -> DataFrame:
-    """One run directory as a DataFrame, its schema read on the driver
-    from the footer of one data file (``spark.read.parquet`` infers it
-    with a Spark job per run). Spark stores its own row schema in every
-    footer it writes, so the types are exactly what inference gives; the
-    bucket directories add ``part_key`` as partition discovery types it.
-    A run without buckets (or without a directory) is left to Spark."""
+def _run_schema(sink: str, run_id: str) -> StructType | None:
+    """One run's schema, read on the driver from the footer of one data
+    file (None when the run has no bucket). Spark stores its own row
+    schema in every footer it writes, so the types are exactly what
+    ``spark.read.parquet`` would infer with a Spark job; the bucket
+    directories add ``part_key`` as partition discovery types it."""
     run_dir = run_data_path(sink, run_id)
     keys = _run_buckets(run_dir)
     if not keys:
-        return spark.read.parquet(run_dir)
+        return None
     bucket = os.path.join(run_dir, f"part_key={keys[0]}")
     name = min(n for n in os.listdir(bucket) if not n.startswith(("_", ".")))
     footer = pq.read_schema(os.path.join(bucket, name))
     data = StructType.fromJson(json.loads(footer.metadata[_SPARK_ROW_METADATA]))
-    schema = StructType([*data.fields, StructField("part_key", IntegerType())])
-    return spark.read.schema(schema).parquet(run_dir)
+    return StructType([*data.fields, StructField("part_key", IntegerType())])
+
+
+def _read_run(spark: SparkSession, sink: str, run_id: str) -> DataFrame:
+    """One run directory as a DataFrame with its footer schema; a run
+    without buckets (or without a directory) is left to Spark."""
+    schema = _run_schema(sink, run_id)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(run_data_path(sink, run_id))
 
 
 def _highest_claimed_id(sink: str) -> int:
@@ -327,16 +353,21 @@ def list_snapshots(spark: SparkSession, sink: str) -> DataFrame | None:
     )
 
 
-def _check_schema_compatible(spark, sink, new_schema, what: str) -> None:
+def _check_schema_compatible(sink, new_schema, what: str) -> None:
     """Iceberg's schema enforcement at the WRITE point: a shared column
     whose type differs from the live snapshot's raises here (one writer
     sees a clear error) instead of poisoning a future reader's union.
-    Added/missing columns stay legal (add-column evolution)."""
+    Added/missing columns stay legal (add-column evolution). The live
+    types come from the footers of the live runs, as their union reads
+    them (first run by id wins a name) — no Spark job."""
     try:
-        live_schema = read_snapshot(spark, sink).schema
-    except (FileNotFoundError, ValueError):
+        live = _snapshot_rows(sink)
+    except FileNotFoundError:
         return  # first commit: nothing to conflict with
-    live_types = {f.name: f.dataType for f in live_schema.fields}
+    live_types: dict = {}
+    for rid in sorted({r["run_id"] for r in live}):
+        for f in (_run_schema(sink, rid) or StructType()).fields:
+            live_types.setdefault(f.name, f.dataType)
     conflicts = [
         f"{f.name}: {live_types[f.name].simpleString()} -> "
         f"{f.dataType.simpleString()}"
@@ -383,9 +414,10 @@ def commit_snapshot(
     TYPE differs from the live snapshot's fails here (fail fast, one
     writer) instead of at some future reader's union; added and missing
     columns remain legal (add-column evolution, NULL-filled)."""
-    run_df = _read_run(spark, sink, run_id)
-    _check_schema_compatible(spark, sink, run_df.schema, f"run {run_id}")
+    run_schema = _run_schema(sink, run_id) or StructType()
+    _check_schema_compatible(sink, run_schema, f"run {run_id}")
     if stats_cols:
+        run_df = _read_run(spark, sink, run_id)
         per_col = [
             F.struct(
                 F.min(c).alias("min"), F.max(c).alias("max")
@@ -671,7 +703,7 @@ def merge_upsert(
     live_rows = _snapshot_rows(sink)
     # fail with the write-point error BEFORE the union would raise a raw
     # Spark type error mid-merge
-    _check_schema_compatible(spark, sink, updates.schema, "merge updates")
+    _check_schema_compatible(sink, updates.schema, "merge updates")
     # set-valued: an append-committed bucket spans several runs and ALL
     # of them must be read back, or the merge would drop the other runs'
     # rows when it rewrites the bucket

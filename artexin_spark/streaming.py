@@ -9,15 +9,19 @@ by Spark's own streaming checkpoint (file-source offsets), using
 whatever is pending and exits, which is how a 100 TB ingest tail is
 processed hourly without re-scanning history.
 
-The transformation is the SAME fused Arrow stage as the batch path
-(pipeline._extract_map_iter via extract_df's building blocks) — streaming
-and batch share one code path, so per-turn outputs are byte-identical.
+Streamed rows land in the same sink layout as batch runs (storage.py):
+each micro-batch writes one run directory and publishes it with one
+append commit, so ``storage.read_data`` reads either. The transformation
+is the SAME fused Arrow stage as the batch path (pipeline.extract_df) —
+streaming and batch share one code path, so per-turn outputs are
+byte-identical.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession, functions as F
 
+from . import storage as sink_io
 from .pipeline import extract_df
 
 TRANSCRIPT_SCHEMA = (
@@ -29,36 +33,41 @@ TRANSCRIPT_SCHEMA = (
 def incremental_extract(
     spark: SparkSession,
     input_dir: str,
-    output_dir: str,
+    sink: str,
     checkpoint_dir: str,
     n_buckets: int | None = None,
     source_col: str | None = None,
     schema: str = TRANSCRIPT_SCHEMA,
 ):
-    """Drain all unprocessed input files through the extraction stage and
-    append to ``output_dir``; returns the finished StreamingQuery.
+    """Drain all unprocessed input files through the extraction stage
+    into ``sink``; returns the finished StreamingQuery. Each micro-batch
+    is one append commit (storage.commit_snapshot(operation='append')), so
+    streamed rows get the same isolation/time-travel/incremental-scan
+    semantics as batch writes — Iceberg's streaming-append pattern.
+    Re-invoking after new files land processes only the delta.
 
-    Exactly-once per input file via the streaming checkpoint; re-invoking
-    after new files land processes only the delta."""
-    # same spec pinning as the batch sink: appends across invocations must
-    # all carry ONE bucketing or downstream bucket-keyed consumers break
-    from . import storage as _sink_io
-
-    spec = _sink_io.read_bucket_spec(output_dir)
+    Exactly-once per input file via the streaming checkpoint, and at the
+    DATA level: the run id is keyed by batch_id, so a replayed micro-batch
+    overwrites its own immutable run dir and its re-commit maps the same
+    (run, bucket) pairs — readers union pairs, so the worst case after a
+    crash-replay is a redundant snapshot entry, never duplicated rows.
+    Compaction later normalizes multi-run buckets back to one run each."""
+    sink_io.check_layout(sink)
+    spec = sink_io.read_bucket_spec(sink)
     if n_buckets is None:
         # adopt the pinned spec only when the caller did not choose; an
         # EXPLICIT conflicting n_buckets must fail fast in ensure_bucket_spec
         # below, exactly like the batch path (run_extract) — silently
         # overriding it would ignore a CLI --buckets with zero signal
         n_buckets = int(spec["n_buckets"]) if spec is not None else 64
-    _sink_io.ensure_bucket_spec(output_dir, n_buckets)
+    sink_io.ensure_bucket_spec(sink, n_buckets)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 64)
         .parquet(input_dir)
     )
     # the batch transformation verbatim (content_hash/extracted_at
-    # included) so batch-written and stream-written sinks carry the SAME
+    # included) so batch-written and stream-written runs carry the SAME
     # schema — downstream dedup keys on content_hash either way. The
     # bucket repartition is skipped: the file source already bounds a
     # micro-batch (maxFilesPerTrigger), and a shuffle per micro-batch
@@ -67,12 +76,16 @@ def incremental_extract(
         spark, stream, n_buckets=n_buckets, source_col=source_col,
         repartition=False,
     )
+
+    def write_batch(batch_df, batch_id: int) -> None:
+        rid = f"stream-{batch_id}"
+        sink_io.write_run_data(batch_df, sink, rid)
+        sink_io.commit_snapshot(spark, sink, rid, operation="append")
+
     query = (
-        extracted.writeStream.format("parquet")
-        .option("path", output_dir)
+        extracted.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .outputMode("append")
         .start()
     )
     query.awaitTermination()
@@ -220,59 +233,6 @@ def windowed_turn_counts(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .outputMode("append")
-        .start()
-    )
-    query.awaitTermination()
-    return query
-
-
-def incremental_extract_snapshot(
-    spark: SparkSession,
-    input_dir: str,
-    sink: str,
-    checkpoint_dir: str,
-    n_buckets: int | None = None,
-    source_col: str | None = None,
-    schema: str = TRANSCRIPT_SCHEMA,
-):
-    """Streaming extraction INTO the snapshot sink: each micro-batch is
-    one append commit (storage.commit_snapshot(operation='append')), so
-    streamed rows get the same isolation/time-travel/incremental-scan
-    semantics as batch writes — Iceberg's streaming-append pattern.
-
-    Exactly-once at the DATA level: the run id is keyed by batch_id, so a
-    replayed micro-batch overwrites its own immutable run dir and its
-    re-commit maps the same (run, bucket) pairs — readers union pairs,
-    so the worst case after a crash-replay is a redundant snapshot entry,
-    never duplicated rows. Compaction later normalizes multi-run buckets
-    back to one run each."""
-    from . import storage as _sink_io
-
-    spec = _sink_io.read_bucket_spec(sink)
-    if n_buckets is None:
-        # same contract as the batch path: adopt only when omitted,
-        # fail fast on an explicit conflict
-        n_buckets = int(spec["n_buckets"]) if spec is not None else 64
-    _sink_io.ensure_bucket_spec(sink, n_buckets)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-    )
-    extracted = extract_df(
-        spark, stream, n_buckets=n_buckets, source_col=source_col,
-        repartition=False,
-    )
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        rid = f"stream-{batch_id}"
-        _sink_io.write_run_data(batch_df, sink, rid)
-        _sink_io.commit_snapshot(spark, sink, rid, operation="append")
-
-    query = (
-        extracted.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
         .start()
     )
     query.awaitTermination()

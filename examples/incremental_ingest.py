@@ -56,7 +56,7 @@ def main() -> None:
                 )
                 batch = batch.unionByName(replay)
 
-            stats = run_extract(spark, batch, sink, n_buckets=8, snapshot=True)
+            stats = run_extract(spark, batch, sink, n_buckets=8)
             snap = stats["snapshot_id"]
             delta = sink_io.read_incremental(
                 spark, sink, since_snapshot_id=last_snap, to_snapshot_id=snap

@@ -33,9 +33,7 @@ def main() -> None:
         # 1. the extraction job commits snapshot 1 (crash-safe: nothing is
         #    readable until the single manifest append lands)
         turns = synth_transcripts(spark, n_convs=40, seed=42)
-        stats = run_extract(
-            spark, turns, sink, n_buckets=8, source_col=None, snapshot=True
-        )
+        stats = run_extract(spark, turns, sink, n_buckets=8, source_col=None)
         print(f"snapshot {stats['snapshot_id']}: {stats['rows']} turns")
 
         # 2. stats-tracked re-commit: manifest records per-bucket min/max

@@ -18,6 +18,7 @@ sys.path.insert(0, _REPO)
 # on a real cluster this is spark-submit --py-files (bench/run.sh)
 os.environ["PYTHONPATH"] = _REPO + os.pathsep + os.environ.get("PYTHONPATH", "")
 
+from artexin_spark import storage  # noqa: E402
 from artexin_spark.pipeline import run_extract  # noqa: E402
 from artexin_spark.session import get_spark  # noqa: E402
 
@@ -39,7 +40,7 @@ def main() -> None:
     )
     stats = run_extract(spark, df, sink, n_buckets=4)
     print("run:", stats)
-    out = spark.read.parquet(f"{sink}/data").orderBy("conv_id", "turn_idx")
+    out = storage.read_data(spark, sink).orderBy("conv_id", "turn_idx")
     out.select("conv_id", "title", "extracted_text", "n_images", "error").show(truncate=48)
     spark.stop()
 

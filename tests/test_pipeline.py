@@ -225,7 +225,7 @@ def test_resume_reextracts_buckets_whose_latest_status_is_failed(spark, corpus_p
         [("op-marker", pk, 0, 0, 0, 0, 0.0, "failed", None) for pk in failed], sink
     )
     for pk in failed:
-        shutil.rmtree(f"{sink}/data/part_key={pk}")
+        shutil.rmtree(f"{sink_io.run_data_path(sink, stats1['run_id'])}/part_key={pk}")
     assert sink_io.read_data(spark, sink).count() < full_count
 
     done = sink_io.completed_buckets(spark, sink).toPandas()
@@ -273,21 +273,44 @@ def test_partial_rerun_does_not_falsify_lineage(spark, corpus_pdf, tmp_path):
 
 def test_fully_resumed_run_is_clean_noop(spark, corpus_pdf, tmp_path):
     """resume over an already-complete sink: no new lineage, zero counters,
-    and the snapshot variant neither writes a run dir nor commits."""
+    no run dir written and no (empty) snapshot committed."""
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame(corpus_pdf)
     run_extract(spark, df, sink, n_buckets=16)
     before = sink_io.read_lineage(spark, sink).count()
+    sid = sink_io.latest_snapshot_id(spark, sink)
+    runs = os.listdir(sink_io.data_path(sink))
     res = run_extract(spark, df, sink, n_buckets=16, resume=True)
-    assert res == {"run_id": res["run_id"], "buckets": 0, "rows": 0, "errors": 0}
+    assert res == {
+        "run_id": res["run_id"], "buckets": 0, "rows": 0, "errors": 0, "snapshot_id": sid
+    }
     assert sink_io.read_lineage(spark, sink).count() == before
+    assert sink_io.latest_snapshot_id(spark, sink) == sid  # no empty commit
+    assert os.listdir(sink_io.data_path(sink)) == runs
 
-    snap_sink = str(tmp_path / "snap_sink")
-    run_extract(spark, df, snap_sink, n_buckets=16, snapshot=True)
-    sid = sink_io.latest_snapshot_id(spark, snap_sink)
-    res2 = run_extract(spark, df, snap_sink, n_buckets=16, resume=True, snapshot=True)
-    assert res2["rows"] == 0 and res2["snapshot_id"] == sid
-    assert sink_io.latest_snapshot_id(spark, snap_sink) == sid  # no empty commit
+
+def test_run_extract_refuses_the_retired_plain_layout(spark, corpus_pdf, tmp_path):
+    """Top-level data/part_key=NNN directories (the retired dynamic-
+    overwrite layout) are outside every snapshot: a run beside them would
+    hide their rows from read_data, so it fails before writing anything."""
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame([(1, 3)], "x int, part_key int").write.partitionBy(
+        "part_key"
+    ).parquet(sink_io.data_path(sink))
+    df = spark.createDataFrame(corpus_pdf.head(20))
+    with pytest.raises(ValueError, match="retired plain layout"):
+        run_extract(spark, df, sink, n_buckets=4)
+    assert sorted(os.listdir(sink)) == ["data"]
+    assert [n for n in os.listdir(sink_io.data_path(sink)) if "=" in n] == ["part_key=3"]
+
+
+def test_run_extract_snapshot_false_raises(spark, corpus_pdf, tmp_path):
+    """snapshot=False named the retired plain layout: it fails loudly
+    rather than silently writing the one layout left."""
+    df = spark.createDataFrame(corpus_pdf.head(20))
+    with pytest.raises(ValueError, match="retired plain"):
+        run_extract(spark, df, str(tmp_path / "sink"), n_buckets=4, snapshot=False)
+    assert not os.path.exists(tmp_path / "sink")
 
 
 def test_bucket_spec_pins_resume_bucketing(spark, corpus_pdf, tmp_path):
@@ -435,18 +458,16 @@ def test_resumed_snapshot_retry_preserves_committed_run_dir(spark, corpus_pdf, t
 
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame(corpus_pdf.head(300))
-    r1 = run_extract(spark, df, sink, n_buckets=8, snapshot=True, run_id="R")
+    r1 = run_extract(spark, df, sink, n_buckets=8, run_id="R")
     n = sink_io.read_snapshot(spark, sink).count()
     assert n == 300 and r1["snapshot_id"] == 1
 
-    retry = run_extract(
-        spark, df, sink, n_buckets=8, snapshot=True, run_id="R", resume=True
-    )
+    retry = run_extract(spark, df, sink, n_buckets=8, run_id="R", resume=True)
     assert retry["rows"] == 0 and retry["snapshot_id"] == 1
     assert sink_io.read_snapshot(spark, sink).count() == 300  # data intact
 
     with _pytest.raises(ValueError, match="already committed"):
-        run_extract(spark, df, sink, n_buckets=8, snapshot=True, run_id="R")
+        run_extract(spark, df, sink, n_buckets=8, run_id="R")
 
     # partial resume under a committed id: a sink whose committed run R
     # covers only half the buckets leaves real work — proceeding would
@@ -459,12 +480,12 @@ def test_resumed_snapshot_retry_preserves_committed_run_dir(spark, corpus_pdf, t
         .filter(F.col("part_key") < 4)
         .drop("part_key", "source")
     )
-    run_extract(spark, half, sink2, n_buckets=8, snapshot=True, run_id="R")
+    run_extract(spark, half, sink2, n_buckets=8, run_id="R")
     n2 = sink_io.read_snapshot(spark, sink2).count()
     with _pytest.raises(ValueError, match="buckets remain"):
         run_extract(
             spark, spark.createDataFrame(corpus_pdf), sink2, n_buckets=8,
-            snapshot=True, run_id="R", resume=True,
+            run_id="R", resume=True,
         )
     assert sink_io.read_snapshot(spark, sink2).count() == n2  # intact
 

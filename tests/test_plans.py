@@ -271,6 +271,23 @@ def test_curate_builds_without_a_spark_job(spark):
     assert df.count() > 0
 
 
+def test_curate_spreads_the_corpus_once(spark):
+    """Both consumers of curate's spread (the keep-first projection and the
+    contamination shingle pass) read one round-robin exchange: no
+    isnotnull(doc_id) inferred from the anti-join lands below the
+    contamination branch's spread, so AQE reuses the exchange instead of
+    scanning and shuffling the corpus a second time."""
+    import __spark_entry__ as e
+
+    df = e.q_curate(spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==", 1)[0]
+    spreads = [l for l in final.splitlines() if "RoundRobinPartitioning" in l]
+    assert len(spreads) == 2, final
+    assert sum("ReusedExchange" in l for l in spreads) == 1, final
+
+
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
     """Co-located join: both sides bucketed+sorted on the join key ⇒ the
     SortMergeJoin consumes bucket layout directly — zero Exchange. This

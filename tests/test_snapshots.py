@@ -37,14 +37,14 @@ def test_snapshot_commit_read_and_time_travel(spark, corpus_pdf, tmp_path):
         .filter(F.col("part_key") < 4)
         .drop("part_key", "source")
     )
-    stats1 = run_extract(spark, partial, sink, n_buckets=8, source_col=None, snapshot=True)
+    stats1 = run_extract(spark, partial, sink, n_buckets=8, source_col=None)
     assert stats1["snapshot_id"] == 1
     s1 = sink_io.read_snapshot(spark, sink, 1)
     n1 = s1.count()
     assert n1 == stats1["rows"] > 0
 
     # s2: full input, new run — overlapping buckets replaced, not duplicated
-    stats2 = run_extract(spark, df, sink, n_buckets=8, snapshot=True)
+    stats2 = run_extract(spark, df, sink, n_buckets=8)
     assert stats2["snapshot_id"] == 2
     s2 = sink_io.read_snapshot(spark, sink)  # latest
     assert s2.count() == len(corpus_pdf)
@@ -65,7 +65,7 @@ def test_snapshot_commit_read_and_time_travel(spark, corpus_pdf, tmp_path):
 def test_uncommitted_run_is_invisible(spark, corpus_pdf, tmp_path):
     sink = str(tmp_path / "snapsink2")
     df = spark.createDataFrame(corpus_pdf)
-    run_extract(spark, df, sink, n_buckets=4, snapshot=True)
+    run_extract(spark, df, sink, n_buckets=4)
     before = sink_io.read_snapshot(spark, sink).count()
 
     # a run that writes data files but crashes before commit
@@ -86,8 +86,8 @@ def test_compaction_preserves_data_and_bounds_files(spark, corpus_pdf, tmp_path)
     half = (
         prepare_input(df, 4, "source").filter(F.col("part_key") < 2).drop("part_key", "source")
     )
-    run_extract(spark, half, sink, n_buckets=4, source_col=None, snapshot=True)
-    run_extract(spark, df, sink, n_buckets=4, snapshot=True)
+    run_extract(spark, half, sink, n_buckets=4, source_col=None)
+    run_extract(spark, df, sink, n_buckets=4)
     live_before = sink_io.read_snapshot(spark, sink)
     want = _counts(live_before)
 
@@ -113,8 +113,8 @@ def test_compaction_preserves_data_and_bounds_files(spark, corpus_pdf, tmp_path)
 def test_expire_snapshots_gcs_unreferenced_runs(spark, corpus_pdf, tmp_path):
     sink = str(tmp_path / "snapsink4")
     df = spark.createDataFrame(corpus_pdf)
-    r1 = run_extract(spark, df.limit(20), sink, n_buckets=4, snapshot=True)
-    run_extract(spark, df, sink, n_buckets=4, snapshot=True)
+    r1 = run_extract(spark, df.limit(20), sink, n_buckets=4)
+    run_extract(spark, df, sink, n_buckets=4)
     sink_io.compact_snapshot(spark, sink)
     want = _counts(sink_io.read_snapshot(spark, sink))
 
@@ -233,12 +233,12 @@ def test_commit_skips_claimed_snapshot_ids(spark, corpus_pdf, tmp_path):
 
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame(corpus_pdf)
-    r1 = run_extract(spark, df, sink, n_buckets=8, snapshot=True)
+    r1 = run_extract(spark, df, sink, n_buckets=8)
     assert r1["snapshot_id"] == 1
     # simulate a committer that claimed id 2 and died before appending
     orphan = os.path.join(sink_io.snapshots_path(sink), ".commit-2")
     os.close(os.open(orphan, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-    r2 = run_extract(spark, df, sink, n_buckets=8, snapshot=True)
+    r2 = run_extract(spark, df, sink, n_buckets=8)
     assert r2["snapshot_id"] == 3  # 2 is burned, exactly like Iceberg
     man = spark.read.parquet(sink_io.snapshots_path(sink))
     per = (
@@ -349,8 +349,8 @@ def test_expire_snapshots_keep_last_zero_drops_all(spark, corpus_pdf, tmp_path):
     whole list and kept everything while reporting success)."""
     sink = str(tmp_path / "snapsink_zero")
     df = spark.createDataFrame(corpus_pdf)
-    r1 = run_extract(spark, df.limit(20), sink, n_buckets=4, snapshot=True)
-    r2 = run_extract(spark, df, sink, n_buckets=4, snapshot=True)
+    r1 = run_extract(spark, df.limit(20), sink, n_buckets=4)
+    r2 = run_extract(spark, df, sink, n_buckets=4)
     dead = sink_io.expire_snapshots(spark, sink, keep_last=0)
     assert set(dead) == {r1["run_id"], r2["run_id"]}
     assert not os.path.isdir(sink_io.run_data_path(sink, r1["run_id"]))
@@ -685,8 +685,8 @@ def test_read_incremental_rejects_inverted_range(spark, tmp_path):
 
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame(gen_transcripts(n_convs=4, seed=3, with_source=True))
-    run_extract(spark, df.filter("turn_idx < 2"), sink, n_buckets=4, snapshot=True)
-    run_extract(spark, df, sink, n_buckets=4, snapshot=True)
+    run_extract(spark, df.filter("turn_idx < 2"), sink, n_buckets=4)
+    run_extract(spark, df, sink, n_buckets=4)
     with _pytest.raises(ValueError, match="inverted incremental range"):
         sink_io.read_incremental(spark, sink, since_snapshot_id=2, to_snapshot_id=1)
 
@@ -759,6 +759,22 @@ def test_metadata_calls_run_no_spark_job(spark, tmp_path):
         "remove_orphan_runs": ["crashed"],
         "expire_snapshots": ["r1", "r2"],
     }
+
+
+def test_commit_of_a_64_bucket_run_runs_no_spark_job(spark, tmp_path):
+    """A commit takes the run's schema and the live snapshot's from parquet
+    footers and builds no DataFrame: over a run of more bucket directories
+    than Spark's parallel partition-discovery threshold (32), building one
+    runs a file-listing job."""
+    sink = str(tmp_path / "sink")
+    for rid in ("r1", "r2"):
+        run = _bucketed(spark, n=256, buckets=64, tag=rid)
+        sink_io.write_run_data(run, sink, rid)
+    sink_io.commit_snapshot(spark, sink, "r1")
+    sid, jobs = _spark_jobs(spark, lambda: sink_io.commit_snapshot(spark, sink, "r2"))
+    assert sid == 2 and jobs == 0
+    live = sink_io.read_snapshot(spark, sink)
+    assert live.count() == 256 and {r.tag for r in live.select("tag").collect()} == {"r2"}
 
 
 def test_unpublished_manifest_file_is_ignored(spark, tmp_path):

@@ -3,8 +3,10 @@ identical to the batch path."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from artexin_spark import storage as sink_io
 from artexin_spark.corpus import gen_transcripts
 from artexin_spark.streaming import incremental_extract
 
@@ -21,20 +23,20 @@ def test_incremental_extract_exactly_once(spark, tmp_path):
     # chunk 1 arrives
     spark.createDataFrame(first).coalesce(1).write.mode("append").parquet(input_dir)
     incremental_extract(spark, input_dir, out_dir, ckpt, n_buckets=4)
-    out1 = spark.read.parquet(out_dir)
+    out1 = sink_io.read_data(spark, out_dir)
     assert out1.count() == 60
 
     # chunk 2 arrives; re-run drains ONLY the delta
     spark.createDataFrame(second).coalesce(1).write.mode("append").parquet(input_dir)
     incremental_extract(spark, input_dir, out_dir, ckpt, n_buckets=4)
-    out2 = spark.read.parquet(out_dir)
+    out2 = sink_io.read_data(spark, out_dir)
     assert out2.count() == 120
     # exactly once: no duplicated (conv_id, turn_idx)
     assert out2.select("conv_id", "turn_idx").distinct().count() == 120
 
     # third run with nothing new: no growth
     incremental_extract(spark, input_dir, out_dir, ckpt, n_buckets=4)
-    assert spark.read.parquet(out_dir).count() == 120
+    assert sink_io.read_data(spark, out_dir).count() == 120
 
     # streaming output == batch path output (same code, same results)
     from artexin_spark.pipeline import extract_df
@@ -51,6 +53,19 @@ def test_incremental_extract_exactly_once(spark, tmp_path):
         .toPandas()
     )
     assert batch.equals(stream)
+
+
+def test_incremental_extract_refuses_a_streaming_file_sink(spark, tmp_path):
+    """A sink written by the retired streaming file sink (_spark_metadata
+    beside loose part files) is outside every snapshot: streaming into it
+    fails before the query starts instead of hiding its rows."""
+    sink = tmp_path / "sink"
+    os.makedirs(sink / "_spark_metadata")
+    with pytest.raises(ValueError, match="retired streaming file-sink layout"):
+        incremental_extract(
+            spark, str(tmp_path / "in"), str(sink), str(tmp_path / "ck"), n_buckets=4
+        )
+    assert os.listdir(sink) == ["_spark_metadata"]
 
 
 def test_conversation_progress_state_survives_restart(spark, tmp_path):
@@ -137,7 +152,7 @@ def test_incremental_output_carries_batch_sink_schema(spark, tmp_path):
     incremental_extract(
         spark, input_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"), n_buckets=4
     )
-    out = spark.read.parquet(str(tmp_path / "out"))
+    out = sink_io.read_data(spark, str(tmp_path / "out"))
     assert {"content_hash", "extracted_at"} <= set(out.columns)
     # the hash is the batch formula: md5(conv \x1f turn \x1f text)
     row = out.filter("error is null").limit(1).collect()[0]
@@ -188,23 +203,19 @@ def test_incremental_extract_snapshot_appends_commits(spark, tmp_path):
     sink: two incremental invocations produce snapshots whose union is
     every streamed row exactly once, earlier snapshots stay isolated,
     and compaction normalizes the multi-run buckets."""
-    from artexin_spark import storage as sink_io
-    from artexin_spark.corpus import gen_transcripts
-    from artexin_spark.streaming import incremental_extract_snapshot
-
     src = str(tmp_path / "in")
     sink = str(tmp_path / "snap_sink")
     ck = str(tmp_path / "ck")
     pdf = gen_transcripts(n_convs=12, seed=21, with_source=True)
     half = len(pdf) // 2
     spark.createDataFrame(pdf.iloc[:half]).write.mode("overwrite").parquet(src)
-    incremental_extract_snapshot(spark, src, sink, ck, n_buckets=4)
+    incremental_extract(spark, src, sink, ck, n_buckets=4)
     s1 = sink_io.latest_snapshot_id(spark, sink)
     n1 = sink_io.read_snapshot(spark, sink, s1).count()
     assert n1 == half
 
     spark.createDataFrame(pdf.iloc[half:]).write.mode("append").parquet(src)
-    incremental_extract_snapshot(spark, src, sink, ck, n_buckets=4)
+    incremental_extract(spark, src, sink, ck, n_buckets=4)
     s2 = sink_io.latest_snapshot_id(spark, sink)
     assert s2 > s1
     live = sink_io.read_snapshot(spark, sink)

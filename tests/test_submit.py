@@ -27,7 +27,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     )
     proc = subprocess.run(
         ["bash", os.path.join(REPO, "bench", "run.sh"), src, sink,
-         "--buckets", "4", "--snapshot"],
+         "--buckets", "4"],
         env=env,
         capture_output=True,
         text=True,

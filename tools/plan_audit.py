@@ -4,9 +4,12 @@ For each query in __spark_entry__.queries(): capture the formatted plan and
 count the shapes that matter at scale — exchanges, sort aggregates, sorts,
 python nodes, joins by strategy, parquet scans per table, cartesian
 products. Emits one JSON line per query to stdout (plus a summary), so the
-round's audit checklist is generated evidence, not prose.
+round's audit checklist is generated evidence, not prose. ``--plans-dir``
+also writes each query's formatted plan to ``<plans-dir>/<query>.txt``
+(before/after plan diffs for a change).
 
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.01] [--out f.json]
+           [--only q_a,q_b] [--plans-dir plans/new]
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default=None)
     ap.add_argument("--only", default=None)
+    ap.add_argument("--plans-dir", default=None)
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -47,6 +51,10 @@ def main() -> None:
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             plan = buf.getvalue()
+            if args.plans_dir:
+                os.makedirs(args.plans_dir, exist_ok=True)
+                with open(os.path.join(args.plans_dir, f"{name}.txt"), "w") as fh:
+                    fh.write(plan)
             rec = {
                 "query": name,
                 "exchanges": len(re.findall(r"\n\(\d+\) Exchange", plan)),
@@ -71,14 +79,9 @@ def main() -> None:
                 "window": len(re.findall(r"\n\(\d+\) Window", plan)),
                 "scans": {},
             }
-            for m in re.findall(r"Scan parquet[^\n]*\n[^\n]*Location[^\n]*?(\w+)\.parquet", plan):
-                rec["scans"][m] = rec["scans"].get(m, 0) + 1
-            # fallback scan naming via Location lines
-            locs = re.findall(r"Location: \S+\[file:[^\]]*?([a-z_]+)\.parquet\]", plan)
-            if locs:
-                rec["scans"] = {}
-                for t in locs:
-                    rec["scans"][t] = rec["scans"].get(t, 0) + 1
+            # one "Location: <index> [file:...<table>.parquet]" per scan node
+            for t in re.findall(r"Location: \w+ \[file:[^\]]*?(\w+)\.parquet\]", plan):
+                rec["scans"][t] = rec["scans"].get(t, 0) + 1
             rec["n_scans"] = sum(rec["scans"].values())
             rows.append(rec)
         except Exception as err:  # noqa: BLE001
