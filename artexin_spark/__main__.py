@@ -80,7 +80,7 @@ def main() -> None:
             args.input,
             args.sink,
             args.checkpoint,
-            n_buckets=args.buckets or 64,
+            n_buckets=args.buckets,
             source_col=None,
         )
         sid = sink_io.latest_snapshot_id(spark, args.sink)

@@ -258,8 +258,9 @@ class _LineageAccumParam(AccumulatorParam):
     semantics): a re-executed stage (fetch-failure recompute, speculative
     attempt) could double-count — run_extract performs exactly one action
     per run, so the window is a lost-shuffle retry only; lineage counters
-    are skew/ops evidence, and the data write itself stays exactly-once
-    via dynamic partition overwrite."""
+    are skew/ops evidence, and the data write itself stays exactly-once:
+    a retry overwrites its own run directory, and nothing is readable
+    until the run's one snapshot commit."""
 
     def zero(self, value):
         return {}

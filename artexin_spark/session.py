@@ -51,6 +51,12 @@ def get_spark(app_name: str = "artexin-spark", cpus: int | None = None) -> Spark
         # heap hard — an 8g heap cost ~20% wall in GC at 32 threads
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
+        # list file-source paths on the driver, never with a Spark job:
+        # a snapshot read names every mapped bucket directory (64 per run
+        # at the default bucket count), and above this threshold (default
+        # 32) Spark plans a parallel listing job that costs more than the
+        # driver's own listing of a local sink
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(1 << 20))
     )
     # local-mode shuffle/spill on tmpfs when RAM clearly allows: the
     # bucket repartition moves multi-GB of text through spark.local.dir,

@@ -23,6 +23,14 @@ per run or snapshot, so the driver reads them with pyarrow (``_read_rows``)
 and publishes each new file with one ``os.replace`` (``_publish``) — no
 metadata call runs a Spark job. Spark runs only the data plane.
 
+Read path: every data read (``read_snapshot``/``read_data``,
+``read_incremental``, ``merge_upsert``, ``compact_snapshot`` and the
+commit-time stats scan) resolves the manifest to the (run, bucket)
+directories it maps and opens them in ONE parquet scan (``_read_mapping``),
+typed by the runs' parquet footer schemas (``_live_schema``) — no schema
+inference and no per-run union. A mapped directory missing on disk fails
+the read (Spark's PATH_NOT_FOUND) instead of returning the table short.
+
 Swap point: replace write_run_data + commit_snapshot / read_snapshot with
 ``df.writeTo(tbl).overwritePartitions()`` / ``spark.read.format('iceberg')``
 when a catalog is configured — the pipeline code doesn't change.
@@ -43,7 +51,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 #: The lineage row, declared once. ``append_lineage`` takes rows of every
 #: field but the last and stamps ``finished_at`` itself.
@@ -266,12 +274,41 @@ def _run_schema(sink: str, run_id: str) -> StructType | None:
     return StructType([*data.fields, StructField("part_key", IntegerType())])
 
 
-def _read_run(spark: SparkSession, sink: str, run_id: str) -> DataFrame:
-    """One run directory as a DataFrame with its footer schema; a run
-    without buckets (or without a directory) is left to Spark."""
-    schema = _run_schema(sink, run_id)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(run_data_path(sink, run_id))
+def _live_schema(sink: str, run_ids: set[str]) -> StructType:
+    """The schema a read of ``run_ids`` returns, merged from their footer
+    schemas: add-column evolution (Iceberg's default mode) — the first
+    run by id wins a name and its position, a column a later run adds
+    goes last, and runs written before it existed read it as NULL."""
+    fields: dict[str, StructField] = {}
+    for rid in sorted(run_ids):
+        for f in (_run_schema(sink, rid) or StructType()).fields:
+            fields.setdefault(f.name, f)
+    return StructType(list(fields.values()))
+
+
+def _read_mapping(
+    spark: SparkSession,
+    sink: str,
+    pairs: list[tuple[str, int]],
+    runs: set[str] | None = None,
+) -> DataFrame:
+    """The rows of the (run_id, part_key) pairs: one parquet scan over the
+    bucket directories they name, typed by the ``_live_schema`` of
+    ``runs`` (default: the pairs' runs) — no schema inference, no union,
+    and only the named directories are listed. No pairs scan no path: an
+    empty frame whose schema is exactly what a non-empty read reports.
+    A directory the manifest maps but the disk lacks fails the read
+    (PATH_NOT_FOUND) rather than returning it short."""
+    schema = _live_schema(sink, {rid for rid, _ in pairs} if runs is None else runs)
+    # ``run`` is the other directory column under basePath; declared as a
+    # string, partition discovery never types a run id, and it is dropped
+    reader = spark.read.schema(StructType([*schema.fields, StructField("run", StringType())]))
+    # a crash-replayed append re-commits its own (run, bucket) pairs: each
+    # directory is scanned once however often the mapping names it
+    dirs = [
+        os.path.join(run_data_path(sink, rid), f"part_key={k}") for rid, k in sorted(set(pairs))
+    ]
+    return reader.option("basePath", data_path(sink)).parquet(*dirs).select(*schema.names)
 
 
 def _highest_claimed_id(sink: str) -> int:
@@ -356,18 +393,16 @@ def list_snapshots(spark: SparkSession, sink: str) -> DataFrame | None:
 def _check_schema_compatible(sink, new_schema, what: str) -> None:
     """Iceberg's schema enforcement at the WRITE point: a shared column
     whose type differs from the live snapshot's raises here (one writer
-    sees a clear error) instead of poisoning a future reader's union.
+    sees a clear error) instead of poisoning a future read.
     Added/missing columns stay legal (add-column evolution). The live
-    types come from the footers of the live runs, as their union reads
-    them (first run by id wins a name) — no Spark job."""
+    types are the live runs' ``_live_schema``, the schema every read
+    returns — no Spark job."""
     try:
         live = _snapshot_rows(sink)
     except FileNotFoundError:
         return  # first commit: nothing to conflict with
-    live_types: dict = {}
-    for rid in sorted({r["run_id"] for r in live}):
-        for f in (_run_schema(sink, rid) or StructType()).fields:
-            live_types.setdefault(f.name, f.dataType)
+    schema = _live_schema(sink, {r["run_id"] for r in live})
+    live_types = {f.name: f.dataType for f in schema.fields}
     conflicts = [
         f"{f.name}: {live_types[f.name].simpleString()} -> "
         f"{f.dataType.simpleString()}"
@@ -412,12 +447,13 @@ def commit_snapshot(
 
     Commits enforce Iceberg's schema compatibility: a shared column whose
     TYPE differs from the live snapshot's fails here (fail fast, one
-    writer) instead of at some future reader's union; added and missing
+    writer) instead of at some future read; added and missing
     columns remain legal (add-column evolution, NULL-filled)."""
     run_schema = _run_schema(sink, run_id) or StructType()
     _check_schema_compatible(sink, run_schema, f"run {run_id}")
     if stats_cols:
-        run_df = _read_run(spark, sink, run_id)
+        keys = _run_buckets(run_data_path(sink, run_id))
+        run_df = _read_mapping(spark, sink, [(run_id, k) for k in keys])
         per_col = [
             F.struct(
                 F.min(c).alias("min"), F.max(c).alias("max")
@@ -449,8 +485,9 @@ def commit_snapshot(
         parent = [r for r in rows if r["snapshot_id"] == parent_id]
         # Iceberg append: ADD this run's files to the table — the parent's
         # whole mapping carries forward, touched buckets become multi-run
-        # (readers union; a later overwrite or compaction normalizes them
-        # back to one run per bucket). Otherwise touched buckets are replaced.
+        # (readers scan each run's directory of the bucket; a later overwrite
+        # or compaction normalizes them back to one run per bucket).
+        # Otherwise touched buckets are replaced.
         carried = [
             r for r in parent if operation == "append" or r["part_key"] not in new_stats
         ]
@@ -553,8 +590,9 @@ def read_snapshot(
     where: tuple | None = None,
 ) -> DataFrame:
     """Manifest-driven read of one snapshot (latest when None) — the time-
-    travel read. Only the run dirs the manifest names are opened, each
-    pruned to the buckets the snapshot maps to it.
+    travel read. One parquet scan opens exactly the bucket directories
+    the snapshot maps (``_read_mapping``); a bucket another run superseded
+    is never listed.
 
     ``where=(col, lo, hi)`` (either bound None = unbounded) additionally
     skips every bucket whose manifest stats prove no row can match — the
@@ -569,39 +607,14 @@ def read_snapshot(
         if where is None or _stats_may_match(r["stats"], where)
     ]
     if not kept:  # every bucket pruned: empty result, live schema
-        full = _read_mapping(
-            spark, sink, [(r["run_id"], r["part_key"]) for r in rows]
-        )
-        out = full.filter(F.lit(False))
-    else:
-        out = _read_mapping(spark, sink, kept)
+        return _read_mapping(spark, sink, [], {r["run_id"] for r in rows})
+    out = _read_mapping(spark, sink, kept)
     if where is not None:
         col, lo, hi = where
         if lo is not None:
             out = out.filter(F.col(col) >= lo)
         if hi is not None:
             out = out.filter(F.col(col) <= hi)
-    return out
-
-
-def _read_mapping(spark: SparkSession, sink: str, pairs: list[tuple[str, int]]):
-    """Union of pruned per-run reads for (run_id, part_key) pairs — only
-    the named run dirs open, each filtered to its buckets (partition
-    prune on the directory column)."""
-    by_run: dict[str, list[int]] = {}
-    for rid, key in pairs:  # one small row per bucket, driver-side
-        by_run.setdefault(rid, []).append(key)
-    parts = []
-    for rid, keys in sorted(by_run.items()):
-        df = _read_run(spark, sink, rid)
-        parts.append(df.filter(F.col("part_key").isin(keys)))
-    out = parts[0]
-    for p in parts[1:]:
-        # allowMissingColumns = add-column schema evolution (Iceberg's
-        # default evolution mode): runs committed before a column existed
-        # read back with NULL in it; a snapshot whose runs all predate the
-        # column keeps the old schema (its union never sees the column)
-        out = out.unionByName(p, allowMissingColumns=True)
     return out
 
 
@@ -673,10 +686,9 @@ def read_incremental(
         if k in to_map
         for rid in sorted(to_map[k])
     ]
-    if not pairs:
-        live = read_snapshot(spark, sink, to_snapshot_id)
-        return live.filter(F.lit(False))  # empty, same schema
-    return _read_mapping(spark, sink, pairs)
+    # nothing changed: an empty result with the schema of ``to``
+    runs = None if pairs else {rid for rids in to_map.values() for rid in rids}
+    return _read_mapping(spark, sink, pairs, runs)
 
 
 def merge_upsert(
@@ -693,11 +705,12 @@ def merge_upsert(
     and keys must be non-null (SQL null-equality would silently duplicate).
 
     Only the buckets ``updates`` touches are rewritten: their live rows
-    read back (pruned per-run), survivors anti-joined against the update
-    keys, and the union committed as one new run — every untouched
-    bucket's files carry forward in the manifest without being opened.
-    At 10^12 rows a merge costs O(touched buckets + updates), not a
-    table rewrite; the anti-join broadcasts whenever updates are small.
+    read back (one scan of their mapped directories), survivors
+    anti-joined against the update keys, and the union committed as one
+    new run — every untouched bucket's files carry forward in the
+    manifest without being opened. At 10^12 rows a merge costs
+    O(touched buckets + updates), not a table rewrite; the anti-join
+    broadcasts whenever updates are small.
     New columns in ``updates`` widen the table (add-column evolution);
     old rows read back NULL in them."""
     live_rows = _snapshot_rows(sink)
@@ -766,12 +779,7 @@ def compact_snapshot(
     out = live.repartition(n_buckets_live * files_per_bucket, F.col("part_key"), spread)
     if sort_by:
         out = out.sortWithinPartitions("part_key", *sort_by)
-    (
-        out.write.mode("overwrite")
-        .option("compression", SINK_CODEC)
-        .partitionBy("part_key")
-        .parquet(run_data_path(sink, rid))
-    )
+    write_run_data(out, sink, rid)
     return commit_snapshot(spark, sink, rid, operation="replace")
 
 
@@ -906,24 +914,3 @@ def remove_orphan_runs(
         removed.append(rid)
     return removed
 
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str = "doc_id",
-    n_buckets: int = 64,
-) -> None:
-    """Bucketed + sorted data-source table (no Hive needed): two tables
-    bucketed on the same key join with ZERO Exchange — the co-located
-    join the 100 TB dedup/similarity passes need so the wide corpus
-    never reshuffles. Iceberg analogue: write-distribution + sort order
-    on the same key (same seam as the rest of this module)."""
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table)
-    )

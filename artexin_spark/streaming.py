@@ -49,8 +49,9 @@ def incremental_extract(
     Exactly-once per input file via the streaming checkpoint, and at the
     DATA level: the run id is keyed by batch_id, so a replayed micro-batch
     overwrites its own immutable run dir and its re-commit maps the same
-    (run, bucket) pairs — readers union pairs, so the worst case after a
-    crash-replay is a redundant snapshot entry, never duplicated rows.
+    (run, bucket) pairs — a read scans each mapped directory once, so the
+    worst case after a crash-replay is a redundant snapshot entry, never
+    duplicated rows.
     Compaction later normalizes multi-run buckets back to one run each."""
     sink_io.check_layout(sink)
     spec = sink_io.read_bucket_spec(sink)

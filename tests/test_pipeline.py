@@ -10,6 +10,7 @@ import zipimport
 import pandas as pd
 import pyarrow as pa
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from artexin_spark import storage as sink_io
@@ -140,7 +141,7 @@ def test_rerun_is_idempotent(spark, corpus_pdf, tmp_path):
     df = spark.createDataFrame(corpus_pdf.head(200))
     run_extract(spark, df, sink, n_buckets=4)
     count1 = sink_io.read_data(spark, sink).count()
-    run_extract(spark, df, sink, n_buckets=4)  # full re-run, dynamic overwrite
+    run_extract(spark, df, sink, n_buckets=4)  # full re-run, its commit replaces every bucket
     count2 = sink_io.read_data(spark, sink).count()
     assert count1 == count2 == 200
 
@@ -226,7 +227,10 @@ def test_resume_reextracts_buckets_whose_latest_status_is_failed(spark, corpus_p
     )
     for pk in failed:
         shutil.rmtree(f"{sink_io.run_data_path(sink, stats1['run_id'])}/part_key={pk}")
-    assert sink_io.read_data(spark, sink).count() < full_count
+    # a bucket directory the manifest maps but the disk lacks fails the
+    # read loudly instead of returning the table short
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        sink_io.read_data(spark, sink)
 
     done = sink_io.completed_buckets(spark, sink).toPandas()
     assert set(failed).isdisjoint(set(done.part_key))

@@ -78,6 +78,33 @@ def test_spark_submit_stream_mode_incremental(spark, tmp_path):
     assert out.select("conv_id", "turn_idx").distinct().count() == len(pdf)
 
 
+def test_spark_submit_stream_adopts_the_sinks_bucket_spec(spark, tmp_path):
+    """--stream without --buckets into a sink a batch run created adopts
+    the pinned bucket count instead of asking for a default of its own
+    (which fails the bucket-spec check on any sink not bucketed that way)."""
+    src = str(tmp_path / "in")
+    sink = str(tmp_path / "sink")
+    pdf = gen_transcripts(n_convs=6, seed=23, with_source=True)
+    spark.createDataFrame(pdf).write.parquet(src)
+
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_DRIVER_MEM="3g",
+               SPARK_SHUFFLE_PARTITIONS="8")
+
+    def submit(*extra):
+        p = subprocess.run(
+            ["bash", os.path.join(REPO, "bench", "run.sh"), src, sink, *extra],
+            env=env, capture_output=True, text=True, timeout=540,
+        )
+        assert p.returncode == 0, p.stderr[-4000:]
+        return json.loads(p.stdout.strip().splitlines()[-1])
+
+    assert submit("--buckets", "4")["snapshot_id"] == 1
+    # the stream appends the same turns beside the batch run's
+    streamed = submit("--stream", "--checkpoint", str(tmp_path / "ck"))
+    assert streamed["snapshot_id"] == 2 and streamed["rows"] == 2 * len(pdf)
+    assert sink_io.read_bucket_spec(sink)["n_buckets"] == 4
+
+
 def test_spark_submit_json_bad_records_quarantine(spark, tmp_path):
     """Corrupt JSON-Lines input through the REAL job: bad lines are
     quarantined to --bad-records (verbatim), counted in the stats, and
