@@ -1239,11 +1239,9 @@ def q_substring_apply(spark, sf_dir):
     """The removal half of the Lee et al. substring operator: flagged
     spans cut out of each doc, survivors rejoined — gated on the cleaned
     text's md5 so the whole spans→tokens→rebuild path is value-checked.
-    Uses the md5 oracle-twin hasher: apply references the spans frame
-    three times, and without a persist (queries here must stay pure
-    plans for the driver) the rolling UDF would re-evaluate per
-    reference; span semantics are hasher-independent and the rolling
-    hasher itself is driver-gated via `substring_dedup`."""
+    Uses the md5 oracle-twin hasher: span semantics are
+    hasher-independent and the rolling hasher itself is driver-gated via
+    `substring_dedup`."""
     docs = _docs(spark, sf_dir)
     base = docs.filter(F.col("doc_id") < 200).select("doc_id", "text")
     toks = dd.tokens_col("text")
@@ -1991,15 +1989,13 @@ def q_dsir_threshold(spark, sf_dir):
     TakeOrderedAndProject). Output provably equals
     dsir_select(k=ceil(0.06·N)) — the oracle expresses exactly that via
     a ranked window — so k scales with the corpus (3 docs at sf0.001,
-    30 at sf0.01, 300 at sf0.1). persist=False: the driver gate
-    materializes once, so the shared-projection cache would only
-    outlive its use."""
+    30 at sf0.01, 300 at sf0.1)."""
     from artexin_spark.operators import sampling as sp
 
     docs = _docs(spark, sf_dir)
     return sp.dsir_threshold(
         docs, docs.filter(F.col("lang") == "en"), frac=0.06,
-        n=2, n_buckets=64, alpha=1.0, persist=False,
+        n=2, n_buckets=64, alpha=1.0,
     )
 
 

@@ -15,6 +15,30 @@ math genuinely wants numpy.
     multimodal.py  binary image/audio/video columns: schema, batching,
                    decode/feature plumbing (decoders stubbed — no codec
                    libs in env; Spark-side shape is real and tested)
+
+Compute once, reuse: an operator that feeds one frame to more than one
+consumer calls ``DataFrame.localCheckpoint`` on it — the only reuse
+mechanism here (a ``persist`` that an operator unpersists before it
+returns is scoped to its own body, not reuse by the caller):
+
+- lazy (``eager=False``) for a subtree shared by several branches or
+  actions of the returned plan (banded signatures, the substring
+  occurrence frame, BM25/bigram token projections, DSIR's scored frame,
+  the blocking posting index) — the first action fills the blocks and
+  every later branch reads them as ``Scan ExistingRDD``; under AQE,
+  building the lazy checkpoint already runs the subtree's upstream
+  shuffle stages;
+- eager (the default) per round of an iterative loop (connected
+  components, pagerank, spread-init kmeans, BPE), truncating lineage so
+  round i neither recomputes nor re-analyzes rounds 1..i-1.
+
+Trade-offs, stated once: the checkpoint severs lineage, so losing an
+executor that holds its blocks fails the job loudly with a missing
+checkpoint block instead of recomputing. The blocks are freed only once
+Spark's ContextCleaner sees the frame unreachable on the driver, which is
+not prompt — probes have seen checkpoint RDDs still listed 60 s after
+``del``, a Python ``gc`` and a JVM ``System.gc()``, and others gone
+after 30 s. There is no public call to release them earlier.
 """
 
 
@@ -58,71 +82,3 @@ def spread_scan(df, multiple: int = 2):
     if n >= cores:
         return df
     return df.repartition(multiple * cores)
-
-
-def attach_caches(result, cached):
-    """Record the intermediate frames an operator persisted on behalf of
-    ``result`` so the caller can release them via ``release_caches``
-    after materializing. Internal seam used by the operators that cache
-    a shared subtree (substring dedup's occurrence frame, batched BM25's
-    tokenized projection).
-
-    The handle rides as a Python attribute on the EXACT DataFrame object
-    returned — any further transformation (``result.filter(...)``,
-    ``select``, ``withColumn``) yields a NEW object without it, after
-    which ``release_caches`` on the derived frame silently frees nothing
-    and the MEMORY_AND_DISK cache leaks until ``clearCache``. Either
-    call ``release_caches`` on the operator's own return value, or wrap
-    the whole consume step in ``released_after`` (the context manager
-    below), which holds the original handle no matter what the body
-    derives from it."""
-    result._artexin_caches = list(getattr(result, "_artexin_caches", ())) + list(
-        cached
-    )
-    return result
-
-
-def release_caches(df, blocking: bool = False) -> int:
-    """Unpersist the MEMORY_AND_DISK frames an operator cached on behalf
-    of this result (see ``attach_caches``). Call AFTER materializing
-    ``df``: the result plan reads those caches, so releasing first
-    forfeits the single-pass guarantee (work recomputes; results stay
-    correct). Returns the number of caches released.
-
-    MUST be called on the exact object the operator returned, BEFORE any
-    further transformation — derived frames do not carry the handle (see
-    ``attach_caches``); prefer ``released_after`` when the consuming
-    code wraps the result.
-
-    Without this seam a continuous-ingest service calling, e.g.,
-    ``incremental_substring_dedup`` once per increment would pin one
-    occurrence-frame cache per call with no handle to free it short of
-    ``spark.catalog.clearCache()`` (which nukes unrelated caches too)."""
-    cached = getattr(df, "_artexin_caches", ())
-    for c in cached:
-        c.unpersist(blocking)
-    df._artexin_caches = []
-    return len(cached)
-
-
-class released_after:
-    """Context manager that pins an operator result's cache handle so it
-    cannot be lost to further transformation::
-
-        with released_after(substring_dedup_spans(docs)) as spans:
-            spans.filter("n_dup_spans > 0").write.parquet(out)
-        # caches released here, whatever the body derived from `spans`
-
-    ``with released_after(df, blocking=True)`` waits for the unpersist."""
-
-    def __init__(self, df, blocking: bool = False):
-        self._df = df
-        self._blocking = blocking
-        self.released = 0
-
-    def __enter__(self):
-        return self._df
-
-    def __exit__(self, exc_type, exc, tb):
-        self.released = release_caches(self._df, self._blocking)
-        return False

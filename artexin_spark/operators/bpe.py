@@ -19,8 +19,8 @@ rows. Per step:
 - merge application: a pure column fold (``aggregate`` over the symbol
   array) — zero shuffle, zero Python, whole-stage codegen.
 
-Symbol frames ``localCheckpoint`` between steps (knob
-``checkpoint_every``) for the same reason kmeans' spread init does:
+Symbol frames ``localCheckpoint`` between steps for the same reason
+kmeans' spread init does:
 without truncation step i's pair-count action would recompute all i-1
 prior folds (O(n²) total fold work) and Catalyst would re-analyze an
 ever-deeper expression tree.
@@ -133,7 +133,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 8,
     min_pair_freq: int = 2,
-    checkpoint_every: int = 1,
     words: DataFrame | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus. Returns the merge
@@ -141,12 +140,9 @@ def bpe_train(
     feed it to ``bpe_apply`` / ``bpe_vocab``. Stops early when the best
     remaining pair's frequency drops below ``min_pair_freq``.
 
-    ``words``: pass a precomputed/persisted ``word_table`` to share the
-    corpus pass across trainers; by default it is derived here and
-    materialized by the first step's localCheckpoint.
-
-    ``checkpoint_every=0`` disables lineage truncation (testing only —
-    see module docstring for why that is O(n_merges²))."""
+    ``words``: pass a precomputed, checkpointed ``word_table`` to share
+    the corpus pass across trainers; by default it is derived here and
+    materialized by the first step's localCheckpoint."""
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     spark = df.sparkSession
@@ -154,8 +150,7 @@ def bpe_train(
     syms = w.select("word", "freq", char_symbols("word").alias("syms"))
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(1, n_merges + 1):
-        if checkpoint_every and (step - 1) % checkpoint_every == 0:
-            syms = syms.localCheckpoint()
+        syms = syms.localCheckpoint()
         top = (
             pair_counts(syms)
             .orderBy(F.desc("pair_freq"), F.asc("left"), F.asc("right"))

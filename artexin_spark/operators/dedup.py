@@ -160,10 +160,9 @@ def banded_sigs(
     id_col: str = "doc_id",
     bands: int = 4,
     max_bucket: int = 1000,
-    carry_sig: bool = True,
     checkpoint: bool = True,
 ) -> DataFrame:
-    """(id[, sig], band_idx, band_key) — one row per (doc, band).
+    """(id, sig, band_idx, band_key) — one row per (doc, band).
     ``max_bucket`` drops degenerate buckets (boilerplate shingle storms)
     before any quadratic pairing step.
 
@@ -179,11 +178,8 @@ def banded_sigs(
     executor MEMORY_AND_DISK storage, the standard persist-signatures
     trade (Lee et al. §4 pipelines do the same). Pass False to keep the
     fully-lazy plan (e.g. when composing into a larger one-pass query).
-
-    Failure mode: ``localCheckpoint`` severs lineage — its blocks live
-    only on the executors that computed them, so losing one of those
-    executors fails the job instead of recomputing the lost blocks."""
-    cols = [F.col(id_col)] + ([F.col("sig")] if carry_sig else [])
+    Executor-loss and block-release trade-offs: see the ``operators``
+    package docstring."""
     # balanced band boundaries floor(b·k/bands) cover EVERY signature slot
     # (an integer width k//bands silently dropped the trailing k%bands
     # slots from all band keys); identical slices when bands divides k.
@@ -204,7 +200,8 @@ def banded_sigs(
         )
 
     banded = sigs.select(
-        *cols,
+        F.col(id_col),
+        F.col("sig"),
         F.posexplode(
             F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), _band_key)
         ).alias("band_idx", "band_key"),
@@ -230,7 +227,7 @@ def lsh_pairs_jaccard(
     joins back against the signature table plus a distinct shuffle —
     measured 3.5× at sf0.1, and at 10^12 rows it's two fewer shuffles of
     the (wide) signature relation."""
-    banded = banded_sigs(sigs, id_col, bands, max_bucket, carry_sig=True)
+    banded = banded_sigs(sigs, id_col, bands, max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     # signature agreement computed per MATCHED-BAND row, before the pair
     # dedup: every band match of one pair yields the identical value, so
@@ -261,47 +258,6 @@ def lsh_pairs_jaccard(
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 4,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Band the signatures and self-join on band buckets → candidate pairs
-    (a < b), deduped. Kept for callers that only need the pair list; the
-    hot path is lsh_pairs_jaccard (fused)."""
-    banded = banded_sigs(sigs, id_col, bands, max_bucket, carry_sig=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a." + id_col) < F.col("b." + id_col)),
-        )
-        .select(
-            F.col("a." + id_col).alias("id_a"), F.col("b." + id_col).alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def minhash_jaccard_estimate(sigs: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Estimated jaccard = fraction of agreeing signature slots."""
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    j = pairs.join(sa, "id_a").join(sb, "id_b")
-    eq = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    )
-    return j.select(
-        "id_a", "id_b", (eq / F.size("sig_a")).alias("jaccard_est")
-    )
-
-
 def minhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -313,9 +269,9 @@ def minhash_dedup(
 ) -> DataFrame:
     """Docs flagged as near-duplicates of a lower-id doc (standard
     keep-first LSH dedup; clustering is per-pair, not transitive-closure —
-    iterate or connected-components for full clustering). Single-pass:
-    signatures feed the fused band+jaccard step exactly once, so nothing
-    needs caching."""
+    iterate or connected-components for full clustering). Signatures feed
+    the fused band+jaccard step once; its banded relation is the one
+    shared subtree, lazily checkpointed in ``banded_sigs``."""
     if not 1 <= bands <= k:
         # bands > k would make every band key md5('') — all docs collide,
         # the max_bucket filter drops everything, and the job silently
@@ -989,7 +945,6 @@ def substring_dedup_spans(
     window: int = 50,
     max_df: int | None = 10000,
     hash_mode: str = "rolling",
-    persist: bool = True,
 ) -> DataFrame:
     """Maximal duplicated-substring spans at ``window``-token granularity
     — the bucketed token-window approximation of Lee et al. 2021's
@@ -1037,23 +992,15 @@ def substring_dedup_spans(
     occurrence frame, and that join is where AQE's skew-split backstop
     applies to whatever residual hot keys survive the cap.
 
-    ``persist`` (default True) caches the narrow (id, pos, wh)
-    occurrence frame (MEMORY_AND_DISK): the stats branch and the
-    join-back probe are different plan subtrees, so without the cache
-    the scan→tokenize→hash work runs twice (exchange reuse can't fire
-    — one branch has a partial agg below the exchange). The cache is
-    ~24 bytes/token spilled to executor-local disk, strictly cheaper
-    than re-hashing a 100 TB corpus; pass False to trade the second
-    pass for zero cache footprint. Release it after materializing the
-    result via ``artexin_spark.operators.release_caches(result)`` —
-    repeated calls (an increment loop) otherwise accumulate caches."""
-    from . import attach_caches
-
-    occ = window_hash_occurrences(df, text_col, id_col, window, hash_mode)
-    if persist:
-        from pyspark import StorageLevel
-
-        occ = occ.persist(StorageLevel.MEMORY_AND_DISK)
+    The narrow (id, pos, wh) occurrence frame is lazily checkpointed:
+    the stats branch and the join-back probe are different plan
+    subtrees, so without it the scan→tokenize→hash work runs twice
+    (exchange reuse can't fire — one branch has a partial agg below the
+    exchange). The blocks are ~24 bytes/token spilled to executor-local
+    disk, strictly cheaper than re-hashing a 100 TB corpus."""
+    occ = window_hash_occurrences(
+        df, text_col, id_col, window, hash_mode
+    ).localCheckpoint(eager=False)
     stats = occ.groupBy("wh").agg(
         F.count("*").alias("df"),
         F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first"),
@@ -1067,8 +1014,7 @@ def substring_dedup_spans(
             & (F.col("pos") == F.col("first.pos"))
         )
     ).select(F.col(id_col), F.col("pos"), (F.col("pos") + window).alias("end"))
-    ret = merge_flag_islands(flagged, id_col)
-    return attach_caches(ret, [occ]) if persist else ret
+    return merge_flag_islands(flagged, id_col)
 
 
 def merge_flag_islands(flagged: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1163,7 +1109,6 @@ def incremental_minhash_dedup(
 
     from .. import storage as sink_io
 
-    inc_sigs = minhash_signatures(increment, text_col, id_col, k, n)
     hist = sink_io.read_snapshot(spark, sig_sink).select(F.col(id_col), "sig")
     # fail fast on a k mismatch: bands over 8-slot history sigs vs 16-slot
     # increment sigs essentially never collide, silently turning the
@@ -1176,9 +1121,15 @@ def incremental_minhash_dedup(
             f"signatures but this run asked for k={k} — use the committed "
             "k (signature spec evolution requires a table rewrite)"
         )
-    # checkpoint=False: these sides band PRECOMPUTED narrow signatures
-    # (history from the committed parquet, the small increment), so there
-    # is no expensive pipeline to share — and the lazy plan keeps the
+    # the increment's signatures feed both join sides, `dropped`, the
+    # survivors' anti-join and the commit: checkpointed once here (after
+    # the probe — under AQE building it already runs the minhash shuffle)
+    inc_sigs = minhash_signatures(increment, text_col, id_col, k, n).localCheckpoint(
+        eager=False
+    )
+    # checkpoint=False: the banded sides are narrow map-side transforms
+    # of signatures already computed (history from the committed parquet,
+    # the increment's checkpoint above) — and the lazy plan keeps the
     # history scan's narrow ReadSchema visible (plan-gated: history text
     # is never re-read)
     a = banded_sigs(inc_sigs, id_col, bands, max_bucket, checkpoint=False).alias(
@@ -1421,7 +1372,6 @@ def incremental_substring_dedup(
     hash_mode: str = "rolling",
     run_id: str | None = None,
     commit: bool = True,
-    persist: bool | None = None,
 ) -> DataFrame:
     """Substring dedup of a NEW increment against the already-committed
     corpus — the continuous-ingest shape of the Lee et al. operator,
@@ -1454,28 +1404,16 @@ def incremental_substring_dedup(
     (|distinct hashes| rows, not |occurrences|); the join back onto the
     occurrence frame gets AQE's skew-split backstop.
 
-    Hash-pass accounting: ``commit=True`` runs its own write action
-    before the caller evaluates the returned spans, so without a cache
-    the increment would be hashed once per ACTION (twice total).
-    ``persist=None`` (default) therefore persists the narrow occ frame
-    (MEMORY_AND_DISK) exactly when ``commit=True`` — the spans action
-    reuses the commit action's hashing work; pass an explicit bool to
-    override. After materializing the returned spans, release the cache
-    via ``artexin_spark.operators.release_caches(spans)`` — an ingest
-    loop calling this once per increment otherwise pins one
-    occurrence-frame cache per call."""
+    Hash-pass accounting: the narrow occ frame is lazily checkpointed,
+    so the increment is hashed once — the stats branch, the join-back
+    probe and (``commit=True``) the commit's own write action all read
+    the same blocks."""
     import uuid as _uuid
 
-    from . import attach_caches
-
     _check_substr_spec(hash_sink, window, hash_mode, publish=commit)
-    if persist is None:
-        persist = commit
-    occ = window_hash_occurrences(increment, text_col, id_col, window, hash_mode)
-    if persist:
-        from pyspark import StorageLevel
-
-        occ = occ.persist(StorageLevel.MEMORY_AND_DISK)
+    occ = window_hash_occurrences(
+        increment, text_col, id_col, window, hash_mode
+    ).localCheckpoint(eager=False)
     stats = occ.groupBy("wh").agg(
         F.count("*").alias("df"),
         F.min(F.struct(F.col(id_col), F.col("pos"))).alias("first"),
@@ -1508,7 +1446,7 @@ def incremental_substring_dedup(
     )
     spans = merge_flag_islands(flagged, id_col)
     if commit:
-        # reuse the per-wh stats frame (which reuses the persisted occ):
+        # reuse the per-wh stats frame (which reuses the checkpointed occ):
         # new hashes are exactly the increment's windows NOT in history,
         # with their in-increment df — no second tokenize/hash pass over
         # the text and no anti-join re-scan of the stored table
@@ -1520,7 +1458,7 @@ def incremental_substring_dedup(
             run_id or ("sub-" + _uuid.uuid4().hex[:10]),
             history=hist,
         )
-    return attach_caches(spans, [occ]) if persist else spans
+    return spans
 
 
 # --- embedding near-dup ------------------------------------------------------
@@ -1900,7 +1838,6 @@ def entity_blocking_pairs(
     max_df: int = 50,
     min_cbs: int = 2,
     shingle_n: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Entity-resolution candidate generation via blocking + CBS-weighted
     meta-blocking (the SparkER pattern, EDBT 2019 — see PAPERS.md):
@@ -1917,17 +1854,16 @@ def entity_blocking_pairs(
     base = df.select(
         F.col(id_col).alias("id"), tokens_col(text_col).alias("toks")
     )
+    # the posting index feeds THREE subtrees (df sizes + both self-join
+    # sides) and exchange reuse does not fire across them — same
+    # materialize-the-narrow-index-once trade as banded_sigs
     posting = (
         base.select(
             "id", F.explode(shingles_from("toks", shingle_n)).alias("tok")
         )
         .distinct()  # block membership, not term frequency
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        # the posting index feeds THREE subtrees (df sizes + both self-
-        # join sides) and exchange reuse does not fire across them — same
-        # materialize-the-narrow-index-once trade as banded_sigs
-        posting = posting.localCheckpoint(eager=False)
     sizes = posting.groupBy("tok").agg(F.count("*").alias("df"))
     blocks = posting.join(
         F.broadcast(
@@ -1962,9 +1898,9 @@ def substring_dedup_apply(
     TOUCHED docs only), one equi anti-join on (id, pos), one ordered
     re-aggregation per touched doc. NOTE: ``spans`` is referenced three
     times in this plan (touched-doc semi-join, touched flag, position
-    cut) — at scale, persist()/checkpoint the spans frame (it is tiny:
-    one row per flagged span, not per token) before calling, or Spark
-    re-derives it per reference. Docs without spans pass through with
+    cut) — at scale, ``localCheckpoint(eager=False)`` the spans frame (it
+    is tiny: one row per flagged span, not per token) before calling, or
+    Spark re-derives it per reference. Docs without spans pass through with
     their ORIGINAL text verbatim (cleaning must not normalize the whole
     corpus as a side effect — r02 review finding); a touched doc is
     rebuilt at token granularity (lowercased, punctuation-split — the

@@ -96,8 +96,8 @@ def pagerank(
             )
             # the eager localCheckpoint materializes ranks NOW, so
             # with_deg can release immediately; the PREVIOUS checkpoint's
-            # RDD goes unreferenced here and the ContextCleaner reclaims
-            # it (there is no public unpersist for localCheckpoint blocks)
+            # blocks stay until the ContextCleaner notices it unreachable
+            # (not promptly — see the operators package docstring)
             ranks = (
                 ranks.select("node_id")
                 .join(contribs, "node_id", "left")

@@ -586,7 +586,6 @@ def dsir_threshold(
     n_buckets: int = 64,
     alpha: float = 1.0,
     weight_buckets: int = 1024,
-    persist: bool = True,
 ) -> DataFrame:
     """Fraction-based DSIR cut — the documented above-top-k seam of
     ``dsir_select``: keep the top ``frac`` of ``raw`` by importance
@@ -618,17 +617,12 @@ def dsir_threshold(
        run with a plain ``log_w >= t`` filter, if exact-k at a tie cliff
        matters at 10^10 docs.
 
-    The three passes over the scored frame share one persisted narrow
-    projection (``persist=True``, released via the
-    ``attach_caches``/``release_caches`` seam — call ``release_caches``
-    on the returned object, or wrap in ``released_after``). Null-text
+    The three passes over the scored frame share one lazily checkpointed
+    narrow projection (without it each pass recomputes the scoring;
+    the first driver-side agg fills the blocks). Null-text
     docs (null log_w) are excluded from N and the cut — they cannot
     rank. Returns (id, n_grams, log_w) like ``dsir_select``."""
     import math
-
-    from pyspark import StorageLevel
-
-    from . import attach_caches
 
     if not 0.0 < frac <= 1.0:
         raise ValueError(f"frac must be in (0, 1], not {frac}")
@@ -638,18 +632,16 @@ def dsir_threshold(
         raw, target, text_col=text_col, id_col=id_col, n=n,
         n_buckets=n_buckets, alpha=alpha,
     )
-    scored = imp.filter(F.col("log_w").isNotNull()).withColumn(
-        "_w", _microunits(F.col("log_w"))
+    scored = (
+        imp.filter(F.col("log_w").isNotNull())
+        .withColumn("_w", _microunits(F.col("log_w")))
+        .localCheckpoint(eager=False)
     )
-    if persist:
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
     head = scored.agg(
         F.count("*").alias("n"), F.min("_w").alias("lo"), F.max("_w").alias("hi")
     ).collect()[0]  # 1 row — model state
     n_scored = int(head["n"])
     if n_scored == 0:
-        if persist:
-            scored.unpersist()  # the raise must not strand the cache
         raise ValueError("no scored documents (all-null text?)")
     k = min(n_scored, max(1, math.ceil(frac * n_scored)))
     lo, hi = int(head["lo"]), int(head["hi"])
@@ -679,5 +671,4 @@ def dsir_threshold(
         .orderBy(F.desc("_w"), F.asc(id_col))
         .limit(k - cum_before)
     )
-    out = keep_above.unionByName(boundary).select(id_col, "n_grams", "log_w")
-    return attach_caches(out, [scored]) if persist else out
+    return keep_above.unionByName(boundary).select(id_col, "n_grams", "log_w")

@@ -456,8 +456,9 @@ def kmeans_fit(
         # O(i)-deep tree each round (O(k²) driver work) and a dropped
         # cache would cascade recomputation through every prior join —
         # checkpointing truncates lineage to a scan of the materialized
-        # round; superseded rounds are cleaned by the ContextCleaner
-        # when the loop drops the last reference.
+        # round; superseded rounds' blocks stay until the ContextCleaner
+        # notices them unreachable (not promptly — see the operators
+        # package docstring).
         closest = vectors.select(
             F.col(id_col), F.col(vec_col), norm_expr(vec_col).alias("_vn")
         ).withColumn("_closest", F.lit(-2.0))

@@ -249,8 +249,8 @@ def bm25_rank(
 
     ``pretokenized_col`` names an existing ``array<string>`` tokens
     column to use instead of tokenizing ``text_col`` — the many-queries
-    seam: tokenize (and persist) the corpus once, then every query's
-    two passes read the narrow cached tokens instead of re-splitting
+    seam: tokenize (and checkpoint) the corpus once, then every query's
+    two passes read the narrow checkpointed tokens instead of re-splitting
     the fat text twice per query.
 
     Scale shape: per-term tf is a native array filter over a projected
@@ -263,7 +263,7 @@ def bm25_rank(
     subtrees, so no exchange reuse — the unavoidable two-pass shape of
     any global-statistics score); both passes prune to the narrow
     (id, dl, tf…) projection, and a caller running MANY queries against
-    one corpus should persist that projection once and pass it in via
+    one corpus should checkpoint that projection once and pass it in via
     ``text_col`` precomputation. ln() on integer counts keeps idf
     reproducible in any engine.
 
@@ -337,7 +337,6 @@ def bm25_rank_multi(
     b: float = 0.75,
     topk: int = 10,
     pretokenized_col: str | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """BM25 for MANY queries in ONE corpus pass — the batch shape a
     curation pipeline slicing for hundreds of topics needs (r03-verdict
@@ -345,8 +344,8 @@ def bm25_rank_multi(
     re-tokenize the corpus 2Q times).
 
     Scale shape: the corpus tokenizes ONCE into a narrow (id, dl, toks)
-    projection (persisted by default — the stats branch and the posting
-    branch both read the cache, so the plan's two scans are one runtime
+    projection (lazily checkpointed — the stats branch and the posting
+    branch both read its blocks, so the plan's two scans are one runtime
     pass); tokens explode and immediately broadcast-semi-join against
     the distinct query-term set, so only query-relevant postings survive
     into the (id, term, tf) hash-agg. Corpus stats (N, avgdl) reduce to
@@ -365,7 +364,6 @@ def bm25_rank_multi(
     bit-for-bit (pinned by a parity test).
 
     Returns (query_id, id, score, rank), rank 1..topk per query."""
-    from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
     from .dedup import tokens_col
@@ -388,11 +386,11 @@ def bm25_rank_multi(
     toks_expr = (
         F.col(pretokenized_col) if pretokenized_col else tokens_col(text_col)
     )
-    toked = df.select(F.col(id_col), toks_expr.alias("_toks")).select(
-        F.col(id_col), F.size("_toks").alias("_dl"), F.col("_toks")
+    toked = (
+        df.select(F.col(id_col), toks_expr.alias("_toks"))
+        .select(F.col(id_col), F.size("_toks").alias("_dl"), F.col("_toks"))
+        .localCheckpoint(eager=False)
     )
-    if persist:
-        toked = toked.persist(StorageLevel.MEMORY_AND_DISK)
     stats = toked.agg(F.count("*").alias("_n"), F.avg("_dl").alias("_avgdl"))
     posting = (
         toked.select(F.col(id_col), F.col("_dl"), F.explode("_toks").alias("term"))
@@ -428,19 +426,13 @@ def bm25_rank_multi(
         .filter(F.col("score") > 0)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    ret = (
+    return (
         per_q_doc.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= topk)
         .select(
             "query_id", F.col(id_col), F.round("score", 6).alias("score"), "rank"
         )
     )
-    if persist:
-        # release after materializing: artexin_spark.operators.release_caches
-        from . import attach_caches
-
-        ret = attach_caches(ret, [toked])
-    return ret
 
 
 def curate(
@@ -1046,7 +1038,7 @@ def unigram_logprob_score(
     ``broadcast_vocab=True`` fits vocabularies up to the broadcast budget
     (tens of millions of terms); at web scale the unigram table outgrows
     it — pass False for a plain shuffle hash join on the term (both
-    sides narrow), or persist the freq table bucketed by term and
+    sides narrow), or write the freq table bucketed by term and
     bucket-join. The plan shape is otherwise identical."""
     from .dedup import tokens_col
 
@@ -1076,7 +1068,6 @@ def bigram_lm_score(
     id_col: str = "doc_id",
     alpha: float = 0.5,
     broadcast_vocab: bool = True,
-    persist: bool = False,
 ) -> DataFrame:
     """CCNet-style LM gate, one order up from ``unigram_logprob_score``:
     score each document by its mean conditional bigram log-probability
@@ -1098,16 +1089,11 @@ def bigram_lm_score(
     sides are narrow shuffle-hash joins on a token key); one final (id)
     agg. No window, no cartesian, no Python.
 
-    The shared projection is plan-level sharing only: its four
-    consumers (unigram counts, V, bigram counts, scoring) sit under
-    DIFFERENT aggregates, so exchange reuse cannot fire and the default
-    plan re-tokenizes the corpus once per branch at runtime.
-    ``persist=True`` caches the narrow (id, _toks) projection
-    MEMORY_AND_DISK so the regex split runs once — the same shared-
-    subtree discipline as ``substring_dedup_spans`` / ``bm25_rank_multi``,
-    with the same contract: release via ``operators.release_caches`` on
-    the returned frame (or ``operators.released_after``) after
-    materializing.
+    The shared projection's four consumers (unigram counts, V, bigram
+    counts, scoring) sit under DIFFERENT aggregates, so exchange reuse
+    cannot fire; the narrow (id, _toks) projection is lazily
+    checkpointed so the regex split runs once — the same shared-subtree
+    discipline as ``substring_dedup_spans`` / ``bm25_rank_multi``.
 
     Docs with <2 tokens have no bigram and are absent from the output
     (the caller left-joins and treats null as "no evidence"). Returns
@@ -1118,14 +1104,11 @@ def bigram_lm_score(
     a plain AVG would hang round(·,6) on summation order). V stays IN
     the plan as a 1-row distinct-count aggregate broadcast-crossjoined
     back (no eager corpus pass at construction time)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from . import attach_caches
     from .dedup import tokens_col
 
-    toks = df.select(F.col(id_col), tokens_col(text_col).alias("_toks"))
-    if persist:
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    toks = df.select(
+        F.col(id_col), tokens_col(text_col).alias("_toks")
+    ).localCheckpoint(eager=False)
     uni = toks.select(F.explode("_toks").alias("tok"))
     uni_counts = uni.groupBy("tok").agg(F.count("*").alias("cu"))
     vocab_row = uni.groupBy().agg(
@@ -1174,11 +1157,10 @@ def bigram_lm_score(
     arr = F.array_sort(F.collect_list(F.struct("prev", "cur", "lp")))
     s = F.aggregate(arr, F.lit(0.0), lambda a, x: a + x["lp"])
     n = F.count("*")
-    out = scored.groupBy(id_col).agg(
+    return scored.groupBy(id_col).agg(
         n.alias("n_bigrams"),
         F.round(s / n.cast("double"), 6).alias("mean_logprob"),
     )
-    return attach_caches(out, [toks]) if persist else out
 
 
 def char_entropy(

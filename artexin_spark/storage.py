@@ -599,16 +599,15 @@ def read_snapshot(
     data-skipping read: at 10^12 rows a range probe on a stats-tracked
     column opens only the overlapping buckets' files. The residual row
     filter is applied either way, so the result is exactly the rows
-    matching the predicate whether or not stats exist."""
+    matching the predicate whether or not stats exist, and its columns
+    are the snapshot's whichever buckets the stats keep."""
     rows = _snapshot_rows(sink, snapshot_id)
     kept = [
         (r["run_id"], r["part_key"])
         for r in rows
         if where is None or _stats_may_match(r["stats"], where)
     ]
-    if not kept:  # every bucket pruned: empty result, live schema
-        return _read_mapping(spark, sink, [], {r["run_id"] for r in rows})
-    out = _read_mapping(spark, sink, kept)
+    out = _read_mapping(spark, sink, kept, {r["run_id"] for r in rows})
     if where is not None:
         col, lo, hi = where
         if lo is not None:
@@ -686,8 +685,8 @@ def read_incremental(
         if k in to_map
         for rid in sorted(to_map[k])
     ]
-    # nothing changed: an empty result with the schema of ``to``
-    runs = None if pairs else {rid for rids in to_map.values() for rid in rids}
+    # typed by ``to``'s schema whichever buckets changed (none: empty)
+    runs = {rid for rids in to_map.values() for rid in rids}
     return _read_mapping(spark, sink, pairs, runs)
 
 

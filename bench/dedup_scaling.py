@@ -161,14 +161,11 @@ def main() -> None:
             "simhash_pairs": lambda d=docs: dd.simhash_dedup(
                 d, max_hamming=3, bits=64
             ).count(),
-            # clearCache first: substring_dedup_spans persists its occ
-            # frame (by design — hash once, read twice); without the
-            # clear, the 2nd timed rep would hit the 1st rep's cache and
-            # time only the post-hash stages
-            "substring_rolling": lambda d=docs: (
-                spark.catalog.clearCache(),
-                dd.substring_dedup_spans(d, window=20).count(),
-            )[1],
+            # each call checkpoints a fresh occ frame (hash once, read
+            # twice), so every timed rep pays the full hash pass
+            "substring_rolling": lambda d=docs: dd.substring_dedup_spans(
+                d, window=20
+            ).count(),
             # planes sized to the corpus (≈ log2(N/128)): per-bucket work
             # is Θ(N²/2^planes), so FIXED planes is quadratic in N
             # (measured: defaults at 32k vectors cost 16× the 8k wall).

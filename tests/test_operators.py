@@ -10,6 +10,17 @@ import os as _os
 REPO_OPS = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
 
 
+def _rdd_scans(plan: str) -> list[list[str]]:
+    """Column names of every ``Scan ExistingRDD`` leaf in a plan string —
+    how a checkpointed frame (and a ``createDataFrame`` input) reads back."""
+    import re
+
+    return [
+        [c.split("#")[0] for c in cols.split(",")]
+        for cols in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
+    ]
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF}/documents.parquet")
@@ -547,8 +558,7 @@ def test_lsh_pairs_find_mutated_near_dups(spark, docs):
     )
     both = base.unionByName(mut)
     sigs = dedup.minhash_signatures(both, k=16, n=3)
-    pairs = dedup.lsh_candidate_pairs(sigs, bands=8)
-    est = dedup.minhash_jaccard_estimate(sigs, pairs).toPandas()
+    est = dedup.lsh_pairs_jaccard(sigs, bands=8).toPandas()
     planted = est[(est.id_b - est.id_a == 10000)]
     assert len(planted) >= 36  # ≥90% recall of the 40 planted pairs
     assert (planted.jaccard_est >= 0.5).all()
@@ -906,7 +916,7 @@ def test_minhash_band_params_validated_and_tail_slots_count(spark):
         [(1, list(range(10))), (2, list(range(9)) + [99])],
         "doc_id long, sig array<long>",
     )
-    banded = dedup.banded_sigs(sigs, bands=4, carry_sig=False).toPandas()
+    banded = dedup.banded_sigs(sigs, bands=4).toPandas()
     last = banded[banded.band_idx == 3]
     keys = set(last.band_key)
     assert len(keys) == 2  # docs differ ONLY in slot 10 → last band differs
@@ -1439,22 +1449,25 @@ def test_substring_dedup_plan_no_cartesian(spark):
     import re
 
     for mode, n_py in (("rolling", 1), ("md5", 0)):
+        # the occurrence frame: rolling is ONE vectorized Arrow crossing,
+        # md5 (oracle twin) fully native; never row-at-a-time Python
+        occ_plan = (
+            dedup.window_hash_occurrences(df, "text", "doc_id", 10, mode)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "BatchEvalPython" not in occ_plan
+        assert occ_plan.count("ArrowEvalPython") == n_py, (mode, occ_plan)
         plan = (
             dedup.substring_dedup_spans(df, window=10, hash_mode=mode)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        # rolling: ONE vectorized Arrow crossing at runtime — the occ
-        # frame is cached (default persist=True), so the stats branch
-        # and the join-back probe are two InMemoryTableScans over ONE
-        # InMemoryRelation whose child holds the single Arrow roll (the
-        # plan STRING prints that child once per relation reference,
-        # hence n_py*2 textual hits backed by one runtime evaluation).
-        # md5 (oracle twin): fully native. Never row-at-a-time Python.
-        assert "BatchEvalPython" not in plan
-        assert plan.count("InMemoryTableScan") == 2, (mode, plan)
-        assert plan.count("ArrowEvalPython") == n_py * 2, (mode, plan)
+        # the occ frame is checkpointed: the stats branch and the
+        # join-back probe both read it as Scan ExistingRDD, and neither
+        # re-plans the text scan, the tokenizer or the hasher
+        assert _rdd_scans(plan) == [["doc_id", "pos", "wh"]] * 2, (mode, plan)
+        assert "split(" not in plan and "EvalPython" not in plan, (mode, plan)
         # the r03-verdict de-skew: per-hash df/first must come from a
         # groupBy (map-side partials), never a window keyed on the
         # content hash (one task per hot hash, no AQE backstop)
@@ -2049,7 +2062,7 @@ def test_ivf_trained_centroids_recall_and_probe_monotone(spark, emb):
 
 
 def test_bm25_pretokenized_parity(spark):
-    """The many-queries seam: a persisted tokens column must rank
+    """The many-queries seam: a precomputed tokens column must rank
     identically to the text path (same tokenizer contract)."""
     rows = [(i, f"hash merge doc{i} " * (i + 1)) for i in range(6)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -2085,8 +2098,8 @@ def test_bm25_multi_semantics_and_plan(spark):
     """Three queries in one corpus pass: per-query top-k independent,
     shared terms fan out after the posting agg, docs matching nothing
     excluded. Plan: WindowGroupLimit (map-side per-query top-k), the
-    tokenize projection read from cache (one runtime corpus pass), no
-    Python nodes."""
+    tokenize projection read from its checkpoint (one runtime corpus
+    pass), no Python nodes."""
     rows = (
         [(i, "spark partition join data") for i in range(10)]
         + [(100 + i, "python pandas arrow batch " + "shuffle " * i) for i in range(4)]
@@ -2100,7 +2113,12 @@ def test_bm25_multi_semantics_and_plan(spark):
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan
-    assert "InMemoryTableScan" in plan, plan
+    # every branch reads the checkpointed (id, dl, toks) projection;
+    # none re-plans the text scan or the tokenizer
+    scans = _rdd_scans(plan)
+    assert scans.count(["doc_id", "_dl", "_toks"]) >= 2, plan
+    assert not any("text" in cols for cols in scans), plan
+    assert "split(" not in plan, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     p = out.toPandas()
     assert set(p["query_id"]) == {"a", "b"}  # no doc matches query c
@@ -2123,36 +2141,6 @@ def test_bm25_multi_empty_query_raises(spark):
         textstats.bm25_rank_multi(df, {"a": ["join"], "b": []})
     with pytest.raises(ValueError):
         textstats.bm25_rank_multi(df, {})
-
-
-def test_release_caches_seam(spark):
-    """Operators that persist a shared subtree on the caller's behalf
-    (substring spans' occ frame, batched BM25's tokenize projection)
-    must hand back a release seam: an ingest loop calling them per
-    increment otherwise pins one cache per call forever, and
-    spark.catalog.clearCache() nukes unrelated caches too."""
-    from artexin_spark.operators import release_caches
-
-    rows = [(i, "alpha beta gamma delta " * 8 + f"tail{i}") for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    spans = dedup.substring_dedup_spans(df, window=8)
-    spans.count()  # materialize (fills the occ cache)
-    cached = list(getattr(spans, "_artexin_caches", ()))
-    assert len(cached) == 1
-    assert cached[0].storageLevel.useMemory or cached[0].storageLevel.useDisk
-    assert release_caches(spans, blocking=True) == 1
-    assert not cached[0].storageLevel.useMemory
-    assert not cached[0].storageLevel.useDisk
-    assert release_caches(spans) == 0  # idempotent
-
-    ranked = textstats.bm25_rank_multi(df, {"a": ["alpha"]})
-    ranked.count()
-    assert release_caches(ranked, blocking=True) == 1
-
-    # persist=False results carry no caches — nothing to release
-    spans2 = dedup.substring_dedup_spans(df, window=8, persist=False)
-    assert release_caches(spans2) == 0
 
 
 def test_hashed_ngram_fit_matches_pure_python_reference(spark):
@@ -2408,7 +2396,7 @@ def test_incremental_substring_edge_contracts(spark, tmp_path):
     assert sid is None  # nothing new -> no snapshot published
     assert dedup.read_window_hashes(spark, sink).count() == n1
     spans = dedup.incremental_substring_dedup(
-        spark, df, sink, window=20, run_id="d", persist=True
+        spark, df, sink, window=20, run_id="d"
     )
     assert spans.count() == 1  # the whole doc is historical material
     assert dedup.read_window_hashes(spark, sink).count() == n1
@@ -2480,11 +2468,11 @@ def test_incremental_substring_pre_df_history_table(spark, tmp_path):
     assert dedup.read_window_hashes(spark, sink).columns == ["wh"]
 
 
-def test_incremental_substring_persist_on_commit_single_hash(spark, tmp_path):
-    """commit=True defaults to persisting the narrow occ frame so the
-    spans action reuses the commit action's tokenize+hash work (the
-    increment is hashed ONCE, not once per action): the returned plan
-    must read the occurrence subtree from cache."""
+def test_incremental_substring_checkpoint_single_hash(spark, tmp_path):
+    """The narrow occ frame is checkpointed, so the spans action reuses
+    the commit action's tokenize+hash work (the increment is hashed
+    ONCE, not once per action): the returned plan must read the
+    occurrence subtree from the checkpoint and never re-plan it."""
     sink = str(tmp_path / "whper")
     df = spark.createDataFrame(
         [(i, " ".join(f"per{i}x{j}" for j in range(20))) for i in range(6)],
@@ -2494,7 +2482,8 @@ def test_incremental_substring_persist_on_commit_single_hash(spark, tmp_path):
         spark, df, sink, window=10, run_id="p1"
     )
     plan = spans._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
+    assert _rdd_scans(plan) == [["doc_id", "pos", "wh"]] * 2, plan
+    assert "split(" not in plan and "EvalPython" not in plan, plan
     assert spans.count() == 0
 
 
@@ -2564,34 +2553,6 @@ def test_bigram_lm_score_matches_hand_model(spark):
     # higher-probability sequences score higher: doc 3 ("z z" seen twice,
     # z always followed by z) beats doc 1's mixed transitions
     assert out[3][1] > out[1][1]
-
-
-def test_bigram_lm_score_persist_path_identical(spark, docs):
-    """persist=True (cache the shared (id, _toks) projection once
-    instead of re-tokenizing per aggregate branch) must be a pure
-    execution-strategy knob: row-for-row identical output, one cache
-    attached and releasable via the operators seam."""
-    from artexin_spark import operators as ops
-
-    d = docs.limit(120).select("doc_id", "text")
-    base = {
-        r.doc_id: (r.n_bigrams, r.mean_logprob)
-        for r in textstats.bigram_lm_score(d).collect()
-    }
-    cached = textstats.bigram_lm_score(d, persist=True)
-    got = {
-        r.doc_id: (r.n_bigrams, r.mean_logprob) for r in cached.collect()
-    }
-    assert got == base
-    assert ops.release_caches(cached) == 1
-    # released frame releases nothing twice; default path attaches none
-    assert ops.release_caches(cached) == 0
-    assert ops.release_caches(textstats.bigram_lm_score(d)) == 0
-    # the context manager holds the handle across derived transforms
-    with ops.released_after(textstats.bigram_lm_score(d, persist=True)) as ra:
-        assert ra.filter("n_bigrams > 0").count() > 0
-    # handle released on exit even though the body only used a derived df
-    assert ops.release_caches(ra) == 0
 
 
 def test_rrf_fuse_integer_scores_and_order(spark):
@@ -2926,12 +2887,9 @@ def test_dsir_lambda_quantization_margin(spark, docs):
 def test_dsir_threshold_equals_topk_including_tie_boundary(spark, docs):
     """dsir_threshold (the no-global-sort fraction cut) must return
     EXACTLY dsir_select's top-ceil(frac*N) set — including when the cut
-    lands inside a run of identical weights (the id-order tie trim) —
-    and must release its shared-projection cache through the
-    attach_caches seam."""
+    lands inside a run of identical weights (the id-order tie trim)."""
     import math
 
-    from artexin_spark.operators import release_caches
     from artexin_spark.operators import sampling as sp
 
     tgt = docs.filter("lang = 'en'")
@@ -2939,7 +2897,6 @@ def test_dsir_threshold_equals_topk_including_tie_boundary(spark, docs):
     for frac in (0.06, 0.3, 1.0):
         th = sp.dsir_threshold(docs, tgt, frac)
         got = th.toPandas().sort_values("doc_id").reset_index(drop=True)
-        assert release_caches(th) == 1  # the persisted scored projection
         k = min(N, max(1, math.ceil(frac * N)))
         exp = (
             sp.dsir_select(docs, tgt, k)
@@ -2956,7 +2913,7 @@ def test_dsir_threshold_equals_topk_including_tie_boundary(spark, docs):
     dtgt = dup.filter("doc_id < 20")
     th = sorted(
         r.doc_id
-        for r in sp.dsir_threshold(dup, dtgt, 0.25, persist=False).collect()
+        for r in sp.dsir_threshold(dup, dtgt, 0.25).collect()
     )
     tk = sorted(
         r.doc_id
@@ -2969,15 +2926,14 @@ def test_dsir_threshold_equals_topk_including_tie_boundary(spark, docs):
         sp.dsir_threshold(docs, tgt, 1.5)
     with pytest.raises(ValueError):
         sp.dsir_threshold(docs, tgt, 0.5, weight_buckets=0)
-    # an empty/all-null corpus raises at the lambda stage (before any
-    # persist; the later no-scored-docs guard also unpersists on its
-    # raise path) and must strand no cache either way
+    # an empty/all-null corpus raises at the lambda stage, before the
+    # scored frame is checkpointed, so it strands no checkpoint blocks
     nulls = spark.createDataFrame(
         [(1, None), (2, None)], "doc_id long, text string"
     )
     n_cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError, match="no n-grams"):
-        sp.dsir_threshold(nulls, dup, 0.5, persist=True)
+        sp.dsir_threshold(nulls, dup, 0.5)
     assert (
         spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached_before
     )

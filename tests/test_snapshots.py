@@ -446,6 +446,39 @@ def test_stats_carry_forward_and_null_stats_stay_readable(spark, tmp_path):
     assert set(none.columns) == {"id", "payload", "part_key"}
 
 
+def test_read_columns_do_not_depend_on_pruning(spark, tmp_path):
+    """A snapshot read has the snapshot's columns whichever buckets the
+    stats keep, and an incremental read has ``to``'s columns whichever
+    buckets changed: a later run that adds a column to one bucket must
+    not make the column set hinge on the range asked for."""
+    sink = str(tmp_path / "evolved_sink")
+    base = spark.range(400).selectExpr("id", "cast(id / 100 as int) part_key")
+    sink_io.write_run_data(base, sink, "r1")
+    sink_io.commit_snapshot(spark, sink, "r1", stats_cols=["id"])
+    # r2 rewrites bucket 3 only, adding a column
+    wide = spark.range(300, 310).selectExpr(
+        "id", "cast(3 as int) part_key", "concat('x', id) extra"
+    )
+    sink_io.write_run_data(wide, sink, "r2")
+    sink_io.commit_snapshot(spark, sink, "r2", stats_cols=["id"])
+
+    kept = sink_io.read_snapshot(spark, sink, where=("id", 0, 39))
+    pruned = sink_io.read_snapshot(spark, sink, where=("id", 5000, 6000))
+    assert kept.inputFiles() and all("run=r1" in f for f in kept.inputFiles())
+    assert sorted(kept.columns) == sorted(pruned.columns) == ["extra", "id", "part_key"]
+    assert kept.filter("extra is not null").count() == 0 and kept.count() == 40
+    assert pruned.count() == 0
+
+    # r3 rewrites bucket 0 without the column: the delta since r2 holds
+    # only r3's bucket, and still reads with the live columns
+    narrow = spark.range(5).selectExpr("id", "cast(0 as int) part_key")
+    sink_io.write_run_data(narrow, sink, "r3")
+    sink_io.commit_snapshot(spark, sink, "r3")
+    delta = sink_io.read_incremental(spark, sink, since_snapshot_id=2)
+    assert sorted(delta.columns) == ["extra", "id", "part_key"]
+    assert sorted(r["id"] for r in delta.collect()) == list(range(5))
+
+
 def test_compaction_inherits_stats_and_sorts_within_buckets(spark, tmp_path):
     """A 'replace' commit rewrites byte-identical data, so the parent's
     per-bucket stats still hold — compaction must inherit them (data

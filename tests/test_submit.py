@@ -13,6 +13,15 @@ from artexin_spark.corpus import gen_transcripts
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _failure(proc) -> str:
+    """The part of a failed job's stderr that explains it: from the last
+    ``Traceback`` line on (Spark's shutdown log follows the traceback, so
+    a plain tail cuts it off), or the last 4000 characters without one."""
+    err = proc.stderr
+    start = err.rfind("Traceback")
+    return err[start:start + 4000] if start >= 0 else err[-4000:]
+
+
 def test_spark_submit_py_files_end_to_end(spark, tmp_path):
     src = str(tmp_path / "transcripts")
     pdf = gen_transcripts(n_convs=12, seed=5, with_source=True)
@@ -33,7 +42,7 @@ def test_spark_submit_py_files_end_to_end(spark, tmp_path):
         text=True,
         timeout=540,
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.returncode == 0, _failure(proc)
     stats = json.loads(proc.stdout.strip().splitlines()[-1])
     assert stats["rows"] == len(pdf)
     assert stats["snapshot_id"] == 1
@@ -64,7 +73,7 @@ def test_spark_submit_stream_mode_incremental(spark, tmp_path):
              "--buckets", "4", "--stream", "--checkpoint", ck],
             env=env, capture_output=True, text=True, timeout=540,
         )
-        assert p.returncode == 0, p.stderr[-4000:]
+        assert p.returncode == 0, _failure(p)
         return json.loads(p.stdout.strip().splitlines()[-1])
 
     first = submit()
@@ -95,7 +104,7 @@ def test_spark_submit_stream_adopts_the_sinks_bucket_spec(spark, tmp_path):
             ["bash", os.path.join(REPO, "bench", "run.sh"), src, sink, *extra],
             env=env, capture_output=True, text=True, timeout=540,
         )
-        assert p.returncode == 0, p.stderr[-4000:]
+        assert p.returncode == 0, _failure(p)
         return json.loads(p.stdout.strip().splitlines()[-1])
 
     assert submit("--buckets", "4")["snapshot_id"] == 1
@@ -130,7 +139,7 @@ def test_spark_submit_json_bad_records_quarantine(spark, tmp_path):
          "--bad-records", quarantine, "--source-col", "source"],
         env=env, capture_output=True, text=True, timeout=540,
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.returncode == 0, _failure(proc)
     stats = json.loads(proc.stdout.strip().splitlines()[-1])
     assert stats["ingest_bad_records"] == 2
     assert stats["rows"] == 8 and stats["errors"] == 0
@@ -150,7 +159,7 @@ def test_spark_submit_json_bad_records_quarantine(spark, tmp_path):
          "--buckets", "4", "--input-format", "json"],
         env=env, capture_output=True, text=True, timeout=540,
     )
-    assert proc2.returncode == 0, proc2.stderr[-4000:]
+    assert proc2.returncode == 0, _failure(proc2)
     stats2 = json.loads(proc2.stdout.strip().splitlines()[-1])
     assert stats2["rows"] == 10 and stats2["errors"] == 2
     assert "ingest_bad_records" not in stats2

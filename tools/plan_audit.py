@@ -5,11 +5,11 @@ count the shapes that matter at scale — exchanges, sort aggregates, sorts,
 python nodes, joins by strategy, parquet scans per table, cartesian
 products. Emits one JSON line per query to stdout (plus a summary), so the
 round's audit checklist is generated evidence, not prose. A query that
-returns rows it already materialized (its plan's leaves are all in-memory
-rows) is recorded with ``"audited": false`` and printed as ``SKIP``, not
-as all-zero counts. ``--plans-dir`` also writes each query's formatted
-plan to ``<plans-dir>/<query>.txt`` (before/after plan diffs for a
-change).
+returns rows it already materialized (its plan is one in-memory leaf
+under only ``Project``/``Filter``) is recorded with ``"audited": false``
+and printed as ``SKIP``, not as all-zero counts. ``--plans-dir`` also
+writes each query's formatted plan to ``<plans-dir>/<query>.txt``
+(before/after plan diffs for a change).
 
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.01] [--out f.json]
            [--only q_a,q_b] [--plans-dir plans/new]
@@ -28,17 +28,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-#: Physical leaves that hold rows already computed on the driver.
+#: Physical leaves that hold rows already computed (driver rows, or an
+#: RDD such as a ``localCheckpoint``).
 _IN_MEMORY_LEAVES = {"LocalTableScan", "Scan ExistingRDD"}
 
 
 def _materialized(df) -> bool:
-    """True when every leaf of ``df``'s physical plan is in-memory rows: the
-    query did its work (extract, write, commit, ...) before returning a
-    ``createDataFrame`` of the result, so its plan shows none of that work
-    and counting its shapes would report zeros for work that did happen."""
-    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
-    return all(leaves.apply(i).nodeName() in _IN_MEMORY_LEAVES for i in range(leaves.size()))
+    """True when ``df``'s physical plan is one in-memory leaf under nothing
+    but ``Project``/``Filter``: the query did its work (extract, write,
+    commit, ...) before returning a ``createDataFrame`` of the result, so
+    its plan shows none of that work and counting its shapes would report
+    zeros for work that did happen. A plan that joins or aggregates above
+    in-memory leaves (an operator reading its own lazy checkpoint) still
+    holds the work it counts, and is audited."""
+    node = df._jdf.queryExecution().sparkPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.children().apply(0)
+    return node.nodeName() in _IN_MEMORY_LEAVES
 
 
 def main() -> None:
