@@ -10,10 +10,11 @@ Skew is deliberate: ``hot_frac`` of conversations carry ``hot_mult``× the
 turns, so a naive partition-by-conv_id plan exhibits straggler tasks and
 the pipeline's salting has something real to flatten (SURVEY.md §7.4).
 
-Golden outputs are produced single-node by the SAME ``extract_turn`` the
-Spark UDF wraps — per-turn equality between the golden frame and the
-cluster run is therefore structural, not accidental (FIXTURES.md §2).
-No external data, no network, no wall-clock nondeterminism.
+The test suite's golden outputs run the SAME ``extract_turn`` the Spark
+stage wraps over this corpus, single-node — per-turn equality between the
+golden frame and the cluster run is therefore structural, not accidental
+(FIXTURES.md §2). No external data, no network, no wall-clock
+nondeterminism.
 """
 
 from __future__ import annotations
@@ -24,8 +25,6 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 
-from .preprocess import preps_for
-from .readability import extract_turn
 
 BASE_TS = datetime(2026, 1, 1, 0, 0, 0)
 
@@ -135,35 +134,6 @@ def gen_transcripts(
     pdf = pd.DataFrame(rows)
     pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
     return pdf
-
-
-def golden_extract(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-node golden outputs: the same extract_turn the UDF wraps,
-    run sequentially (FIXTURES.md §2). Compared against the Spark run for
-    exact per-turn text equality under ORDER BY conv_id, turn_idx."""
-    out = []
-    for row in pdf.itertuples(index=False):
-        src = getattr(row, "source", "") or ""
-        preps = preps_for(src)
-        # with_html=False: matches the UDF path being compared against
-        # (udfs.py) and skips the ~10% document-render cost for a field
-        # the golden frame never stores
-        res = extract_turn(
-            row.text, base_url=src, preprocessors=preps, with_html=False
-        )
-        out.append(
-            {
-                "conv_id": row.conv_id,
-                "turn_idx": row.turn_idx,
-                "title": res.title,
-                "extracted_text": res.text,
-                "spans": [{"start": s, "end": e} for s, e in res.spans],
-                "n_images": res.n_images,
-                "error": res.error,
-            }
-        )
-    gold = pd.DataFrame(out)
-    return gold.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
 
 
 def synth_transcripts(spark, n_convs: int = 100, seed: int = 42, **kw):

@@ -26,6 +26,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -1105,7 +1107,6 @@ def incremental_minhash_dedup(
     still drops, same one-pass semantics as curate()). Survivors'
     signatures are append-committed (``commit=True``) so the next
     increment dedups against them too. Returns the surviving rows."""
-    import uuid as _uuid
 
     from .. import storage as sink_io
 
@@ -1178,7 +1179,7 @@ def incremental_minhash_dedup(
             spark,
             surv_sigs,
             sig_sink,
-            run_id or ("inc-" + _uuid.uuid4().hex[:10]),
+            run_id or ("inc-" + uuid.uuid4().hex[:10]),
             id_col,
         )
     return survivors
@@ -1408,7 +1409,6 @@ def incremental_substring_dedup(
     so the increment is hashed once — the stats branch, the join-back
     probe and (``commit=True``) the commit's own write action all read
     the same blocks."""
-    import uuid as _uuid
 
     _check_substr_spec(hash_sink, window, hash_mode, publish=commit)
     occ = window_hash_occurrences(
@@ -1455,7 +1455,7 @@ def incremental_substring_dedup(
             spark,
             new,
             hash_sink,
-            run_id or ("sub-" + _uuid.uuid4().hex[:10]),
+            run_id or ("sub-" + uuid.uuid4().hex[:10]),
             history=hist,
         )
     return spans

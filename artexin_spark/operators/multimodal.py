@@ -31,7 +31,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from . import codecs
@@ -140,43 +140,6 @@ def decode_assets(df: DataFrame, dim: int = 16) -> DataFrame:
             )
 
     return df.select("asset_id", "payload").mapInPandas(run, _DECODE_OUT)
-
-
-def resize_plan(df: DataFrame, max_side: int = 512) -> DataFrame:
-    """Resize is pure arithmetic on metadata → native expressions; the
-    pixel op itself would live in the decode UDF. Emits target dims
-    preserving aspect ratio."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side)
-        / F.greatest(F.col("meta.width"), F.col("meta.height")).cast("double"),
-    )
-    # floor of 1: a 1×1025 asset at max_side=512 rounds its short side to
-    # 0 — an invalid resize target for the pixel op
-    return df.select(
-        "asset_id",
-        F.greatest(F.lit(1), F.round(F.col("meta.width") * scale).cast("int")).alias(
-            "target_w"
-        ),
-        F.greatest(F.lit(1), F.round(F.col("meta.height") * scale).cast("int")).alias(
-            "target_h"
-        ),
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling as a relational op: explode the frame index
-    sequence (decode of each sampled frame happens in the decode UDF)."""
-    return df.filter(F.col("kind") == "video").select(
-        "asset_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                F.lit(every_n),
-            )
-        ).alias("frame_idx"),
-    )
 
 
 def make_gif_stub(width: int, height: int) -> bytes:

@@ -600,15 +600,6 @@ def ivf_topk(
     )
 
 
-def ann_recall(exact: DataFrame, approx: DataFrame) -> float:
-    """Recall@k of the ANN result against the brute-force baseline."""
-    e = exact.select("query_id", "neighbor_id")
-    a = approx.select("query_id", "neighbor_id")
-    hit = e.join(a, ["query_id", "neighbor_id"]).count()
-    total = e.count()
-    return hit / total if total else 1.0
-
-
 # --- Hybrid rank fusion ------------------------------------------------------
 
 RRF_SCALE = 1_000_000_000

@@ -348,10 +348,13 @@ def bm25_rank_multi(
     branch both read its blocks, so the plan's two scans are one runtime
     pass); tokens explode and immediately broadcast-semi-join against
     the distinct query-term set, so only query-relevant postings survive
-    into the (id, term, tf) hash-agg. Corpus stats (N, avgdl) reduce to
-    one broadcast row, per-term df to one broadcast frame, and the
-    query_id fan-out happens AFTER the posting agg (a term shared by
-    many queries multiplies narrow posting rows, never documents).
+    into the (id, term, tf) hash-agg, itself lazily checkpointed so the
+    explode and the agg run once for both the df count and the scoring
+    (building it runs the agg's shuffle stage under AQE). Corpus stats
+    (N, avgdl) reduce to one broadcast row, per-term df to one broadcast
+    frame, and the query_id fan-out happens AFTER the posting agg (a term
+    shared by many queries multiplies narrow posting rows, never
+    documents).
     Per-query top-k is a rank-filtered window — Spark's WindowGroupLimit
     rewrites it to a map-side per-partition limit, so at most
     partitions×topk rows shuffle per query (plan-gated).
@@ -397,6 +400,7 @@ def bm25_rank_multi(
         .join(F.broadcast(qmap.select("term").distinct()), "term")
         .groupBy(id_col, "_dl", "term")
         .agg(F.count("*").alias("_tf"))
+        .localCheckpoint(eager=False)
     )
     dfs = posting.groupBy("term").agg(F.count("*").alias("_df"))
     tf = F.col("_tf").cast("double")

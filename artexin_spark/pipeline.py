@@ -251,16 +251,14 @@ def extract_arrays(texts: pa.Array, sources: pa.Array) -> pa.StructArray:
 
 
 class _LineageAccumParam(AccumulatorParam):
-    """Dict accumulator: part_key -> [n_rows, n_errors, n_chars_in,
-    n_chars_out, wall_ms]. One ``add`` per task (the map iterator folds
-    locally first), so accumulator traffic is O(buckets-per-task), not
-    O(batches). Caveat (standard Spark transformation-accumulator
-    semantics): a re-executed stage (fetch-failure recompute, speculative
-    attempt) could double-count — run_extract performs exactly one action
-    per run, so the window is a lost-shuffle retry only; lineage counters
-    are skew/ops evidence, and the data write itself stays exactly-once:
-    a retry overwrites its own run directory, and nothing is readable
-    until the run's one snapshot commit."""
+    """Dict accumulator: part_key -> [n_rows, n_chars_in, n_chars_out,
+    wall_ms]. One ``add`` per task (the map iterator folds locally first),
+    so accumulator traffic is O(buckets-per-task), not O(batches).
+    Standard Spark transformation-accumulator semantics apply: a
+    re-executed stage (lost-shuffle recompute, speculative attempt) adds
+    its sums again. Lineage therefore takes its row and error counts from
+    the written files' footers, and keeps ``n_rows`` here only to tell
+    whether these sums saw each row once (``lineage_rows``)."""
 
     def zero(self, value):
         return {}
@@ -274,12 +272,12 @@ class _LineageAccumParam(AccumulatorParam):
 
 def _extract_map_iter(batches, acc=None):
     """mapInArrow body: one Arrow batch in → one extracted batch out. With
-    ``acc`` set, per-bucket lineage counters (including each row's share
-    of the batch wall time) fold task-side into the accumulator — the sink
-    write then needs NO read-back of written files and no second input
-    scan (the r01 bench showed that read-back costing ~45% over pure
-    compute). Passthrough columns cross back as the INPUT batch's own
-    Arrow buffers; ``source`` feeds the extractor and is not emitted."""
+    ``acc`` set, per-bucket sums (rows, chars in and out, and each row's
+    share of the batch wall time) fold task-side into the accumulator; no
+    second input scan is needed for them (the r01 bench priced one at
+    ~45% over pure compute). Passthrough columns cross back as the INPUT
+    batch's own Arrow buffers; ``source`` feeds the extractor and is not
+    emitted."""
     local: dict[int, list] = {}
     for rb in batches:
         nrows = rb.num_rows
@@ -293,23 +291,51 @@ def _extract_map_iter(batches, acc=None):
         if acc is not None:
             rows = zip(
                 rb.column("part_key").to_pylist(),
-                ex.field("error").is_valid().to_pylist(),
                 n_chars_in.to_pylist(),
                 pc.utf8_length(ex.field("extracted_text")).to_pylist(),
             )
-            for k, err, cin, cout in rows:
-                cur = local.setdefault(k, [0, 0, 0, 0, 0.0])
+            for k, cin, cout in rows:
+                cur = local.setdefault(k, [0, 0, 0, 0.0])
                 cur[0] += 1
-                cur[1] += err
-                cur[2] += cin
-                cur[3] += cout
-                cur[4] += ms_per_row
+                cur[1] += cin
+                cur[2] += cout
+                cur[3] += ms_per_row
         yield pa.RecordBatch.from_arrays(
             [*(rb.column(c) for c in _PASSTHROUGH), *ex.flatten(), n_chars_in],
             names=_OUT_NAMES,
         )
     if acc is not None and local:
         acc.add(local)
+
+
+def lineage_rows(run_id: str, facts: dict, sums: dict) -> list[tuple]:
+    """The run's ``_lineage`` rows, one per bucket: its footer facts
+    (``storage.bucket_footers``) joined with the accumulator's sums
+    (part_key -> [n_rows, n_chars_in, n_chars_out, wall_ms]).
+
+    ``n_rows`` and ``n_errors`` (rows whose ``error`` is set) are exact:
+    they are the footers' row count and row count minus ``error``'s null
+    count. ``n_chars_in``, ``n_chars_out`` and ``wall_ms`` are the
+    accumulator's sums. ``counter_source`` says how far to trust a row:
+    "footer" when the accumulator saw exactly the footers' rows, so its
+    sums count each row once; "+approx_sums" is added when the counts
+    differ (a re-executed task added its sums again, or lost some), and
+    "+errors_unknown", with ``n_errors`` NULL, when the footers carry no
+    null count for ``error``."""
+    out = []
+    for k, f in sorted(facts.items()):
+        acc_rows, chars_in, chars_out, wall_ms = sums.get(k, (0, 0, 0, 0.0))
+        nulls = f.nulls.get("error")
+        source = "footer"
+        if nulls is None:
+            source += "+errors_unknown"
+        if acc_rows != f.rows:
+            source += "+approx_sums"
+        out.append((
+            run_id, k, f.rows, None if nulls is None else f.rows - nulls,
+            int(chars_in), int(chars_out), float(wall_ms), "ok", source,
+        ))
+    return out
 
 
 def prepare_input(df: DataFrame, n_buckets: int, source_col: str | None) -> DataFrame:
@@ -373,10 +399,11 @@ def _extract_prepared(
     splits (parquet splits at maxPartitionBytes, so task size stays
     bounded at any layout); the write side stays bucket-bounded by the
     explicit repartition. Lineage caveat: the
-    extraction stage is now a shuffle-map stage, so a lost-shuffle
-    recompute re-adds its counters — the same documented window as
-    speculative attempts (_LineageAccumParam), counters are ops evidence,
-    the data write stays exactly-once either way."""
+    extraction stage is a shuffle-map stage, so a lost-shuffle recompute
+    re-adds its accumulator sums — the same window as speculative
+    attempts (_LineageAccumParam); lineage row and error counts come from
+    the written footers and stay exact, and ``counter_source`` marks
+    the sums approximate when they saw a row twice."""
     extracted = prepared.mapInArrow(
         lambda batches: _extract_map_iter(batches, acc), _EXTRACT_OUT_SCHEMA
     )
@@ -436,7 +463,9 @@ def run_extract(
     ``snapshot=True``; ``False`` asked for the retired plain layout and
     raises.
 
-    Returns run counters {run_id, buckets, rows, errors, snapshot_id}.
+    Returns run counters {run_id, buckets, rows, errors, snapshot_id};
+    ``rows`` and ``errors`` are the written files' footer counts
+    (``errors`` is None when a footer lacks the ``error`` null count).
     """
     if not snapshot:
         raise ValueError(
@@ -505,11 +534,10 @@ def run_extract(
             "remain to extract — pass a fresh run_id for the remainder"
         )
 
-    # Per-bucket lineage counters fold task-side into this accumulator
-    # during the single write action — ONE pass total: no read-back of
-    # written files and no second (narrow) input scan for the run's bucket
-    # set. The r01 driver bench priced those at ~45% over pure compute
-    # (q_extract_write 23.3s vs q_extract 12.75s).
+    # Per-bucket sums fold task-side into this accumulator during the
+    # single write action — no second (narrow) input scan and no read of
+    # written data pages. The r01 driver bench priced those at ~45% over
+    # pure compute (q_extract_write 23.3s vs q_extract 12.75s).
     acc = spark.sparkContext.accumulator({}, _LineageAccumParam())
     # repartition=False is the SOURCE-BUCKETED fast path: when the input's
     # file layout already aligns with the sink's bucket key (e.g. reading
@@ -528,8 +556,10 @@ def run_extract(
     )
     sink_io.write_run_data(out, sink, run_id)
 
-    counters = acc.value  # part_key -> [rows, errors, chars_in, chars_out, ms]
-    if not counters:
+    # row and error counts come from the written files' footers: exact
+    # whatever the accumulator saw (lineage_rows)
+    facts = sink_io.bucket_footers(sink, run_id)
+    if not facts:
         # fully-resumed (or empty-input) run: clean no-op — no lineage row,
         # no snapshot commit, and the empty run dir (at most a _SUCCESS
         # marker) is removed so it can't shadow a later run_id collision
@@ -537,24 +567,13 @@ def run_extract(
         return noop()
 
     snap_id = sink_io.commit_snapshot(spark, sink, run_id)
-    # counter_source marks HOW these numbers were derived: "accumulator"
-    # rows are task-side folds from the single write action — exact in
-    # the normal case, but a lost-shuffle stage re-execution or a
-    # speculative attempt can double-count them (documented on
-    # _LineageAccumParam). Audit/resume consumers that need exactly-once
-    # counts can distinguish these from any future sink-derived
-    # ("readback") restatement instead of trusting a bare number.
-    sink_io.append_lineage(
-        [
-            (run_id, int(k), int(v[0]), int(v[1]), int(v[2]), int(v[3]), float(v[4]), "ok", "accumulator")
-            for k, v in sorted(counters.items())
-        ],
-        sink,
-    )
+    lineage = lineage_rows(run_id, facts, acc.value)
+    sink_io.append_lineage(lineage, sink)
+    errors = [r[3] for r in lineage]
     return {
         "run_id": run_id,
-        "buckets": len(counters),
-        "rows": int(sum(v[0] for v in counters.values())),
-        "errors": int(sum(v[1] for v in counters.values())),
+        "buckets": len(facts),
+        "rows": sum(f.rows for f in facts.values()),
+        "errors": None if None in errors else sum(errors),
         "snapshot_id": snap_id,
     }

@@ -186,22 +186,6 @@ def get_prep_names(url: str) -> list[str]:
     return [PREP_NAMES[p] for p in get_preps(url)]
 
 
-# -- string→string wrappers for doctest-parity tests ------------------------
-
-
-def apply_preps_html(html: str, url: str = "") -> str:
-    doc = dom.parse(html)
-    for prep in get_preps(url):
-        prep(doc)
-    return doc.to_html()
-
-
-def fixheaders_html(html: str) -> str:
-    doc = dom.parse(html)
-    pp_fixheaders(doc)
-    return doc.to_html()
-
-
 def preps_for(source: str):
     """Callable list for a source URL with EXACT get_preps dispatch
     semantics — including the empty-source case, where the catch-all

@@ -24,12 +24,19 @@ and publishes each new file with one ``os.replace`` (``_publish``) — no
 metadata call runs a Spark job. Spark runs only the data plane.
 
 Read path: every data read (``read_snapshot``/``read_data``,
-``read_incremental``, ``merge_upsert``, ``compact_snapshot`` and the
-commit-time stats scan) resolves the manifest to the (run, bucket)
-directories it maps and opens them in ONE parquet scan (``_read_mapping``),
-typed by the runs' parquet footer schemas (``_live_schema``) — no schema
-inference and no per-run union. A mapped directory missing on disk fails
-the read (Spark's PATH_NOT_FOUND) instead of returning the table short.
+``read_incremental``, ``merge_upsert``, ``compact_snapshot``) resolves the
+manifest to the (run, bucket) directories it maps and opens them in ONE
+parquet scan (``_read_mapping``), typed by the runs' parquet footer
+schemas (``_live_schema``) — no schema inference and no per-run union. A
+mapped directory missing on disk fails the read (Spark's PATH_NOT_FOUND)
+instead of returning the table short.
+
+Commit facts come from the files: a run's per-bucket row counts, null
+counts and column min/max are read from the parquet footers Spark wrote
+(``bucket_footers``), the way the reference stamps a package's size and
+hash from the file it just wrote (artexin/pack.py:149-153). Manifest
+stats and lineage row/error counts both come from there; no commit runs
+a Spark job.
 
 Swap point: replace write_run_data + commit_snapshot / read_snapshot with
 ``df.writeTo(tbl).overwritePartitions()`` / ``spark.read.format('iceberg')``
@@ -44,6 +51,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -54,7 +62,10 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 #: The lineage row, declared once. ``append_lineage`` takes rows of every
-#: field but the last and stamps ``finished_at`` itself.
+#: field but the last and stamps ``finished_at`` itself. ``n_rows`` and
+#: ``n_errors`` are exact footer counts; ``n_chars_in``, ``n_chars_out``
+#: and ``wall_ms`` are accumulator sums, and ``counter_source`` says
+#: whether they saw each row once (``pipeline.lineage_rows``).
 LINEAGE_ARROW_SCHEMA = pa.schema(
     [
         ("run_id", pa.string()),
@@ -274,6 +285,58 @@ def _run_schema(sink: str, run_id: str) -> StructType | None:
     return StructType([*data.fields, StructField("part_key", IntegerType())])
 
 
+class BucketFacts(NamedTuple):
+    """What a bucket's parquet footers say about its rows."""
+
+    rows: int  #: exact row count
+    nulls: dict  #: column -> exact null count, or None when unknown
+    stats: str | None  #: manifest stats JSON {col: {"min", "max"}}, or None
+
+
+def bucket_footers(sink: str, run_id: str, stats_cols=()) -> dict[int, BucketFacts]:
+    """The facts of every bucket of ``run_id``, read on the driver from its
+    data files' parquet footers — no Spark job and no data page.
+
+    ``nulls`` maps each parquet leaf column (a top-level column's path is
+    its name) to its null count, None when a row group has no
+    ``null_count`` (parquet-mr drops a column's whole statistics block
+    when a value is over 4 KB).
+
+    ``stats`` folds the row-group min/max of ``stats_cols``. An all-null
+    row group, or a file without the column, is neutral. A row group with
+    values but no usable min/max — none written (Spark's INT96
+    timestamps, oversized strings), NaN, or a type other than bool, int,
+    float and str — drops the column from the bucket's stats, so reads
+    never prune on it. Those four round-trip through JSON exactly and
+    Python orders them as Spark does (strings by code point, which is
+    UTF-8 byte order). None when no column is left."""
+    run_dir = run_data_path(sink, run_id)
+    out: dict[int, BucketFacts] = {}
+    for k in _run_buckets(run_dir):
+        bucket = os.path.join(run_dir, f"part_key={k}")
+        rows, nulls = 0, {}
+        bounds: dict[str, list | None] = {c: [] for c in stats_cols}
+        for name in sorted(os.listdir(bucket)):
+            if name.startswith(("_", ".")):
+                continue  # Spark's _SUCCESS and .crc side files
+            md = pq.read_metadata(os.path.join(bucket, name))
+            rows += md.num_rows
+            for rg in (md.row_group(i) for i in range(md.num_row_groups)):
+                for col in (rg.column(j) for j in range(rg.num_columns)):
+                    c, st = col.path_in_schema, col.statistics
+                    n = st.null_count if st is not None and st.has_null_count else None
+                    nulls[c] = None if n is None or nulls.get(c, 0) is None else nulls.get(c, 0) + n
+                    if bounds.get(c) is None or n == rg.num_rows:
+                        continue  # not asked for, already dropped, or all null
+                    vals = (st.min, st.max) if st is not None and st.has_min_max else ()
+                    # v == v is False only for NaN
+                    usable = vals and all(type(v) in (bool, int, float, str) and v == v for v in vals)
+                    bounds[c] = [*bounds[c], *vals] if usable else None
+        stats = {c: {"min": min(b), "max": max(b)} for c, b in bounds.items() if b}
+        out[k] = BucketFacts(rows, nulls, json.dumps(stats) if stats else None)
+    return out
+
+
 def _live_schema(sink: str, run_ids: set[str]) -> StructType:
     """The schema a read of ``run_ids`` returns, merged from their footer
     schemas: add-column evolution (Iceberg's default mode) — the first
@@ -439,8 +502,8 @@ def commit_snapshot(
     ``stats_cols`` asks the commit to record per-bucket min/max of those
     columns in the manifest (Iceberg's manifest column stats) so
     ``read_snapshot(where=...)`` can skip whole buckets without opening a
-    file. Real Iceberg harvests these from parquet footers for free; here
-    they cost one column-pruned scan of the new run at commit time —
+    file. As in Iceberg they are harvested from the new run's parquet
+    footers (``bucket_footers``) — no Spark job at any bucket count;
     carried-forward buckets keep the stats of the commit that wrote them.
     Intended for numeric/string sort-ish keys; a commit without stats
     leaves the column NULL (never pruned, always correct).
@@ -451,24 +514,11 @@ def commit_snapshot(
     columns remain legal (add-column evolution, NULL-filled)."""
     run_schema = _run_schema(sink, run_id) or StructType()
     _check_schema_compatible(sink, run_schema, f"run {run_id}")
-    if stats_cols:
-        keys = _run_buckets(run_data_path(sink, run_id))
-        run_df = _read_mapping(spark, sink, [(run_id, k) for k in keys])
-        per_col = [
-            F.struct(
-                F.min(c).alias("min"), F.max(c).alias("max")
-            ).alias(c)
-            for c in stats_cols
-        ]
-        new_stats = {
-            r["part_key"]: r["stats"]
-            for r in run_df.groupBy("part_key")
-            .agg(F.to_json(F.struct(*per_col)).alias("stats"))
-            .collect()
-        }
-    else:
-        # partition-column only: the run's part_key= directory names
-        new_stats = dict.fromkeys(_run_buckets(run_data_path(sink, run_id)))
+    stats_cols = stats_cols or []
+    unknown = sorted(set(stats_cols) - set(run_schema.names))
+    if unknown:
+        raise ValueError(f"stats_cols {unknown} are not columns of run {run_id}")
+    new_stats = {k: f.stats for k, f in bucket_footers(sink, run_id, stats_cols).items()}
     # Optimistic concurrency on the snapshot id: an O_EXCL marker file
     # arbitrates each id, so two concurrent committers can never both
     # publish rows under the same snapshot_id (which would make that
@@ -491,19 +541,6 @@ def commit_snapshot(
         carried = [
             r for r in parent if operation == "append" or r["part_key"] not in new_stats
         ]
-        stats = new_stats
-        if operation == "replace" and not stats_cols:
-            # a 'replace' commit rewrites layout over byte-identical data,
-            # so the parent's per-bucket stats still describe the new files
-            # — inherit them instead of nulling (compaction must not
-            # degrade data skipping); a data commit never inherits.
-            # Append-committed buckets carry one stats row PER RUN; the
-            # rewritten bucket holds their union, so merge the fragments
-            # (min-of-mins / max-of-maxes — exact over the union).
-            frag: dict[int, list] = {}
-            for r in parent:
-                frag.setdefault(r["part_key"], []).append(r["stats"])
-            stats = {k: _merge_fragment_stats(frag.get(k)) for k in new_stats}
         # probe FORWARD past claimed ids: a marker whose manifest file never
         # landed (crashed committer) must not pin the retry loop to one id,
         # and a marker that outlived its expired snapshot must not hand its
@@ -525,7 +562,7 @@ def commit_snapshot(
         }
         mapping = [{**r, **stamp} for r in carried] + [
             {"part_key": k, "run_id": run_id, "stats": s, **stamp}
-            for k, s in sorted(stats.items())
+            for k, s in sorted(new_stats.items())
         ]
         table = pa.Table.from_pylist(mapping, schema=SNAPSHOT_ARROW_SCHEMA)
         _publish(table, snapshots_path(sink))
@@ -533,33 +570,6 @@ def commit_snapshot(
     raise RuntimeError(
         f"could not claim a snapshot id in {sink} after 64 attempts"
     ) from last_err
-
-
-def _merge_fragment_stats(stats_list) -> str | None:
-    """Union per-bucket fragment stats (one fragment per run of an
-    append-committed bucket). Any unknown fragment → NULL (conservative);
-    a column must be present and non-null in EVERY fragment to survive —
-    min-of-mins / max-of-maxes is then exact over the union'd rows."""
-    if not stats_list or any(not s for s in stats_list):
-        return None
-    try:
-        dicts = [json.loads(s) for s in stats_list]
-    except ValueError:
-        return None
-    cols = set(dicts[0])
-    for d in dicts[1:]:
-        cols &= set(d)
-    out = {}
-    for c in sorted(cols):
-        mins = [d[c].get("min") for d in dicts]
-        maxs = [d[c].get("max") for d in dicts]
-        if any(v is None for v in mins + maxs):
-            continue
-        try:
-            out[c] = {"min": min(mins), "max": max(maxs)}
-        except TypeError:
-            continue  # cross-typed fragments: drop the column
-    return json.dumps(out) if out else None
 
 
 def _stats_may_match(stats_json, where) -> bool:
@@ -751,9 +761,10 @@ def compact_snapshot(
     files per bucket (small-file compaction — resume-heavy tables accrete a
     file per retried run) and commit it as a new snapshot covering every
     bucket. Data is byte-identical; only layout changes. Manifest stats
-    survive: the 'replace' commit inherits the parent's per-bucket min/max
-    (still exact over identical data), so data skipping never degrades
-    across compactions.
+    survive: the 'replace' commit records stats for every column the
+    parent's stats name, read from its own files' footers, so data
+    skipping never degrades across compactions (a multi-run bucket's
+    rows now share one file, and its stats cover their union).
 
     ``sort_by`` additionally sorts rows within each output partition
     (Iceberg's sort-order rewrite): parquet row groups then carry tight
@@ -770,7 +781,8 @@ def compact_snapshot(
     # on part_key alone can never split a bucket). File counts are
     # approximate under hash collisions — compaction bounds smallness, it
     # doesn't promise exact counts.
-    n_buckets_live = len({r["part_key"] for r in _snapshot_rows(sink)})
+    parent = _snapshot_rows(sink)
+    n_buckets_live = len({r["part_key"] for r in parent})
     # schema-agnostic deterministic sub-key (whole-row hash)
     spread = F.pmod(
         F.xxhash64(*[F.col(c) for c in live.columns]), F.lit(files_per_bucket)
@@ -779,7 +791,8 @@ def compact_snapshot(
     if sort_by:
         out = out.sortWithinPartitions("part_key", *sort_by)
     write_run_data(out, sink, rid)
-    return commit_snapshot(spark, sink, rid, operation="replace")
+    named = sorted({c for r in parent if r["stats"] for c in json.loads(r["stats"])})
+    return commit_snapshot(spark, sink, rid, operation="replace", stats_cols=named or None)
 
 
 def expire_snapshots(spark: SparkSession, sink: str, keep_last: int = 1) -> list[str]:

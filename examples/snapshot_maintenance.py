@@ -36,8 +36,9 @@ def main() -> None:
         stats = run_extract(spark, turns, sink, n_buckets=8, source_col=None)
         print(f"snapshot {stats['snapshot_id']}: {stats['rows']} turns")
 
-        # 2. stats-tracked re-commit: manifest records per-bucket min/max
-        #    so range probes skip buckets without opening a file
+        # 2. stats-tracked re-commit: manifest records per-bucket min/max,
+        #    read from the run's parquet footers, so range probes skip
+        #    buckets without opening a file
         live = sink_io.read_snapshot(spark, sink)
         sink_io.write_run_data(live, sink, "restate")
         sink_io.commit_snapshot(
@@ -61,8 +62,9 @@ def main() -> None:
         delta = sink_io.read_incremental(spark, sink, since_snapshot_id=2)
         print(f"incremental since snapshot 2: {delta.count()} turns")
 
-        # 5. maintenance: compact small files (stats inherited, rows
-        #    sorted for row-group pushdown), expire history, GC orphans
+        # 5. maintenance: compact small files (stats re-read from the
+        #    compacted files, rows sorted for row-group pushdown), expire
+        #    history, GC orphans
         sink_io.compact_snapshot(spark, sink, sort_by=["conv_id", "turn_idx"])
         expired = sink_io.expire_snapshots(spark, sink, keep_last=1)
         orphans = sink_io.remove_orphan_runs(spark, sink, min_age_s=0)

@@ -6,8 +6,6 @@ import pytest
 from artexin_spark import dom
 from artexin_spark.preprocess import (
     MAPPINGS,
-    apply_preps_html,
-    fixheaders_html,
     get_prep_names,
     get_preps,
     pp_dwelle,
@@ -15,6 +13,22 @@ from artexin_spark.preprocess import (
     pp_wikipedia,
     preps_for,
 )
+
+
+# string→string wrappers over the DOM preprocessors, for the doctest vectors
+
+
+def apply_preps_html(html: str, url: str = "") -> str:
+    doc = dom.parse(html)
+    for prep in get_preps(url):
+        prep(doc)
+    return doc.to_html()
+
+
+def fixheaders_html(html: str) -> str:
+    doc = dom.parse(html)
+    pp_fixheaders(doc)
+    return doc.to_html()
 
 
 def test_fixheaders_promotes():  # preprocessors.py:33-36

@@ -3,7 +3,8 @@
 These pin invariants the doctest vectors can't: idempotence, closure,
 and agreement with an independent formulation, over generated inputs.
 No Spark session needed — these functions are the exact code the Arrow
-UDF batches call, so single-node properties transfer to the cluster.
+UDF batches call, so single-node properties transfer to the cluster —
+except the footer-stats fold, which reads files Spark itself wrote.
 """
 
 from __future__ import annotations
@@ -280,37 +281,53 @@ def test_pdf_dispatch_is_total_on_mutated_payloads(junk, cut):
     assert res is not None  # returned, not raised
 
 
-@given(
-    st.lists(
-        st.lists(st.integers(-50, 50), min_size=1, max_size=8),
-        min_size=1,
-        max_size=4,
-    )
+_maybe_int = st.one_of(st.none(), st.integers(-(2**62), 2**62))
+_maybe_str = st.one_of(
+    st.none(), st.text(st.characters(blacklist_categories=("Cs",)), max_size=6)
 )
-@settings(max_examples=200, deadline=None)
-def test_merge_fragment_stats_covers_union(fragments):
-    """Compaction's fragment-stats union (storage._merge_fragment_stats)
-    must yield bounds that cover EVERY fragment's values — an interval
-    that misses a value would let the pruner drop live rows."""
+
+
+@given(
+    st.lists(st.tuples(st.integers(0, 2), _maybe_int, _maybe_str), min_size=1, max_size=40),
+    st.integers(1, 3),
+)
+@settings(max_examples=12, deadline=None)
+def test_footer_stats_fold_matches_spark_min_max(spark, rows, n_files):
+    """The commit's footer fold (storage.bucket_footers) over random
+    int/string/null columns written by Spark as several files per bucket:
+    a column is recorded exactly when the bucket holds a value, its bounds
+    are Spark's min/max, the evaluator keeps every present value, and the
+    row and null counts are exact. Bounds that missed a value would let
+    the pruner drop live rows."""
     import json
+    import tempfile
 
-    from artexin_spark.storage import _merge_fragment_stats, _stats_may_match
+    from pyspark.sql import functions as F
 
-    frags = [
-        json.dumps({"c": {"min": min(vs), "max": max(vs)}}) for vs in fragments
-    ]
-    merged = _merge_fragment_stats(frags)
-    assert merged is not None
-    st_ = json.loads(merged)["c"]
-    allv = [v for vs in fragments for v in vs]
-    assert st_["min"] == min(allv) and st_["max"] == max(allv)
-    # soundness through the evaluator: a point query on any present value
-    # must keep the bucket
-    for v in set(allv):
-        assert _stats_may_match(merged, ("c", v, v))
-    # unknown fragments poison the merge to conservative NULL
-    assert _merge_fragment_stats(frags + [None]) is None
-    assert _merge_fragment_stats([]) is None
+    from artexin_spark import storage as sink_io
+
+    with tempfile.TemporaryDirectory(prefix="footer-fold-") as sink:
+        df = spark.createDataFrame(rows, "part_key int, i long, s string")
+        sink_io.write_run_data(df.repartition(n_files), sink, "r")
+        facts = sink_io.bucket_footers(sink, "r", ["i", "s"])
+        agg = [F.count("*").alias("n")] + [
+            f(c).alias(f"{f.__name__}_{c}") for c in ("i", "s") for f in (F.min, F.max, F.count)
+        ]
+        run = spark.read.parquet(sink_io.run_data_path(sink, "r"))
+        spark_rows = run.groupBy("part_key").agg(*agg).collect()
+    assert sorted(facts) == sorted(r["part_key"] for r in spark_rows)
+    for r in spark_rows:
+        f = facts[r["part_key"]]
+        stats = json.loads(f.stats) if f.stats else {}
+        assert f.rows == r["n"]
+        for c in ("i", "s"):
+            assert f.nulls[c] == r["n"] - r[f"count_{c}"]
+            want = None if r[f"min_{c}"] is None else {"min": r[f"min_{c}"], "max": r[f"max_{c}"]}
+            assert stats.get(c) == want, (c, stats, want)
+        for k, *values in rows:
+            for c, v in zip(("i", "s"), values):
+                if k == r["part_key"] and v is not None:
+                    assert sink_io._stats_may_match(f.stats, (c, v, v))
 
 
 # --- BPE inference encoders (operators/bpe.py) -------------------------------

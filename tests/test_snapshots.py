@@ -7,6 +7,7 @@ so a crashed run can never corrupt the readable table — the property a
 10^12-turn job actually needs from its sink."""
 
 import glob
+import json
 import os
 import uuid
 
@@ -796,9 +797,10 @@ def test_commit_of_a_64_bucket_run_runs_no_spark_job(spark, tmp_path):
     """A commit takes the run's schema and the live snapshot's from parquet
     footers and builds no DataFrame: over a run of more bucket directories
     than Spark's parallel partition-discovery threshold (32), building one
-    runs a file-listing job."""
+    runs a file-listing job. A commit with ``stats_cols`` reads its min/max
+    from the same footers, so it runs no job either."""
     sink = str(tmp_path / "sink")
-    for rid in ("r1", "r2"):
+    for rid in ("r1", "r2", "r3"):
         run = _bucketed(spark, n=256, buckets=64, tag=rid)
         sink_io.write_run_data(run, sink, rid)
     sink_io.commit_snapshot(spark, sink, "r1")
@@ -806,6 +808,15 @@ def test_commit_of_a_64_bucket_run_runs_no_spark_job(spark, tmp_path):
     assert sid == 2 and jobs == 0
     live = sink_io.read_snapshot(spark, sink)
     assert live.count() == 256 and {r.tag for r in live.select("tag").collect()} == {"r2"}
+    sid, jobs = _spark_jobs(
+        spark, lambda: sink_io.commit_snapshot(spark, sink, "r3", stats_cols=["id"])
+    )
+    assert sid == 3 and jobs == 0
+    stats = {r["part_key"]: r["stats"] for r in sink_io._snapshot_rows(sink, 3)}
+    # bucket k holds ids k, k + 64, k + 128, k + 192
+    assert stats == {k: json.dumps({"id": {"min": k, "max": k + 192}}) for k in range(64)}
+    with pytest.raises(ValueError, match="not columns"):
+        sink_io.commit_snapshot(spark, sink, "r3", stats_cols=["no_such_column"])
 
 
 def test_unpublished_manifest_file_is_ignored(spark, tmp_path):

@@ -11,6 +11,15 @@ and printed as ``SKIP``, not as all-zero counts. ``--plans-dir`` also
 writes each query's formatted plan to ``<plans-dir>/<query>.txt``
 (before/after plan diffs for a change).
 
+An operator that reuses a subtree reads it back from a
+``localCheckpoint``, so the returned plan shows a ``Scan ExistingRDD``
+where the corpus scan, tokenizer and shuffles used to be. Each
+checkpoint the query function builds is a SQL execution of its own, and
+the driver's SQL status store keeps its formatted plan whether or not it
+has materialized (a materialized checkpoint's RDD lineage no longer
+shows it): ``below_checkpoint`` counts those checkpoints, their
+exchanges and their parquet scans per table.
+
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.01] [--out f.json]
            [--only q_a,q_b] [--plans-dir plans/new]
 """
@@ -47,6 +56,22 @@ def _materialized(df) -> bool:
     return node.nodeName() in _IN_MEMORY_LEAVES
 
 
+def _scans(plan: str) -> dict:
+    """Parquet scans per table: one "Location: <index> [file:...<table>.parquet]"
+    per scan node."""
+    scans: dict = {}
+    for t in re.findall(r"Location: \w+ \[file:[^\]]*?(\w+)\.parquet\]", plan):
+        scans[t] = scans.get(t, 0) + 1
+    return scans
+
+
+def _executions(spark) -> list:
+    """Every SQL execution the driver's status store holds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # events are async
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [runs.apply(i) for i in range(runs.size())]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -68,7 +93,14 @@ def main() -> None:
         if only and name not in only:
             continue
         try:
+            before = {x.executionId() for x in _executions(spark)}
             df = fn(spark, args.sf)
+            built = [
+                x.physicalPlanDescription()
+                for x in _executions(spark)
+                if x.executionId() not in before
+                and x.description().startswith(("localCheckpoint", "checkpoint"))
+            ]
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
@@ -103,11 +135,13 @@ def main() -> None:
                 ),
                 "batch_eval_py": len(re.findall(r"BatchEvalPython", plan)),
                 "window": len(re.findall(r"\n\(\d+\) Window", plan)),
-                "scans": {},
+                "scans": _scans(plan),
+                "below_checkpoint": {
+                    "checkpoints": len(built),
+                    "exchanges": sum(len(re.findall(r"\n\(\d+\) Exchange", p)) for p in built),
+                    "scans": _scans("".join(built)),
+                },
             }
-            # one "Location: <index> [file:...<table>.parquet]" per scan node
-            for t in re.findall(r"Location: \w+ \[file:[^\]]*?(\w+)\.parquet\]", plan):
-                rec["scans"][t] = rec["scans"].get(t, 0) + 1
             rec["n_scans"] = sum(rec["scans"].values())
             rows.append(rec)
         except Exception as err:  # noqa: BLE001
