@@ -32,6 +32,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import storage as sink_io
+
 # Tokenization used by all text dedup ops — MUST stay in lockstep with the
 # SQL oracle: lower → split on non-alphanumerics → drop empties.
 def md5_int60(col):
@@ -1047,37 +1049,47 @@ def commit_signatures(
     id_col: str = "doc_id",
     k: int = 8,
     n: int = 3,
-    n_buckets: int = 16,
-) -> int:
+    n_buckets: int | None = None,
+) -> int | None:
     """Compute minhash signatures for a corpus increment and append-commit
     them to a signature snapshot table (the persistent dedup state a
     continuous-ingest pipeline carries between runs). The table is tiny
     relative to the corpus — k longs + id per document — so at 10^12 docs
-    it is the only state future increments ever reprocess."""
+    it is the only state future increments ever reprocess.
+
+    The table's spec (``storage.ensure_bucket_spec``) pins ``k`` and
+    ``n`` beside its bucketing: a later call under other values raises
+    before any job. ``n_buckets=None`` adopts the pinned count (16 on a
+    fresh table). Returns the snapshot id, or None for an empty
+    increment (nothing is published)."""
+    spec = _state_spec(sig_sink, id_col, n_buckets, {"k": k, "n": n})
     sigs = minhash_signatures(df, text_col, id_col, k, n)
-    return commit_signature_frame(spark, sigs, sig_sink, run_id, id_col, n_buckets)
+    return _append_state(spark, sigs, sig_sink, run_id, id_col, spec)
 
 
-def commit_signature_frame(
-    spark,
-    sigs: DataFrame,
-    sig_sink: str,
-    run_id: str,
-    id_col: str = "doc_id",
-    n_buckets: int = 16,
-) -> int:
-    """Append-commit an ALREADY-computed (id, sig) frame — the reuse seam
-    for callers that computed signatures earlier in the same job (the
-    incremental dedup path: re-minhashing survivors would re-pay the
-    shingle explode + md5 + k-min pass over the full increment text)."""
-    from .. import storage as sink_io
-
-    keyed = sigs.withColumn(
-        "part_key", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_buckets)).cast("int")
+def _state_spec(
+    sink: str, key_col: str, n_buckets: int | None, params: dict, publish: bool = True
+) -> dict:
+    """A dedup state table's spec: bucketed by ``key_col`` (16 buckets
+    when fresh) and pinned to the hash ``params`` its keys depend on —
+    hashes computed under other parameters never collide with the stored
+    ones, so a drift would silently turn cross-run dedup into a no-op."""
+    return sink_io.ensure_bucket_spec(
+        sink, n_buckets, (key_col,), fresh=16, params=params, publish=publish
     )
-    sink_io.ensure_bucket_spec(sig_sink, n_buckets, bucket_cols=(id_col,))
-    sink_io.write_run_data(keyed, sig_sink, run_id)
-    return sink_io.commit_snapshot(spark, sig_sink, run_id, operation="append")
+
+
+def _append_state(
+    spark, frame: DataFrame, sink: str, run_id: str, key_col: str, spec: dict
+) -> int | None:
+    """Append-commit rows of a dedup state table under its pinned
+    bucketing; None when ``frame`` is empty (nothing is published)."""
+    keyed = frame.withColumn(
+        "part_key",
+        F.pmod(F.xxhash64(F.col(key_col)), F.lit(spec["n_buckets"])).cast("int"),
+    )
+    sink_io.write_run_data(keyed, sink, run_id)
+    return sink_io.commit_snapshot(spark, sink, run_id, operation="append")
 
 
 def incremental_minhash_dedup(
@@ -1106,25 +1118,18 @@ def incremental_minhash_dedup(
     keep-first approximation — a doc whose only match was itself dropped
     still drops, same one-pass semantics as curate()). Survivors'
     signatures are append-committed (``commit=True``) so the next
-    increment dedups against them too. Returns the surviving rows."""
+    increment dedups against them too. Returns the surviving rows.
 
-    from .. import storage as sink_io
+    ``k`` and ``n`` must equal the values the table's spec pins (raised
+    before any job: signatures under other parameters essentially never
+    band together, so a drift would dedup nothing); the commit appends
+    under the table's pinned bucket count."""
 
     hist = sink_io.read_snapshot(spark, sig_sink).select(F.col(id_col), "sig")
-    # fail fast on a k mismatch: bands over 8-slot history sigs vs 16-slot
-    # increment sigs essentially never collide, silently turning the
-    # whole cross-run dedup into a no-op (duplicates accumulate with no
-    # error) — one limit-1 probe of the committed table catches it
-    probe = hist.select(F.size("sig").alias("klen")).limit(1).collect()
-    if probe and probe[0]["klen"] != k:
-        raise ValueError(
-            f"signature table at {sig_sink} holds k={probe[0]['klen']} "
-            f"signatures but this run asked for k={k} — use the committed "
-            "k (signature spec evolution requires a table rewrite)"
-        )
+    spec = _state_spec(sig_sink, id_col, None, {"k": k, "n": n}, publish=commit)
     # the increment's signatures feed both join sides, `dropped`, the
-    # survivors' anti-join and the commit: checkpointed once here (after
-    # the probe — under AQE building it already runs the minhash shuffle)
+    # survivors' anti-join and the commit: checkpointed once here (under
+    # AQE building it already runs the minhash shuffle)
     inc_sigs = minhash_signatures(increment, text_col, id_col, k, n).localCheckpoint(
         eager=False
     )
@@ -1172,75 +1177,15 @@ def incremental_minhash_dedup(
     survivors = increment.join(dropped, id_col, "left_anti")
     if commit:
         # reuse inc_sigs: the survivors' signatures are exactly the
-        # increment's minus the dropped ids — committing via the frame
-        # seam avoids a second full tokenize+minhash pass over the text
+        # increment's minus the dropped ids — no second full
+        # tokenize+minhash pass over the text
         surv_sigs = inc_sigs.join(dropped, id_col, "left_anti")
-        commit_signature_frame(
-            spark,
-            surv_sigs,
-            sig_sink,
-            run_id or ("inc-" + uuid.uuid4().hex[:10]),
-            id_col,
-        )
+        run_id = run_id or ("inc-" + uuid.uuid4().hex[:10])
+        _append_state(spark, surv_sigs, sig_sink, run_id, id_col, spec)
     return survivors
 
 
 # --- cross-run incremental substring dedup -----------------------------------
-
-
-def _substr_spec_path(hash_sink: str) -> str:
-    import os
-
-    return os.path.join(hash_sink, "_substr_spec.json")
-
-
-def _check_substr_spec(
-    hash_sink: str, window: int, hash_mode: str, publish: bool = False
-) -> None:
-    """Pin (window, hash_mode) at first COMMIT and fail fast on drift:
-    hashes computed under a different window or hasher NEVER collide
-    with the stored set, silently turning cross-run dedup into a no-op
-    (same failure mode as the minhash k-mismatch guard).
-
-    ``publish=False`` (read paths) only validates an existing spec — a
-    read-only probe of an empty sink must not pin a spec and block the
-    real first commit. Publication uses the same link(2)/EEXIST race
-    protocol as ``storage.ensure_bucket_spec``: exactly one first-writer
-    wins; a concurrent loser re-reads and validates, so two committers
-    with different specs can never both succeed silently."""
-    import json
-    import os
-
-    path = _substr_spec_path(hash_sink)
-    want = {"window": int(window), "hash_mode": hash_mode}
-
-    def _validate() -> None:
-        got = json.load(open(path))
-        if got != want:
-            raise ValueError(
-                f"window-hash table at {hash_sink} was committed with "
-                f"{got}, this run asked for {want} — spec evolution "
-                "requires a table rewrite"
-            )
-
-    if os.path.exists(path):
-        _validate()
-        return
-    if not publish:
-        return
-    os.makedirs(hash_sink, exist_ok=True)
-    tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(want, f)
-    try:
-        os.link(tmp, path)  # EEXIST when a concurrent first-writer won
-    except FileExistsError:
-        _validate()
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
 
 
 def commit_window_hashes(
@@ -1262,10 +1207,16 @@ def commit_window_hashes(
     Already-committed hashes are anti-joined away so appends stay tight
     (append-only: an existing hash's stored df never updates, so it is a
     LOWER BOUND on corpus-wide df — see ``incremental_substring_dedup``
-    for how the max_df escape prices that). Returns the committed
+    for how the max_df escape prices that).
+
+    The table's spec pins ``window`` and ``hash_mode`` beside its
+    bucketing (a drift raises before any job); ``n_buckets=None`` adopts
+    the pinned count (16 on a fresh table). Returns the committed
     snapshot id, or None when the increment held nothing new (no empty
     commit is published)."""
-    _check_substr_spec(hash_sink, window, hash_mode, publish=True)
+    spec = _state_spec(
+        hash_sink, "wh", n_buckets, {"window": window, "hash_mode": hash_mode}
+    )
     new = (
         window_hash_occurrences(df, text_col, id_col, window, hash_mode)
         .groupBy("wh")
@@ -1274,92 +1225,15 @@ def commit_window_hashes(
     hist = read_window_hashes(spark, hash_sink)
     if hist is not None:
         new = new.join(hist.select("wh"), "wh", "left_anti")
-    return commit_window_hash_frame(
-        spark, new, hash_sink, run_id, n_buckets, history=hist
-    )
-
-
-_HISTORY_UNREAD = object()  # sentinel: None is a meaningful value (fresh sink)
-
-
-def commit_window_hash_frame(
-    spark,
-    hashes: DataFrame,
-    hash_sink: str,
-    run_id: str,
-    n_buckets: int | None = None,
-    history: DataFrame | None | object = _HISTORY_UNREAD,
-) -> int | None:
-    """Append-commit an ALREADY-derived distinct new-hash frame (column
-    ``wh``, optionally ``df`` = in-increment occurrence count) — the
-    reuse seam for the incremental path, which has the history-joined
-    occ frame in hand and must not re-hash the text.
-
-    ``history``: the caller's ``read_window_hashes`` result (a frame, or
-    None for a fresh sink), used only to sniff whether the sink's
-    committed schema carries ``df``. Callers that already read history
-    pass it to skip a redundant per-commit snapshot-manifest read;
-    omitted, the schema is read from the sink.
-
-    ``n_buckets=None`` adopts the table's committed bucket spec (falls
-    back to 16 on a fresh sink), so the incremental path keeps working
-    on tables created with any bucket count. A fully-deduplicated
-    increment (zero new hashes) is a clean no-op — the empty run dir is
-    removed and no snapshot commits (an empty partitioned write has no
-    parquet files, and committing it would crash the schema read).
-
-    Schema self-consistency: if the sink already holds committed runs
-    WITHOUT a df column (a pre-df table), new appends drop df too — one
-    sink never mixes parquet schemas, so snapshot reads need no
-    mergeSchema and old tables keep working (their history hits simply
-    read df as unknown)."""
-    import os
-    import shutil
-
-    from .. import storage as sink_io
-
-    spec = sink_io.read_bucket_spec(hash_sink)
-    if n_buckets is None:
-        n_buckets = int(spec["n_buckets"]) if spec else 16
-    cols = ["wh"]
-    if "df" in hashes.columns:
-        existing = (
-            read_window_hashes(spark, hash_sink)
-            if history is _HISTORY_UNREAD
-            else history
-        )
-        if existing is None or "df" in existing.columns:
-            cols.append("df")
-    keyed = hashes.select(
-        "wh", *[F.col("df").cast("long").alias("df")] if "df" in cols else []
-    ).withColumn(
-        "part_key", F.pmod(F.xxhash64(F.col("wh")), F.lit(n_buckets)).cast("int")
-    )
-    sink_io.ensure_bucket_spec(hash_sink, n_buckets, bucket_cols=("wh",))
-    sink_io.write_run_data(keyed, hash_sink, run_id)
-    run_dir = sink_io.run_data_path(hash_sink, run_id)
-    has_rows = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(run_dir)
-        for f in files
-    )
-    if not has_rows:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        return None
-    return sink_io.commit_snapshot(spark, hash_sink, run_id, operation="append")
+    return _append_state(spark, new, hash_sink, run_id, "wh", spec)
 
 
 def read_window_hashes(spark, hash_sink: str) -> DataFrame | None:
-    """The committed distinct-hash set — (wh, df) on tables committed
-    with occurrence counts, (wh) on pre-df tables — or None before the
-    first commit."""
-    from .. import storage as sink_io
-
+    """The committed distinct-hash set (wh, df), or None before the first
+    commit."""
     if sink_io.latest_snapshot_id(spark, hash_sink) is None:
         return None
-    snap = sink_io.read_snapshot(spark, hash_sink)
-    cols = ["wh"] + (["df"] if "df" in snap.columns else [])
-    return snap.select(*cols)
+    return sink_io.read_snapshot(spark, hash_sink).select("wh", "df")
 
 
 def incremental_substring_dedup(
@@ -1393,11 +1267,13 @@ def incremental_substring_dedup(
     increment) is closed; a hash that only crosses ``max_df`` summed
     across MANY later increments is still cut (the lower bound never
     sees those) — the residual, honestly priced, cost of append-only
-    history. Pre-df history tables read df as unknown (counted as 0 in
-    the bound). Flagged windows merge into maximal [start_tok, end_tok)
+    history. Flagged windows merge into maximal [start_tok, end_tok)
     spans per doc — feed them to ``substring_dedup_apply`` to cut. With
     ``commit=True`` the increment's (wh, df) rows append so the next
-    increment dedups against them.
+    increment dedups against them, under the table's pinned bucket
+    count. ``window`` and ``hash_mode`` must equal the values the table's
+    spec pins (raised before any job); ``commit=False`` validates the
+    spec but never pins one.
 
     Skew design matches ``substring_dedup_spans`` (r03-verdict de-skew):
     per-hash df/first via map-side-partial ``groupBy``, never
@@ -1410,7 +1286,9 @@ def incremental_substring_dedup(
     probe and (``commit=True``) the commit's own write action all read
     the same blocks."""
 
-    _check_substr_spec(hash_sink, window, hash_mode, publish=commit)
+    spec = _state_spec(
+        hash_sink, "wh", None, {"window": window, "hash_mode": hash_mode}, commit
+    )
     occ = window_hash_occurrences(
         increment, text_col, id_col, window, hash_mode
     ).localCheckpoint(eager=False)
@@ -1420,12 +1298,7 @@ def incremental_substring_dedup(
     )
     hist = read_window_hashes(spark, hash_sink)
     if hist is not None:
-        h = hist.withColumn("_hist", F.lit(True))
-        h = (
-            h.withColumnRenamed("df", "df_hist")
-            if "df" in h.columns
-            else h.withColumn("df_hist", F.lit(None).cast("long"))
-        )
+        h = hist.withColumnRenamed("df", "df_hist").withColumn("_hist", F.lit(True))
         stats = stats.join(h, "wh", "left")
     else:
         stats = stats.withColumn("_hist", F.lit(None).cast("boolean")).withColumn(
@@ -1451,13 +1324,8 @@ def incremental_substring_dedup(
         # with their in-increment df — no second tokenize/hash pass over
         # the text and no anti-join re-scan of the stored table
         new = stats.filter(~in_hist).select("wh", "df")
-        commit_window_hash_frame(
-            spark,
-            new,
-            hash_sink,
-            run_id or ("sub-" + uuid.uuid4().hex[:10]),
-            history=hist,
-        )
+        run_id = run_id or ("sub-" + uuid.uuid4().hex[:10])
+        _append_state(spark, new, hash_sink, run_id, "wh", spec)
     return spans
 
 

@@ -36,7 +36,6 @@ Scale design notes (the 100 TB story, graded explicitly):
 
 from __future__ import annotations
 
-import shutil
 import sys
 import time
 import uuid
@@ -474,17 +473,9 @@ def run_extract(
         )
     sink_io.check_layout(sink)
     run_id = run_id or uuid.uuid4().hex[:12]
-    # bucket spec: first write pins it; later writes adopt it when
-    # n_buckets is omitted and fail fast on a conflict — a resume under a
-    # different shuffle-partition conf must never silently re-bucket
-    # (bucket REPLACEMENT with a different spec strands stale rows)
-    spec = sink_io.read_bucket_spec(sink)
-    if n_buckets is None:
-        if spec is not None:
-            n_buckets = int(spec["n_buckets"])
-        else:
-            n_buckets = 2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sink_io.ensure_bucket_spec(sink, n_buckets)
+    n_buckets = sink_io.ensure_bucket_spec(
+        sink, n_buckets, fresh=2 * int(spark.conf.get("spark.sql.shuffle.partitions"))
+    )["n_buckets"]
     committed = sink_io.run_id_committed(spark, sink, run_id)
 
     def noop() -> dict:
@@ -555,18 +546,12 @@ def run_extract(
         F.length(F.coalesce("extracted_text", F.lit(""))).cast("long"),
     )
     sink_io.write_run_data(out, sink, run_id)
-
+    snap_id = sink_io.commit_snapshot(spark, sink, run_id)
+    if snap_id is None:  # empty input: nothing published, no lineage row
+        return noop()
     # row and error counts come from the written files' footers: exact
     # whatever the accumulator saw (lineage_rows)
     facts = sink_io.bucket_footers(sink, run_id)
-    if not facts:
-        # fully-resumed (or empty-input) run: clean no-op — no lineage row,
-        # no snapshot commit, and the empty run dir (at most a _SUCCESS
-        # marker) is removed so it can't shadow a later run_id collision
-        shutil.rmtree(sink_io.run_data_path(sink, run_id), ignore_errors=True)
-        return noop()
-
-    snap_id = sink_io.commit_snapshot(spark, sink, run_id)
     lineage = lineage_rows(run_id, facts, acc.value)
     sink_io.append_lineage(lineage, sink)
     errors = [r[3] for r in lineage]

@@ -8,6 +8,7 @@ Iceberg-shaped layout we manage explicitly, one layout for every writer:
                                                       commit: bucket -> run(s)
     <sink>/_lineage/part-<uuid>.parquet               one file per run: a row
                                                       per (run_id, part_key)
+    <sink>/_bucket_spec.json                          the table spec
 
 A run writes its own directory, then a manifest commit publishes it: an
 'overwrite' commit maps the buckets the run touched to the run, replacing
@@ -17,6 +18,13 @@ directory (artexin/pack.py:113-116), lifted to bucket granularity; an
 ``_lineage`` doubles as the checkpoint manifest (the reference's
 per-package ``info.json``, artexin/pack.py:120-122): a bucket whose
 latest row is ``status='ok'`` is done and is skipped on resume.
+
+Table spec: ``_bucket_spec.json`` pins the bucketing (count, columns,
+function) and, on a dedup state table, the hash parameters its keys
+depend on (``k``/``n``, ``window``/``hash_mode``). ``ensure_bucket_spec``
+is the one routine that pins it (first writer wins), validates it, and
+adopts the pinned bucket count for a caller that names none — a file
+read, never a Spark job.
 
 Metadata plane: ``_lineage`` and ``_snapshots`` hold at most n_buckets rows
 per run or snapshot, so the driver reads them with pyarrow (``_read_rows``)
@@ -486,10 +494,12 @@ def commit_snapshot(
     run_id: str,
     operation: str = "overwrite",
     stats_cols: list[str] | None = None,
-) -> int:
+) -> int | None:
     """Publish ``run_id``'s buckets as a new snapshot: its buckets replace
     the parent snapshot's mapping for the same keys; untouched buckets
     carry forward. Returns the new snapshot id (parent+1, starting at 1).
+    A run with no bucket (an empty write) publishes nothing: its run
+    directory is removed and the call returns None.
 
     ``operation`` is recorded on the manifest rows (Iceberg's snapshot
     summary operation): 'overwrite' (default) REPLACES the buckets this
@@ -512,7 +522,10 @@ def commit_snapshot(
     TYPE differs from the live snapshot's fails here (fail fast, one
     writer) instead of at some future read; added and missing
     columns remain legal (add-column evolution, NULL-filled)."""
-    run_schema = _run_schema(sink, run_id) or StructType()
+    if not _run_buckets(run_data_path(sink, run_id)):
+        shutil.rmtree(run_data_path(sink, run_id), ignore_errors=True)
+        return None
+    run_schema = _run_schema(sink, run_id)
     _check_schema_compatible(sink, run_schema, f"run {run_id}")
     stats_cols = stats_cols or []
     unknown = sorted(set(stats_cols) - set(run_schema.names))
@@ -705,7 +718,7 @@ def merge_upsert(
     sink: str,
     updates: DataFrame,
     key_cols: list[str],
-) -> int:
+) -> int | None:
     """Row-level MERGE INTO the live snapshot (Iceberg MERGE analogue,
     copy-on-write): rows in ``updates`` replace live rows with equal
     ``key_cols``; unmatched keys insert. ``updates`` must carry
@@ -721,7 +734,8 @@ def merge_upsert(
     O(touched buckets + updates), not a table rewrite; the anti-join
     broadcasts whenever updates are small.
     New columns in ``updates`` widen the table (add-column evolution);
-    old rows read back NULL in them."""
+    old rows read back NULL in them. Empty ``updates`` publish nothing
+    (None)."""
     live_rows = _snapshot_rows(sink)
     # fail with the write-point error BEFORE the union would raise a raw
     # Spark type error mid-merge
@@ -847,23 +861,43 @@ def read_bucket_spec(sink: str) -> dict | None:
 
 def ensure_bucket_spec(
     sink: str,
-    n_buckets: int,
+    n_buckets: int | None,
     bucket_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
+    *,
+    fresh: int | None = None,
+    params: dict | None = None,
+    publish: bool = True,
 ) -> dict:
-    """Pin the sink's bucketing (Iceberg's partition spec): created on
-    first write, validated on every later one. Without this a resume
-    under a different ``spark.sql.shuffle.partitions`` silently derives a
-    different default bucket count — rows re-bucket, partial-run bucket
-    REPLACEMENT then leaves stale rows in buckets the new run didn't
-    claim. Conflicts fail fast at the writer; spec evolution = rewrite
-    the table (exactly Iceberg's rule for changing bucket counts)."""
+    """Pin the sink's one table spec (Iceberg's partition spec): its
+    bucketing plus ``params``, the hash parameters its keys depend on
+    (``k``/``n`` of a signature table, ``window``/``hash_mode`` of a
+    window-hash table). Created by the first writer, validated on every
+    later call; returns the spec.
+
+    ``n_buckets=None`` adopts the pinned count, or ``fresh`` on a sink
+    with no spec yet. Without the pin a resume under a different
+    ``spark.sql.shuffle.partitions`` silently derives a different bucket
+    count (rows re-bucket, and bucket REPLACEMENT strands stale rows),
+    and a state table read under other hash parameters never matches
+    (dedup silently becomes a no-op). Any field the caller names that
+    differs from the pinned spec, or is missing from it (a spec written
+    before that field was recorded), fails fast; spec evolution is a
+    table rewrite, exactly Iceberg's rule for changing bucket counts.
+    ``publish=False`` (read-only calls) validates an existing spec and
+    never pins one, so a probe of an empty sink cannot block the real
+    first commit."""
+    want = {"bucket_cols": list(bucket_cols), **(params or {})}
+    if n_buckets is not None:
+        want["n_buckets"] = int(n_buckets)
     spec = read_bucket_spec(sink)
     if spec is None:
         spec = {
-            "n_buckets": int(n_buckets),
-            "bucket_cols": list(bucket_cols),
+            "n_buckets": int(fresh if n_buckets is None else n_buckets),
             "bucket_fn": "pmod(xxhash64(bucket_cols), n_buckets)",
+            **want,
         }
+        if not publish:
+            return spec
         os.makedirs(sink, exist_ok=True)
         # atomic publish: write the spec to a private temp file, then
         # os.link it into place. link(2) fails with EEXIST if another
@@ -879,19 +913,16 @@ def ensure_bucket_spec(
         except FileExistsError:
             spec = read_bucket_spec(sink)  # lost the race: validate below
         else:
-            os.unlink(tmp)
             return spec
         finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-    if int(spec["n_buckets"]) != int(n_buckets) or list(
-        spec.get("bucket_cols", [])
-    ) != list(bucket_cols):
+            os.unlink(tmp)
+    if any(spec.get(key) != value for key, value in want.items()):
+        pinned = {key: spec.get(key) for key in want}
         raise ValueError(
-            f"sink {sink} is bucketed as {spec['n_buckets']} × "
-            f"{spec.get('bucket_cols')}; this run asked for {n_buckets} × "
-            f"{list(bucket_cols)} — pass the recorded spec (or omit "
-            "n_buckets to adopt it); re-bucketing requires a table rewrite"
+            f"sink {sink} is bucketed as {spec['n_buckets']} and pinned as "
+            f"{pinned}; this run asked for {want} — pass the pinned values "
+            "(omit n_buckets to adopt the pinned count); spec evolution "
+            "requires a table rewrite"
         )
     return spec
 

@@ -41,7 +41,8 @@ def incremental_extract(
 ):
     """Drain all unprocessed input files through the extraction stage
     into ``sink``; returns the finished StreamingQuery. Each micro-batch
-    is one append commit (storage.commit_snapshot(operation='append')), so
+    is one append commit (storage.commit_snapshot(operation='append'); an
+    empty micro-batch publishes nothing), so
     streamed rows get the same isolation/time-travel/incremental-scan
     semantics as batch writes — Iceberg's streaming-append pattern.
     Re-invoking after new files land processes only the delta.
@@ -54,14 +55,7 @@ def incremental_extract(
     duplicated rows.
     Compaction later normalizes multi-run buckets back to one run each."""
     sink_io.check_layout(sink)
-    spec = sink_io.read_bucket_spec(sink)
-    if n_buckets is None:
-        # adopt the pinned spec only when the caller did not choose; an
-        # EXPLICIT conflicting n_buckets must fail fast in ensure_bucket_spec
-        # below, exactly like the batch path (run_extract) — silently
-        # overriding it would ignore a CLI --buckets with zero signal
-        n_buckets = int(spec["n_buckets"]) if spec is not None else 64
-    sink_io.ensure_bucket_spec(sink, n_buckets)
+    n_buckets = sink_io.ensure_bucket_spec(sink, n_buckets, fresh=64)["n_buckets"]
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 64)

@@ -1275,16 +1275,45 @@ def _ivocab(i, n_words=24):
     return " ".join(f"w{i}x{j} term{(i * 7 + j) % 9973}" for j in range(n_words))
 
 
+def _raises_before_any_job(spark, call):
+    """``call`` fails the table-spec check, and runs no Spark job first."""
+    from conftest import spark_jobs
+
+    def check():
+        with pytest.raises(ValueError, match="spec evolution"):
+            call()
+
+    assert spark_jobs(spark, check)[1] == 0
+
+
+def _drop_from_spec(sink, *keys):
+    """Rewrite ``sink``'s table spec without ``keys``: the spec of a table
+    written before those parameters were recorded."""
+    import json
+
+    from artexin_spark import storage as sink_io
+
+    spec = sink_io.read_bucket_spec(sink)
+    with open(sink_io.bucket_spec_path(sink), "w") as fh:
+        json.dump({k: v for k, v in spec.items() if k not in keys}, fh)
+
+
 def test_incremental_dedup_across_commits(spark, tmp_path):
     """Three-run chain: base commit → increment 1 (dups of base dropped,
     fresh kept, survivors committed) → increment 2 (dups of increment 1's
     SURVIVORS also dropped — proves the committed-state chain works, not
-    just a single snapshot)."""
+    just a single snapshot). The increments adopt the base's 8-bucket
+    spec; a k or n other than the pinned one, or a spec that lacks them,
+    raises before any job, and a read-only dedup builds in one job."""
+    from conftest import spark_jobs
+
+    from artexin_spark import storage as sink_io
+
     sink = str(tmp_path / "sigs")
     base = spark.createDataFrame(
         [(i, _ivocab(i)) for i in range(40)], "doc_id long, text string"
     )
-    dedup.commit_signatures(spark, base, sink, run_id="base")
+    dedup.commit_signatures(spark, base, sink, run_id="base", n_buckets=8)
 
     inc1 = spark.createDataFrame(
         # 10 fresh + 5 near-copies of base docs 0..4 + 1 near-copy of a
@@ -1312,11 +1341,34 @@ def test_incremental_dedup_across_commits(spark, tmp_path):
     )
     assert {r[0] for r in surv2.select("doc_id").collect()} == {500}
 
-    # committed state: three snapshots, signatures for base+surv1+surv2
-    from artexin_spark import storage as sink_io
-
+    # committed state: three snapshots, signatures for base+surv1+surv2,
+    # all under the pinned 8 buckets
     assert sink_io.list_snapshots(spark, sink).count() == 3
-    assert sink_io.read_snapshot(spark, sink).count() == 40 + 10 + 1
+    live = sink_io.read_snapshot(spark, sink)
+    assert live.count() == 40 + 10 + 1
+    assert live.agg(F.max("part_key")).first()[0] < 8
+    assert sink_io.read_bucket_spec(sink)["n_buckets"] == 8
+
+    # parameter drift: a wrong n used to keep the near-duplicate silently
+    for drift in ({"k": 16}, {"n": 5}):
+        _raises_before_any_job(
+            spark,
+            lambda: dedup.incremental_minhash_dedup(
+                spark, inc2, sink, threshold=0.4, commit=False, **drift
+            ),
+        )
+    _, jobs = spark_jobs(
+        spark,
+        lambda: dedup.incremental_minhash_dedup(
+            spark, inc2, sink, threshold=0.4, commit=False
+        ),
+    )
+    assert jobs == 1  # the increment's minhash shuffle; no parameter probe
+    _drop_from_spec(sink, "n")
+    _raises_before_any_job(
+        spark,
+        lambda: dedup.incremental_minhash_dedup(spark, inc2, sink, commit=False),
+    )
 
 
 def test_incremental_dedup_never_rereads_history_text(spark, tmp_path):
@@ -2313,13 +2365,26 @@ def test_incremental_substring_dedup_across_commits(spark, tmp_path):
         spark, b3, sink, window=20, run_id="b3", commit=False
     )
     assert spans3.count() == 1
-    # spec drift fails fast
-    with _pytest.raises(ValueError, match="spec evolution"):
-        dedup.incremental_substring_dedup(spark, b3, sink, window=50)
+    # spec drift fails fast, before any job, read-only calls included
+    for drift in ({"window": 50}, {"hash_mode": "md5", "commit": False}):
+        _raises_before_any_job(
+            spark,
+            lambda: dedup.incremental_substring_dedup(
+                spark, b3, sink, **{"window": 20, **drift}
+            ),
+        )
     with _pytest.raises(ValueError, match="spec evolution"):
         dedup.commit_window_hashes(
             spark, b3, sink, run_id="x", window=20, hash_mode="md5"
         )
+    # a spec written before the hash parameters were recorded fails loudly
+    _drop_from_spec(sink, "window", "hash_mode")
+    _raises_before_any_job(
+        spark,
+        lambda: dedup.incremental_substring_dedup(
+            spark, b3, sink, window=20, commit=False
+        ),
+    )
 
 
 def test_incremental_substring_never_rereads_history_text(spark, tmp_path):
@@ -2365,9 +2430,7 @@ def test_incremental_substring_edge_contracts(spark, tmp_path):
     dedup.incremental_substring_dedup(
         spark, df, probe_sink, window=20, commit=False
     ).count()
-    import os
-
-    assert not os.path.exists(dedup._substr_spec_path(probe_sink))
+    assert sink_io.read_bucket_spec(probe_sink) is None
     dedup.commit_window_hashes(spark, df, probe_sink, run_id="r1", window=10)
 
     # (c) non-default bucket count adopted by the incremental commit
@@ -2432,31 +2495,6 @@ def test_incremental_substring_max_df_escape_matches_batch(spark, tmp_path):
         b1.unionByName(b2), window=10, max_df=6
     ).toPandas()
     assert set(batch["doc_id"]) == {110}  # batch agrees: only the real dup
-
-
-def test_incremental_substring_pre_df_history_table(spark, tmp_path):
-    """A history table committed WITHOUT df (pre-r04 schema) keeps
-    working: history hits flag, the escape degrades to the increment-only
-    lower bound, and new appends stay df-less so one sink never mixes
-    parquet schemas."""
-    sink = str(tmp_path / "whold")
-    body = " ".join(f"ow{j}" for j in range(25))
-    old = spark.createDataFrame([("h", body)], "doc_id string, text string")
-    occ = dedup.window_hash_occurrences(old, window=10)
-    dedup._check_substr_spec(sink, 10, "rolling", publish=True)
-    dedup.commit_window_hash_frame(
-        spark, occ.select("wh").distinct(), sink, "legacy"
-    )
-    hist = dedup.read_window_hashes(spark, sink)
-    assert hist.columns == ["wh"]  # pre-df table reads df-less
-    inc = spark.createDataFrame(
-        [("n1", body + " fresh tail here")], "doc_id string, text string"
-    )
-    spans = dedup.incremental_substring_dedup(
-        spark, inc, sink, id_col="doc_id", window=10, run_id="n1"
-    ).toPandas()
-    assert list(spans["doc_id"]) == ["n1"] and spans.iloc[0].start_tok == 0
-    assert dedup.read_window_hashes(spark, sink).columns == ["wh"]
 
 
 def test_incremental_substring_checkpoint_single_hash(spark, tmp_path):

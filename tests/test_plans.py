@@ -9,6 +9,7 @@ regression here is a scale bug even when row counts still match.
 """
 
 import pytest
+from conftest import spark_jobs as _spark_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -218,22 +219,6 @@ def test_curate_plan_shape(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
-
-
-def _spark_jobs(spark, fn):
-    """Run ``fn``; return its result and the number of Spark jobs it ran."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_curate_gate_runs_once_above_the_spread(spark):

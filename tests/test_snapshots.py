@@ -9,9 +9,9 @@ so a crashed run can never corrupt the readable table — the property a
 import glob
 import json
 import os
-import uuid
 
 import pytest
+from conftest import spark_jobs as _spark_jobs
 from pyspark.sql import functions as F
 
 from artexin_spark import storage as sink_io
@@ -742,24 +742,30 @@ def test_bucket_spec_publish_is_atomic(tmp_path):
     assert not [f for f in os.listdir(sink) if ".tmp." in f]  # no litter
 
 
-def _spark_jobs(spark, fn):
-    """Run ``fn``; return its result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _bucketed(spark, n=40, buckets=4, tag="x"):
     return spark.range(n).selectExpr(
         "id", f"cast(id % {buckets} as int) part_key", f"'{tag}' tag"
     )
+
+
+@pytest.mark.parametrize("history", [False, True])
+def test_empty_run_publishes_nothing(spark, tmp_path, history):
+    """A run with no bucket (an empty write, micro-batch or merge) commits
+    nothing: no snapshot id is handed out, the live snapshot is unchanged
+    and the empty run directory is removed."""
+    sink = str(tmp_path / "sink")
+    if history:
+        sink_io.write_run_data(_bucketed(spark), sink, "r1")
+        sink_io.commit_snapshot(spark, sink, "r1")
+    empty = _bucketed(spark).limit(0)
+    for rid, op in (("e1", "overwrite"), ("e2", "append")):
+        sink_io.write_run_data(empty, sink, rid)
+        assert sink_io.commit_snapshot(spark, sink, rid, operation=op) is None
+        assert not os.path.exists(sink_io.run_data_path(sink, rid))
+    if history:
+        assert sink_io.merge_upsert(spark, sink, empty, ["id"]) is None
+    assert sink_io.latest_snapshot_id(spark, sink) == (1 if history else None)
+    assert sorted(os.listdir(sink_io.data_path(sink))) == (["run=r1"] if history else [])
 
 
 def test_metadata_calls_run_no_spark_job(spark, tmp_path):
